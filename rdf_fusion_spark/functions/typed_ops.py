@@ -116,7 +116,7 @@ def tag(c: Column, sk) -> Column:
 
 def is_vc(c: Column) -> bool:
     """True when the column carries the value-canonical marker (see
-    plans/join.py Solution.vcanon): its non-NULL terms' lexical/datatype
+    plans/join.py VarInfo.vcanon): its non-NULL terms' lexical/datatype
     are pure functions of the typed value fields. Reads __dict__
     directly for the same reason skind() does."""
     try:
@@ -380,7 +380,10 @@ def None_x() -> Column:
 # the single hottest per-row cost); the typed fields carry the value. Any
 # term that escapes an expression (BIND result, aggregate passthrough) is
 # re-materialized by materialize_lexical(), and lexical_of() serves STR()/
-# GROUP_CONCAT over possibly-lazy terms. Scan/constant terms are never lazy.
+# GROUP_CONCAT over possibly-lazy terms. Constant terms are never lazy, but
+# virtual-store scans build double/decimal/dateTime columns lazily
+# (sources/relational.object_term), so a raw scan column can reach a result
+# with v=NULL: driver-side readers rebuild it (terms.rebuild_lexical).
 # ---------------------------------------------------------------------------
 
 _LAZY_LEX: list[bool] = []

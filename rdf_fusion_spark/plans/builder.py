@@ -167,20 +167,8 @@ class PlanBuilder:
 
     def union(self, other: "PlanBuilder") -> "PlanBuilder":
         """Bag-semantics union, disjoint columns NULL-padded."""
-        from .join import merge_kinds
-        from .translator import NULL_TERM, Solution
-        l, r = self._require(), other._require()
-        ldf, rdf = l.df, r.df
-        for v in sorted(r.maybe - l.maybe):
-            ldf = ldf.withColumn(v, NULL_TERM())
-        for v in sorted(l.maybe - r.maybe):
-            rdf = rdf.withColumn(v, NULL_TERM())
-        cols = sorted(l.maybe | r.maybe)
-        df = (ldf.select(*cols).unionByName(rdf.select(*cols))
-              if cols else ldf.unionByName(rdf))
-        return self._with(Solution(df=df, bound=l.bound & r.bound,
-                                   maybe=l.maybe | r.maybe,
-                                   kinds=merge_kinds(l, r)))
+        from .join import union_solutions
+        return self._with(union_solutions(self._require(), other._require()))
 
     def minus(self, other: "PlanBuilder") -> "PlanBuilder":
         from .join import minus_solutions
@@ -188,16 +176,10 @@ class PlanBuilder:
                                           other._require()))
 
     def project(self, *variables) -> "PlanBuilder":
-        sol = self._require()
+        from .join import project_solution
         names = [v.name if isinstance(v, Variable) else str(v).lstrip("?")
                  for v in variables]
-        from .translator import NULL_TERM, Solution
-        cols = [(sol.df[n].alias(n) if n in sol.maybe
-                 else NULL_TERM().alias(n)) for n in names]
-        return self._with(Solution(
-            df=sol.df.select(*cols), bound=sol.bound & set(names),
-            maybe=set(names), pending_order=sol.pending_order,
-            kinds={k: v for k, v in sol.kinds.items() if k in names}))
+        return self._with(project_solution(self._require(), names))
 
     def distinct(self) -> "PlanBuilder":
         from .translator import _dedupe_normalized

@@ -74,119 +74,170 @@ def _record_breach(op: str, left: "Solution", right: "Solution",
             if v not in left.bound or v not in right.bound),
     })
 
-# Term-dictionary hypothesis flag (reference credits u32 ObjectIds with
-# "quadrupled" join-heavy queries, lib/encoding/src/object_id/encoding.rs:
-# 42-46): join IRI keys on xxhash64 longs with exact string equality as the
-# residual, instead of directly on the strings. Measured at sf0.1 (see
-# BASELINE.md round-3 note): no win — Tungsten already hashes string join
-# keys, and the shuffled payload (the full term struct) is unchanged, so
-# the extra column only adds work. Kept behind the env flag for re-testing
-# on other data shapes.
-import os as _os
-_HASH_JOIN_KEYS = _os.environ.get("RFS_HASH_JOIN_KEYS", "0") == "1"
+@dataclass(frozen=True)
+class VarInfo:
+    """What a solution statically knows about one of its variables.
+
+    Every field defaults to the safe direction: a dropped fact only misses
+    an optimization, so an operator that cannot prove a fact for its
+    output leaves it at the default (the merge rules below).
+
+    `bound` — guaranteed non-NULL in every row
+    `kind`  — static kind where known (typed_ops.skind codes): a promise
+              that every non-NULL value has that kind, letting expression
+              compilation emit single-branch code
+    """
+    bound: bool = False
+    kind: Optional[int] = None
+    # PROVEN value-canonical: every non-NULL term is a numeric whose
+    # lexical (`v`) is NULL-or-canonical for its exact value and whose
+    # datatype is the kind's canonical type (xsd:integer, not xsd:int).
+    # Producers: virtual scans (lazy lexicals), numeric term
+    # constructors, canonically-written constants. Consumed by the
+    # MIN/MAX hash-aggregate decomposition (r12): for such a column the
+    # winning TERM is a pure function of the winning VALUE, so min/max of
+    # the primitive field + canonical rebuild ≡ min_by of the term struct.
+    vcanon: bool = False
+    # The backing column is an EXPENSIVE computed expression (aggregate
+    # outputs: promotion ladder + materialize_lexical structs). A later
+    # FILTER referencing it must not be alias-substituted by Catalyst's
+    # PushDownPredicates — transitive inlining through the stacked
+    # post-agg Projects grows the condition multiplicatively (~12x per
+    # level) and hangs the optimizer. See _apply_plain_filters.
+    expensive: bool = False
+    # Native join key (r12, guide §2.3 narrower types): (template, native
+    # column name). The var's term is an entity IRI minted as
+    # `x:<code>:str(native_long)` from `template`'s id space, and the df
+    # carries the LONG in the named `__nk_<var>` column. str(long) is
+    # injective, so within one template long-equality ⟺ IRI-equality — an
+    # equi join on two vars with the SAME template may key on the longs,
+    # skipping the per-row string build + string hashing (measured ~20% of
+    # the whole q3 pipeline). Producers: virtual star scans (subject +
+    # FK-object vars). Consumers MUST check the column still exists in df
+    # (filters and BINDs re-select the variable columns only).
+    nkey: Optional[tuple] = None
+
+
+BOUND = VarInfo(bound=True)
+UNBOUND = VarInfo()
 
 
 @dataclass
 class Solution:
-    """A solution relation: DataFrame + bound-variable bookkeeping.
+    """A solution relation: DataFrame + one VarInfo per variable.
 
-    `maybe`  — variables present in the schema (possibly NULL = unbound)
-    `bound`  — variables guaranteed non-NULL in every row
-    `kinds`  — static kind per variable where known (typed_ops.skind codes):
-               a promise that every non-NULL value has that kind, letting
-               expression compilation emit single-branch code
+    The keys of `vars` are the variables present in the schema (possibly
+    NULL = unbound); `maybe`, `bound` and `kinds` are read-only views.
     """
     df: DataFrame
-    bound: set = field(default_factory=set)
-    maybe: set = field(default_factory=set)
+    vars: dict = field(default_factory=dict)  # var name → VarInfo
     pending_order: list = field(default_factory=list)  # OrderCondition list
-    kinds: dict = field(default_factory=dict)
-    # Variables PROVEN value-canonical: every non-NULL term is a numeric
-    # whose lexical (`v`) is NULL-or-canonical for its exact value and
-    # whose datatype is the kind's canonical type (xsd:integer, not
-    # xsd:int). Producers: virtual scans (lazy lexicals), numeric term
-    # constructors, canonically-written constants. Consumed by the
-    # MIN/MAX hash-aggregate decomposition (r12): for such a column the
-    # winning TERM is a pure function of the winning VALUE, so
-    # min/max of the primitive field + canonical rebuild ≡ min_by of
-    # the term struct. Default-empty is the safe direction — a dropped
-    # entry only misses the optimization.
-    vcanon: set = field(default_factory=set)
-    # Variables whose backing column is an EXPENSIVE computed expression
-    # (aggregate outputs: promotion ladder + materialize_lexical structs).
-    # A later FILTER referencing one must not be alias-substituted by
-    # Catalyst's PushDownPredicates — transitive inlining through the
-    # stacked post-agg Projects grows the condition multiplicatively
-    # (~12x per level) and hangs the optimizer. See _apply_plain_filters.
-    expensive: set = field(default_factory=set)
-    # Native join keys (r12, guide §2.3 narrower types): var →
-    # (template, native column name). The var's term is an entity IRI
-    # minted as `x:<code>:str(native_long)` from `template`'s id space,
-    # and the df carries the LONG in the named `__nk_<var>` column.
-    # str(long) is injective, so within one template long-equality ⟺
-    # IRI-equality — an equi join on two vars with the SAME template may
-    # key on the longs, skipping the per-row string build + string
-    # hashing (measured ~20% of the whole q3 pipeline). Producers:
-    # virtual star scans (subject + FK-object vars). Consumers MUST
-    # check the column still exists in df (projections drop it — a
-    # stale entry only misses the optimization; default-empty is the
-    # safe direction, like vcanon).
-    nkey: dict = field(default_factory=dict)
+
+    @property
+    def maybe(self) -> frozenset:
+        return frozenset(self.vars)
+
+    @property
+    def bound(self) -> frozenset:
+        return frozenset(v for v, i in self.vars.items() if i.bound)
+
+    @property
+    def kinds(self) -> dict:
+        return {v: i.kind for v, i in self.vars.items() if i.kind is not None}
 
     def with_df(self, df: DataFrame) -> "Solution":
         return replace(self, df=df)
 
 
-def merge_kinds(left: Solution, right: Solution) -> dict:
-    """Kinds surviving a join/union: a var present on both sides keeps its
-    kind only when BOTH sides know it and agree; a var present on one side
-    keeps that side's kind (the other side contributes only NULLs)."""
+# ---------------------------------------------------------------------------
+# VarInfo merge rules, one per operator shape
+# ---------------------------------------------------------------------------
+
+def _merge_vars(left: Solution, right: Solution, bound: Callable,
+                nkey_cols=frozenset()) -> dict:
+    """Per-variable merge for a binary operator; `bound(l, r)` decides
+    boundness from the two sides' VarInfo (None = the side lacks it).
+    Shared policy for the other fields:
+      kind, vcanon — a var on both sides keeps the fact only when BOTH
+        sides prove it (the same kind); a var on one side keeps that
+        side's fact (the other side contributes only NULLs, for which
+        every promise holds vacuously);
+      expensive — either side's marker survives;
+      nkey — kept only when its column is in `nkey_cols`. For a shared
+        var the left entry wins (the name-join keeps the left/merged
+        copy); a right entry for a var the left doesn't track is valid
+        too — the join matched on term equality, so the right long still
+        corresponds to the var's term on every (matched) row."""
     out = {}
-    for v, k in left.kinds.items():
-        if v not in right.maybe or right.kinds.get(v) == k:
-            out[v] = k
-    for v, k in right.kinds.items():
-        if v not in left.maybe:
-            out[v] = k
+    for v in [*left.vars, *(v for v in right.vars if v not in left.vars)]:
+        l, r = left.vars.get(v), right.vars.get(v)
+        if l is not None and r is not None:
+            kind = l.kind if l.kind == r.kind else None
+            vcanon = l.vcanon and r.vcanon
+        else:
+            kind, vcanon = (l or r).kind, (l or r).vcanon
+        sides = [i for i in (l, r) if i is not None]
+        out[v] = VarInfo(
+            bound=bound(l, r), kind=kind, vcanon=vcanon,
+            expensive=any(i.expensive for i in sides),
+            nkey=next((i.nkey for i in sides
+                       if i.nkey and i.nkey[1] in nkey_cols), None))
     return out
 
 
-def merge_expensive(left: Solution, right: Solution) -> set:
-    """Expensive-var markers surviving a join/union: union of both sides."""
-    return left.expensive | right.expensive
+def inner_join_vars(left: Solution, right: Solution,
+                    nkey_cols=frozenset()) -> dict:
+    """Inner join: bound when either side binds it (a joined row carries
+    both sides' bindings)."""
+    return _merge_vars(left, right,
+                       lambda l, r: bool(l and l.bound or r and r.bound),
+                       nkey_cols)
 
 
-def merge_vcanon(left: Solution, right: Solution) -> set:
-    """Value-canonical markers surviving a join/union: a var present on
-    both sides stays canonical only when BOTH sides prove it; a var
-    present on one side keeps that side's proof (the other contributes
-    only NULLs, which are vacuously canonical)."""
-    out = set()
-    for v in left.vcanon:
-        if v not in right.maybe or v in right.vcanon:
-            out.add(v)
-    for v in right.vcanon:
-        if v not in left.maybe:
-            out.add(v)
-    return out
+def left_join_vars(left: Solution, right: Solution,
+                   nkey_cols=frozenset()) -> dict:
+    """Left join: bound only when the left side binds it (unmatched left
+    rows carry NULL for every right-only var)."""
+    return _merge_vars(left, right, lambda l, r: bool(l and l.bound),
+                       nkey_cols)
 
 
-def _merge_nkey(left: Solution, right: Solution, df: DataFrame) -> dict:
-    """Native-key entries surviving a join: an entry is kept only when
-    its backing column survived into the joined frame. For a shared var
-    the left entry wins (the name-join keeps the left/merged copy); a
-    right entry for a var the left doesn't track is valid too — the join
-    matched on term equality, so the right long still corresponds to the
-    var's term on every (matched) row."""
-    cols = set(df.columns)
-    out = {}
-    for v, e in right.nkey.items():
-        if e[1] in cols:
-            out[v] = e
-    for v, e in left.nkey.items():
-        if e[1] in cols:
-            out[v] = e
-    return out
+def union_vars(left: Solution, right: Solution) -> dict:
+    """Union: bound only when both branches bind it; nkey dropped (the
+    union selects the variable columns only)."""
+    return _merge_vars(left, right,
+                       lambda l, r: bool(l and r and l.bound and r.bound))
+
+
+def project_vars(sol: Solution, names: list) -> dict:
+    """Projection: every fact of a kept var survives except nkey (its
+    column is not selected); a name the solution lacks is unbound."""
+    return {n: replace(sol.vars[n], nkey=None) if n in sol.vars else UNBOUND
+            for n in names}
+
+
+def union_solutions(left: Solution, right: Solution) -> Solution:
+    """Bag union; each side's missing variables are padded with NULL."""
+    from ..functions.builtins import NULL_TERM
+    ldf, rdf = left.df, right.df
+    for v in sorted(right.maybe - left.maybe):
+        ldf = ldf.withColumn(v, NULL_TERM())
+    for v in sorted(left.maybe - right.maybe):
+        rdf = rdf.withColumn(v, NULL_TERM())
+    cols = sorted(left.maybe | right.maybe)
+    df = (ldf.select(*cols).unionByName(rdf.select(*cols))
+          if cols else ldf.unionByName(rdf))
+    return Solution(df, union_vars(left, right))
+
+
+def project_solution(sol: Solution, names: list, extra=()) -> Solution:
+    """Project onto `names` in order (a name the solution lacks becomes a
+    NULL column); `extra` columns ride along untracked."""
+    from ..functions.builtins import NULL_TERM
+    cols = [sol.df[n].alias(n) if n in sol.vars else NULL_TERM().alias(n)
+            for n in names]
+    return Solution(sol.df.select(*cols, *extra), project_vars(sol, names),
+                    sol.pending_order)
 
 
 BoolCompiler = Callable[[object, Callable[[str], Column]], Column]
@@ -314,15 +365,14 @@ def _split_union_join(
             parts.append(pad_left(rest))
 
     df = reduce(lambda a, b: a.unionByName(b), parts)
-    bound = set(left.bound)
-    if how == "inner":
-        bound |= right.bound
     df = df.select(*[F.col(v) for v in out_vars])
-    return Solution(df=df, bound=bound, maybe=left.maybe | right.maybe,
-                    pending_order=left.pending_order,
-                    kinds=merge_kinds(left, right),
-                    vcanon=merge_vcanon(left, right),
-                    expensive=merge_expensive(left, right))
+    return _joined(left, right, how, df)
+
+
+def _joined(left: Solution, right: Solution, how: str, df: DataFrame,
+            nkey_cols=frozenset()) -> Solution:
+    rule = inner_join_vars if how == "inner" else left_join_vars
+    return Solution(df, rule(left, right, nkey_cols), left.pending_order)
 
 
 def join_solutions(
@@ -343,7 +393,7 @@ def join_solutions(
         def _native_key(v: str) -> Optional[str]:
             # native LONG key usable when BOTH sides mint the var's IRI
             # from the SAME template and still carry the long column
-            lk, rk = left.nkey.get(v), right.nkey.get(v)
+            lk, rk = left.vars[v].nkey, right.vars[v].nkey
             if lk and rk and lk[0] == rk[0] \
                     and lk[1] == rk[1] \
                     and lk[1] in left.df.columns \
@@ -352,8 +402,8 @@ def join_solutions(
             return None
 
         nat = {v: nk for v in shared if (nk := _native_key(v))}
-        if all(v in nat or (left.kinds.get(v) == right.kinds.get(v)
-                            and left.kinds.get(v) in (SK_IRI, SK_PLAIN))
+        if all(v in nat or (left.vars[v].kind == right.vars[v].kind
+                            and left.vars[v].kind in (SK_IRI, SK_PLAIN))
                for v in shared):
             # Native-long keys where proven (r12: same-template entity
             # IRIs join on the minted long — no per-row string build, an
@@ -375,34 +425,14 @@ def join_solutions(
                       and c not in set(nat.values())]
             if dup_nk:
                 R = R.drop(*dup_nk)
-            key = (lambda c: F.xxhash64(c)) if _HASH_JOIN_KEYS else \
-                (lambda c: c)
             for v in shared:
                 if v in nat:
                     continue
                 jk.append(f"__jk_{v}")
-                L = L.withColumn(f"__jk_{v}", key(F.col(v)["v"]))
-                R = R.withColumn(f"__jk_{v}", key(F.col(v)["v"]))
-            if _HASH_JOIN_KEYS and jk:
-                # hash longs are the equi keys; exact string equality rides
-                # along as the residual, guarding xxhash64 collisions
-                La, Ra = L.alias("l"), R.alias("r")
-                cond = F.lit(True)
-                for v in shared:
-                    if v in nat:
-                        cond = cond & (La[nat[v]] == Ra[nat[v]])
-                        continue
-                    cond = cond & (La[f"__jk_{v}"] == Ra[f"__jk_{v}"]) \
-                        & (La[v]["v"] == Ra[v]["v"])
-                df = La.join(Ra, cond, how)
-                for v in shared:
-                    df = df.drop(Ra[v])
-                    if v in nat:
-                        df = df.drop(Ra[nat[v]])
-                df = df.drop(*jk)
-            else:
-                on = [nat[v] for v in shared if v in nat] + jk
-                df = L.join(R.drop(*shared), on=on, how=how).drop(*jk)
+                L = L.withColumn(f"__jk_{v}", F.col(v)["v"])
+                R = R.withColumn(f"__jk_{v}", F.col(v)["v"])
+            on = [nat[v] for v in shared if v in nat] + jk
+            df = L.join(R.drop(*shared), on=on, how=how).drop(*jk)
         else:
             # drop the right side's native-key columns that collide with
             # a left column name — the generic name-join merges only the
@@ -414,26 +444,14 @@ def join_solutions(
             if dup_nk:
                 R = R.drop(*dup_nk)
             df = L.join(R, on=shared, how=how)
-        return Solution(
-            df=df,
-            bound=set(left.bound) | (set(right.bound) if how == "inner" else set()),
-            maybe=left.maybe | right.maybe,
-            pending_order=left.pending_order,
-            kinds=merge_kinds(left, right),
-            vcanon=merge_vcanon(left, right),
-            expensive=merge_expensive(left, right),
-            nkey=_merge_nkey(left, right, df),
-        )
+        # only this equi path keeps native keys: the split-union and
+        # theta shapes re-project to the variable columns, and the cross
+        # join drops them too (keeping them would re-key later joins)
+        return _joined(left, right, how, df, frozenset(df.columns))
 
     # fast path: disjoint, no filter → cross join
     if not shared and filter_expr is None and how == "inner":
-        df = left.df.crossJoin(right.df)
-        return Solution(df=df, bound=left.bound | right.bound,
-                        maybe=left.maybe | right.maybe,
-                        pending_order=left.pending_order,
-                        kinds=merge_kinds(left, right),
-                        vcanon=merge_vcanon(left, right),
-                        expensive=merge_expensive(left, right))
+        return _joined(left, right, how, left.df.crossJoin(right.df))
 
     # scale path: null-pattern split-union → hash joins instead of BNLJ
     if shared and not all_bound and how in ("inner", "left") \
@@ -482,16 +500,7 @@ def join_solutions(
             out_cols.append(L[v].alias(v))
         else:
             out_cols.append(R[v].alias(v))
-    df = df.select(*out_cols)
-
-    bound = set(left.bound)
-    if how == "inner":
-        bound |= right.bound
-    return Solution(df=df, bound=bound, maybe=left.maybe | right.maybe,
-                    pending_order=left.pending_order,
-                    kinds=merge_kinds(left, right),
-                    vcanon=merge_vcanon(left, right),
-                    expensive=merge_expensive(left, right))
+    return _joined(left, right, how, df.select(*out_cols))
 
 
 def minus_solutions(left: Solution, right: Solution,

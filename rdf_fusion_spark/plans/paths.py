@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..sparql import algebra as A
 from ..store import ActiveGraph
 from ..terms import NamedNode, Variable, term_lit, term_matches
-from .join import Solution
+from .join import BOUND, Solution
 
 SRC, TGT = "__src", "__tgt"
 # ring-doubling bookkeeping column: the pair's MINIMUM path length
@@ -474,7 +474,6 @@ def translate_path_pattern(p: A.PathPattern, ctx) -> Solution:
         del vars_[g[0]]
     out_cols = [F.col(c).alias(v) for v, c in vars_.items()]
     out_cols += [F.col(c) for c in g]
-    names = set(vars_) | set(g)
     if not out_cols:
-        return Solution(df=df.limit(1).select(), bound=set(), maybe=set())
-    return Solution(df=df.select(*out_cols), bound=set(names), maybe=set(names))
+        return Solution(df.limit(1).select())
+    return Solution(df.select(*out_cols), dict.fromkeys([*vars_, *g], BOUND))

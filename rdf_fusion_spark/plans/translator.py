@@ -34,7 +34,9 @@ from ..terms import (
     term_lit,
 )
 from . import join as _join
-from .join import Solution, exists_join, join_solutions, minus_solutions
+from .join import (BOUND, UNBOUND, Solution, VarInfo, exists_join,
+                   join_solutions, minus_solutions, project_solution,
+                   project_vars, union_solutions)
 
 TERM_DDL = B.TERM_DDL
 
@@ -115,11 +117,10 @@ class Ctx:
 
 def _resolver(sol: Solution) -> Callable[[str], Column]:
     def resolve(name: str) -> Column:
-        if name in sol.maybe:
-            c = tv.tag(F.col(name), sol.kinds.get(name))
-            if name in sol.vcanon:
-                c = tv.mark_vc(c)
-            return c
+        info = sol.vars.get(name)
+        if info is not None:
+            c = tv.tag(F.col(name), info.kind)
+            return tv.mark_vc(c) if info.vcanon else c
         # provably unbound: tag the NULL constant so arithmetic /
         # comparison folds statically instead of handing the optimizer
         # an exponentially-inlinable literal tree (typed_ops.SK_NULL)
@@ -291,12 +292,9 @@ def _translate_unit_extend_chain(p, ctx: Ctx) -> Optional[Solution]:
 
     cols = [(NULL_TERM() if t is None else term_lit(t)).alias(v)
             for v, t in consts.items()]
-    df = unit.select(*cols)
-    kinds = {v: _sk_of_term(t) for v, t in consts.items() if t is not None}
-    return Solution(df=df,
-                    bound={v for v, t in consts.items() if t is not None},
-                    maybe=set(consts),
-                    kinds={v: k for v, k in kinds.items() if k is not None})
+    return Solution(unit.select(*cols), {
+        v: VarInfo(bound=t is not None, kind=_sk_of_term(t))
+        for v, t in consts.items()})
 
 
 def _peel_unit_extends(p):
@@ -412,16 +410,17 @@ def _exists_correlated(outer: Solution, pattern) -> bool:
     return bool(free & outer.maybe)
 
 
-def _correlated_exists_seed(sol: Solution, ctx: Ctx):
-    """Materialize `sol` with a unique integer-term row key for lateral
-    EXISTS evaluation (same scheme as _lateral_of)."""
-    key = ctx.fresh("ex_id")
+def _keyed_seed(sol: Solution, ctx: Ctx, tag: str = "ex_id"):
+    """Materialize `sol` with a unique integer-term row key (lateral
+    EXISTS / LATERAL / EXISTS-in-OPTIONAL evaluation). The key is an
+    ordinary bound variable to the join machinery; monotonically_
+    increasing_id is only stable if the plan is not recomputed, hence the
+    checkpoint."""
+    key = ctx.fresh(tag)
     df = sol.df.withColumn(key, tv.int_term(F.monotonically_increasing_id()))
     df = df.localCheckpoint(eager=True)
-    seed = replace(sol, df=df, bound=sol.bound | {key},
-                   maybe=sol.maybe | {key},
-                   kinds={**sol.kinds, key: tv.K_INTEGER})
-    return key, seed
+    return key, replace(sol, df=df, vars={
+        **sol.vars, key: VarInfo(bound=True, kind=tv.K_INTEGER)})
 
 
 def _correlated_exists_join(sol: Solution, pattern, negated: bool,
@@ -430,7 +429,7 @@ def _correlated_exists_join(sol: Solution, pattern, negated: bool,
     evaluate the pattern laterally against the outer solution (outer
     bindings substituted), then semi/anti join the outer rows on the seed
     key. Every join is a hash join on the integer key."""
-    key, seed = _correlated_exists_seed(sol, ctx)
+    key, seed = _keyed_seed(sol, ctx)
     matched = _lat(pattern, seed, key, _no_consts(ctx))
     keys = matched.df.select(key).dropDuplicates()
     how = "left_anti" if negated else "left_semi"
@@ -446,27 +445,15 @@ def _left_join_with_exists(l: Solution, r: Solution, expr, ctx: Ctx
     key L uniquely, inner-join, run the full filter machinery (which
     handles EXISTS incl. correlated) on the joined solution, then pad the
     left rows with no surviving match. All joins hash on the integer key."""
-    key = ctx.fresh("lj_id")
-    ldf = l.df.withColumn(key, tv.int_term(F.monotonically_increasing_id()))
-    ldf = ldf.localCheckpoint(eager=True)
-    lsol = replace(l, df=ldf, bound=l.bound | {key}, maybe=l.maybe | {key},
-                   kinds={**l.kinds, key: tv.K_INTEGER})
+    key, lsol = _keyed_seed(l, ctx, "lj_id")
     joined = join_solutions(lsol, r, "inner")
     survivors = _translate_filter(A.Filter(expr, A.BGP([])), ctx, sol=joined)
-    out_vars = sorted((l.maybe | r.maybe))
-    sdf = survivors.df
-    for v in out_vars:
-        if v not in survivors.df.columns:
-            sdf = sdf.withColumn(v, NULL_TERM())
     matched = survivors.df.select(key).dropDuplicates()
-    pad = ldf.join(matched, on=key, how="left_anti")
-    for v in sorted(set(out_vars) - set(ldf.columns)):
-        pad = pad.withColumn(v, NULL_TERM())
-    df = sdf.select(*out_vars).unionByName(pad.select(*out_vars))
-    from .join import merge_kinds, merge_expensive
-    return Solution(df=df, bound=set(l.bound), maybe=l.maybe | r.maybe,
-                    pending_order=l.pending_order, kinds=merge_kinds(l, r),
-                    expensive=merge_expensive(l, r))
+    pad = lsol.with_df(lsol.df.join(matched, on=key, how="left_anti"))
+    out = union_solutions(survivors, pad)
+    return Solution(out.df.drop(key),
+                    {v: i for v, i in out.vars.items() if v != key},
+                    l.pending_order)
 
 
 def _has_exists(expr) -> bool:
@@ -482,15 +469,14 @@ def _correlated_exists_marker(sol: Solution, pattern, ctx: Ctx):
     inside larger expressions): lateral evaluation, then a left join of
     the seed against the distinct matched keys yields the boolean."""
     name = ctx.fresh("exists")
-    key, seed = _correlated_exists_seed(sol, ctx)
+    key, seed = _keyed_seed(sol, ctx)
     matched = _lat(pattern, seed, key, _no_consts(ctx))
     keys = matched.df.select(key).dropDuplicates() \
         .withColumn(f"__m_{name}", F.lit(True))
     df = seed.df.join(keys, on=key, how="left") \
         .withColumn(name, tv.bool_term(F.col(f"__m_{name}").isNotNull())) \
         .drop(f"__m_{name}", key)
-    return name, replace(sol, df=df, maybe=sol.maybe | {name},
-                         bound=sol.bound | {name})
+    return name, replace(sol, df=df, vars={**sol.vars, name: BOUND})
 
 
 def _bind_exists_markers(expr, sol: Solution, ctx: Ctx):
@@ -544,9 +530,7 @@ def _exists_marker(left: Solution, right: Solution, ctx: Ctx):
             *[L[c] for c in left.df.columns], M[f"__m_{name}"])
     df = df.withColumn(name, tv.bool_term(F.col(f"__m_{name}").isNotNull())) \
         .drop(f"__m_{name}")
-    new_sol = replace(left, df=df, maybe=left.maybe | {name},
-                      bound=left.bound | {name})
-    return name, new_sol
+    return name, replace(left, df=df, vars={**left.vars, name: BOUND})
 
 
 # ---------------------------------------------------------------------------
@@ -693,18 +677,12 @@ def _translate_lateral(p: A.Lateral, ctx: Ctx) -> Solution:
 
 
 def _lateral_of(l: Solution, right, ctx: Ctx) -> Solution:
-    key = ctx.fresh("lat_id")
     # unique row key + one materialization: the dependent join references
-    # the outer relation from several subplans; monotonically_increasing_id
-    # is only stable if the plan is not recomputed, hence the checkpoint
-    df = l.df.withColumn(key, tv.int_term(F.monotonically_increasing_id()))
-    df = df.localCheckpoint(eager=True)
-    seed = replace(l, df=df, bound=l.bound | {key}, maybe=l.maybe | {key},
-                   kinds={**l.kinds, key: tv.K_INTEGER})
+    # the outer relation from several subplans
+    key, seed = _keyed_seed(l, ctx, "lat_id")
     out = _lat(right, seed, key, ctx)
     return replace(out, df=out.df.drop(key),
-                   bound=out.bound - {key}, maybe=out.maybe - {key},
-                   kinds={k: v for k, v in out.kinds.items() if k != key})
+                   vars={v: i for v, i in out.vars.items() if v != key})
 
 
 def _lat(p, seed: Solution, key: str, ctx: Ctx) -> Solution:
@@ -723,18 +701,8 @@ def _lat(p, seed: Solution, key: str, ctx: Ctx) -> Solution:
                               _fresh_ids(_lat(p.right, seed, key, ctx)),
                               "left", p.expr, cb)
     if isinstance(p, A.Union):
-        l, r = _lat(p.left, seed, key, ctx), _lat(p.right, seed, key, ctx)
-        ldf, rdf = l.df, r.df
-        for v in sorted(r.maybe - l.maybe):
-            ldf = ldf.withColumn(v, NULL_TERM())
-        for v in sorted(l.maybe - r.maybe):
-            rdf = rdf.withColumn(v, NULL_TERM())
-        cols = sorted(l.maybe | r.maybe)
-        from .join import merge_kinds, merge_expensive
-        return Solution(df=ldf.select(*cols).unionByName(rdf.select(*cols)),
-                        bound=l.bound & r.bound, maybe=l.maybe | r.maybe,
-                        kinds=merge_kinds(l, r),
-                        expensive=merge_expensive(l, r))
+        return union_solutions(_lat(p.left, seed, key, ctx),
+                               _lat(p.right, seed, key, ctx))
     if isinstance(p, A.Extend):
         return _apply_extend(p, _lat(p.inner, seed, key, ctx), ctx)
     if isinstance(p, A.Minus):
@@ -759,14 +727,8 @@ def _lat(p, seed: Solution, key: str, ctx: Ctx) -> Solution:
         names = [v.name for v in p.variables]
         keep = sorted({key, *(seed.maybe & sol.maybe),
                        *(n for n in names if n in sol.maybe)})
-        missing = [n for n in names if n not in sol.maybe]
-        df = sol.df.select(*[sol.df[n].alias(n) for n in keep],
-                           *[NULL_TERM().alias(n) for n in missing])
-        vis = set(keep) | set(missing)
-        return Solution(df=df, bound=sol.bound & vis, maybe=vis,
-                        pending_order=sol.pending_order,
-                        kinds={k: v for k, v in sol.kinds.items() if k in vis},
-                        expensive=sol.expensive & vis)
+        return project_solution(
+            sol, keep + [n for n in names if n not in sol.maybe])
     if isinstance(p, (A.Distinct, A.Reduced)):
         sol = _lat(p.inner, seed, key, ctx)
         return replace(sol, df=_dedupe_normalized(sol))
@@ -812,7 +774,7 @@ def _lat_slice(p: A.Slice, seed: Solution, key: str, ctx: Ctx) -> Solution:
     return replace(sol, df=df, pending_order=[])
 
 
-def _extend_expensive(expr, sol: Solution, out: str) -> set:
+def _extend_expensive(expr, sol: Solution) -> bool:
     """Expensive marker for an Extend output: any computed expression is
     expensive (its backing column is a materialize_lexical struct built
     over interned withColumn Projects — alias-substituting a filter
@@ -820,10 +782,10 @@ def _extend_expensive(expr, sol: Solution, out: str) -> set:
     _apply_plain_filters); a bare rename inherits the source's marker and
     a constant stays cheap."""
     if isinstance(expr, A.ETerm):
-        return set()
+        return False
     if isinstance(expr, A.EVar):
-        return {out} if expr.name in sol.expensive else set()
-    return {out}
+        return sol.vars.get(expr.name, UNBOUND).expensive
+    return True
 
 
 # BIND expressions that provably cannot error (given certainly-bound,
@@ -859,7 +821,7 @@ def _extend_certainly_bound(expr, sol: Solution) -> bool:
 
 
 def _apply_extend(p: A.Extend, sol: Solution, ctx: Ctx) -> Solution:
-    orig_maybe, orig_bound = sol.maybe, sol.bound
+    orig = sol.vars
     expr = p.expr
     if _has_exists(expr):
         expr, sol = _bind_exists_markers(expr, sol, ctx)
@@ -867,7 +829,7 @@ def _apply_extend(p: A.Extend, sol: Solution, ctx: Ctx) -> Solution:
     with B.intern_scope(it), tv.lazy_lexicals():
         col = compile_term_expr(expr, sol, ctx)
     sk = tv.skind(col)
-    keep = [c for c in sol.df.columns if c in orig_maybe]
+    keep = [c for c in sol.df.columns if c in orig]
     # materialize the lazy lexical through a NAMED column: applying it
     # to the expression tree directly re-expands the tree ~12x (struct
     # fields + condition), which blows up codegen compile time
@@ -875,20 +837,10 @@ def _apply_extend(p: A.Extend, sol: Solution, ctx: Ctx) -> Solution:
           .withColumn(p.var.name, tv.materialize_lexical(
               tv.tag(F.col(p.var.name), sk)))
           .select(*keep, p.var.name))
-    kinds = dict(sol.kinds)
-    if sk is not None:
-        kinds[p.var.name] = sk
-    else:
-        kinds.pop(p.var.name, None)
-    vcanon = set(sol.vcanon) - {p.var.name}
-    if tv.is_vc(col):
-        vcanon.add(p.var.name)
-    bound = orig_bound | ({p.var.name}
-                          if _extend_certainly_bound(p.expr, sol) else set())
-    return replace(sol, df=df, maybe=orig_maybe | {p.var.name},
-                   bound=bound, kinds=kinds, vcanon=vcanon,
-                   expensive=sol.expensive | _extend_expensive(expr, sol,
-                                                               p.var.name))
+    info = VarInfo(bound=_extend_certainly_bound(p.expr, sol), kind=sk,
+                   vcanon=tv.is_vc(col),
+                   expensive=_extend_expensive(expr, sol))
+    return replace(sol, df=df, vars={**orig, p.var.name: info})
 
 
 def _apply_extend_chain(p: A.Extend, ctx: Ctx) -> Solution:
@@ -935,7 +887,6 @@ def _apply_extend_wave(wave: list, sol: Solution, ctx: Ctx) -> Solution:
     """One projection binding several independent BIND expressions (the
     multi-var generalization of _apply_extend; same lazy-lexical and
     named-column materialization discipline)."""
-    orig_maybe, orig_bound = sol.maybe, sol.bound
     it = Interner(sol.df, ctx)
     cols: dict[str, Column] = {}
     sks: dict[str, object] = {}
@@ -943,33 +894,22 @@ def _apply_extend_wave(wave: list, sol: Solution, ctx: Ctx) -> Solution:
         for e in wave:
             cols[e.var.name] = compile_term_expr(e.expr, sol, ctx)
             sks[e.var.name] = tv.skind(cols[e.var.name])
-    keep = [c for c in sol.df.columns if c in orig_maybe]
+    keep = [c for c in sol.df.columns if c in sol.vars]
     df = it.df
     for v, col in cols.items():
         df = df.withColumn(v, col)
     df = df.select(*keep, *[
         tv.materialize_lexical(tv.tag(F.col(v), sks[v])).alias(v)
         for v in cols])
-    kinds = dict(sol.kinds)
-    for v, sk in sks.items():
-        if sk is not None:
-            kinds[v] = sk
-        else:
-            kinds.pop(v, None)
-    vcanon = set(sol.vcanon) - set(cols)
-    vcanon |= {v for v, col in cols.items() if tv.is_vc(col)}
-    expensive = set(sol.expensive)
-    for e in wave:
-        expensive |= _extend_expensive(e.expr, sol, e.var.name)
-    bound = orig_bound | {e.var.name for e in wave
-                          if _extend_certainly_bound(e.expr, sol)}
-    return replace(sol, df=df, maybe=orig_maybe | set(cols),
-                   bound=bound, kinds=kinds, vcanon=vcanon,
-                   expensive=expensive)
+    new = {e.var.name: VarInfo(
+        bound=_extend_certainly_bound(e.expr, sol), kind=sks[e.var.name],
+        vcanon=tv.is_vc(cols[e.var.name]),
+        expensive=_extend_expensive(e.expr, sol)) for e in wave}
+    return replace(sol, df=df, vars={**sol.vars, **new})
 
 
 def _scan(tp: A.TriplePattern, ctx: Ctx) -> Solution:
-    df = ctx.store.scan_pattern(
+    df, known = ctx.store.scan_solution(
         tp.subject, tp.predicate, tp.object,
         active_graph=ctx.active_graph, graph_var=ctx.graph_var,
     )
@@ -981,16 +921,8 @@ def _scan(tp: A.TriplePattern, ctx: Ctx) -> Solution:
         vars_.add(ctx.graph_var.name)
     if not vars_:
         # ground pattern: 1 or 0 solutions (empty mapping)
-        df = df.limit(1).select()
-        return Solution(df=df, bound=set(), maybe=set())
-    kinds = {v: k for v, k in df.__dict__.get("_rf_kinds", {}).items()
-             if v in vars_}
-    vcanon = {v for v in df.__dict__.get("_rf_vcanon", ()) if v in vars_}
-    nkey = {v: (t, f"__nk_{v}")
-            for v, t in df.__dict__.get("_rf_nkey", {}).items()
-            if v in vars_ and f"__nk_{v}" in df.columns}
-    return Solution(df=df, bound=set(vars_), maybe=set(vars_), kinds=kinds,
-                    vcanon=vcanon, nkey=nkey)
+        return Solution(df.limit(1).select())
+    return Solution(df, {v: known.get(v, BOUND) for v in sorted(vars_)})
 
 
 def _collect_subject_consts(p) -> dict:
@@ -1360,14 +1292,12 @@ def _try_fuse_optional_chain(p: A.LeftJoin, ctx: Ctx) -> Optional[Solution]:
         by_subj.setdefault(subj, []).append((items, fb))
     rsols: list[Solution] = []
     for subj, groups in by_subj.items():
-        df = oss(Variable(subj), groups,
-                 consts=consts_all.get(subj),
-                 active_graph=ctx.active_graph)
-        if df is None:
+        scan = oss(Variable(subj), groups,
+                   consts=consts_all.get(subj),
+                   active_graph=ctx.active_graph)
+        if scan is None:
             return None
-        kinds = dict(df.__dict__.get("_rf_kinds", {}))
-        rsols.append(Solution(df=df, bound={subj},
-                              maybe=set(df.columns), kinds=kinds))
+        rsols.append(Solution(*scan))
     l = translate(base, ctx)
     for rsol in rsols:
         l = join_solutions(l, rsol, "left")
@@ -1445,25 +1375,19 @@ def _translate_bgp(p: A.BGP, ctx: Ctx, pushable: Optional[list] = None,
                 continue
             subj = Variable(key) if isinstance(key, str) else tps[0].subject
             items = [(tp.predicate, tp.object) for tp in tps]
-            df = star_scan(subj, items,
-                           active_graph=ctx.active_graph,
-                           graph_var=ctx.graph_var)
-            if df is None:
+            scan = star_scan(subj, items,
+                             active_graph=ctx.active_graph,
+                             graph_var=ctx.graph_var)
+            if scan is None:
                 remaining.extend(tps)
                 continue
-            vars_ = {c for c in df.columns
-                     if c != "__match__" and not c.startswith("__nk_")}
-            kinds = {v: k for v, k in df.__dict__.get("_rf_kinds", {}).items()
-                     if v in vars_}
-            vcanon = {v for v in df.__dict__.get("_rf_vcanon", ())
-                      if v in vars_}
-            nkey = {v: (t, f"__nk_{v}")
-                    for v, t in df.__dict__.get("_rf_nkey", {}).items()
-                    if v in vars_ and f"__nk_{v}" in df.columns}
-            keep = sorted(vars_) + sorted(e[1] for e in nkey.values())
-            units.append(Solution(df=df.select(*keep) if vars_ else df,
-                                  bound=set(vars_), maybe=set(vars_),
-                                  kinds=kinds, vcanon=vcanon, nkey=nkey))
+            df, known = scan
+            vars_ = {v: known.get(v, BOUND) for v in sorted(
+                c for c in df.columns
+                if c != "__match__" and not c.startswith("__nk_"))}
+            keep = [*vars_, *sorted(i.nkey[1] for i in vars_.values()
+                                    if i.nkey)]
+            units.append(Solution(df.select(*keep) if vars_ else df, vars_))
     else:
         remaining = list(p.triples)
 
@@ -1506,7 +1430,7 @@ def _translate_bgp(p: A.BGP, ctx: Ctx, pushable: Optional[list] = None,
 
 
 def _unit_solution(ctx: Ctx) -> Solution:
-    return Solution(df=ctx.store.spark.range(1).select(), bound=set(), maybe=set())
+    return Solution(ctx.store.spark.range(1).select())
 
 
 def _expression_only(pattern) -> Optional[list]:
@@ -1607,7 +1531,7 @@ def _translate_filter(p: A.Filter, ctx: Ctx,
 def _apply_plain_filters(sol: Solution, plain: list, ctx: Ctx) -> Solution:
     """Apply non-join filter conjuncts to a solution (EBV, error→dropped)."""
     keep = [c for c in sol.df.columns]
-    orig_maybe, orig_bound = sol.maybe, sol.bound
+    orig = sol.vars
     rewritten = []
     for c in plain:
         if _has_exists(c):  # EXISTS nested below the top-level AND
@@ -1631,11 +1555,12 @@ def _apply_plain_filters(sol: Solution, plain: list, ctx: Ctx) -> Solution:
     # no-op (WHEN over spark_partition_id) — the filter then cannot be
     # pushed through, and no substitution ever happens.
     needs = set()
+    expensive = {v for v, i in sol.vars.items() if i.expensive}
     for c in rewritten:
         vs = _expr_vars(c)
         # None = opaque node (EXISTS — already rewritten above, so this
         # is defensive): assume it may reference any expensive var
-        needs |= sol.expensive if vs is None else (vs & sol.expensive)
+        needs |= expensive if vs is None else (vs & expensive)
     import os as _os
     if needs and not _os.environ.get("RFS_NO_AGG_FILTER_BARRIER"):
         nd = F.spark_partition_id() >= F.lit(-1)  # always true, nondet
@@ -1646,8 +1571,7 @@ def _apply_plain_filters(sol: Solution, plain: list, ctx: Ctx) -> Solution:
         ])
     for cond in conds:
         df = df.where(cond)
-    return replace(sol, df=df.select(*keep), maybe=orig_maybe,
-                   bound=orig_bound)
+    return replace(sol, df=df.select(*keep), vars=orig)
 
 
 def _split_and(expr) -> list:
@@ -1657,34 +1581,15 @@ def _split_and(expr) -> list:
 
 
 def _translate_union(p: A.Union, ctx: Ctx) -> Solution:
-    l = translate(p.left, ctx)
-    r = translate(p.right, ctx)
-    lv, rv = l.maybe, r.maybe
-    ldf, rdf = l.df, r.df
-    for v in sorted(rv - lv):
-        ldf = ldf.withColumn(v, NULL_TERM())
-    for v in sorted(lv - rv):
-        rdf = rdf.withColumn(v, NULL_TERM())
-    cols = sorted(lv | rv)
-    if cols:
-        df = ldf.select(*cols).unionByName(rdf.select(*cols))
-    else:
-        df = ldf.unionByName(rdf)
-    from .join import merge_expensive, merge_kinds, merge_vcanon
-    return Solution(df=df, bound=l.bound & r.bound, maybe=lv | rv,
-                    kinds=merge_kinds(l, r),
-                    vcanon=merge_vcanon(l, r),
-                    expensive=merge_expensive(l, r))
+    return union_solutions(translate(p.left, ctx), translate(p.right, ctx))
 
 
 def _translate_graph(p: A.GraphNode, ctx: Ctx) -> Solution:
     if isinstance(p.name, NamedNode):
         if ctx.named_graphs is not None and p.name not in ctx.named_graphs:
             # FROM NAMED dataset excludes this graph → statically empty
-            return Solution(
-                df=ctx.store.spark.range(1).select(
-                    F.lit(True).alias("__match__")).limit(0),
-                bound=set(), maybe=set())
+            return Solution(ctx.store.spark.range(1).select(
+                F.lit(True).alias("__match__")).limit(0))
         inner_ctx = replace(ctx, active_graph=ActiveGraph.union([p.name]),
                             graph_var=None)
         return translate(p.inner, inner_ctx)
@@ -1707,7 +1612,7 @@ def _translate_graph(p: A.GraphNode, ctx: Ctx) -> Solution:
                 cond = cond | term_matches(F.col("graph"), gname)
             graphs = graphs.where(cond)
         graphs = graphs.select(F.col("graph").alias(p.name.name)).distinct()
-        g = Solution(df=graphs, bound={p.name.name}, maybe={p.name.name})
+        g = Solution(graphs, {p.name.name: BOUND})
         sol = join_solutions(sol, g, "inner")
     return sol
 
@@ -1734,7 +1639,7 @@ def _translate_service(p: A.ServiceNode, ctx: Ctx) -> Solution:
         df = ctx.store.spark.createDataFrame([], schema_t)
         if not names:
             df = df.select()
-        return Solution(df=df, bound=set(), maybe=set(names))
+        return Solution(df, dict.fromkeys(names, UNBOUND))
 
     query = service_query_text(p.prologue, p.raw_text)
     try:
@@ -1745,20 +1650,12 @@ def _translate_service(p: A.ServiceNode, ctx: Ctx) -> Solution:
         raise
     if not variables:
         # var-free remote pattern: N unit rows (bag semantics preserved)
-        return Solution(df=ctx.store.spark.range(len(rows)).select(),
-                        bound=set(), maybe=set())
+        return Solution(ctx.store.spark.range(len(rows)).select())
     tuples = [tuple(_term_row(r[v]) if r.get(v) is not None else None
                     for v in variables) for r in rows]
     schema_t = ", ".join(f"`{n}` {TERM_DDL}" for n in variables)
     df = ctx.store.spark.createDataFrame(tuples, schema_t)
-    bound = {v for j, v in enumerate(variables)
-             if all(t[j] is not None for t in tuples)}
-    kinds = {}
-    for j, v in enumerate(variables):
-        ks = {_static_kind_of_row(t[j]) for t in tuples if t[j] is not None}
-        if len(ks) == 1 and None not in ks:
-            kinds[v] = ks.pop()
-    return Solution(df=df, bound=bound, maybe=set(variables), kinds=kinds)
+    return Solution(df, _inline_vars(variables, tuples))
 
 
 def _translate_values(p: A.ValuesNode, ctx: Ctx) -> Solution:
@@ -1767,16 +1664,20 @@ def _translate_values(p: A.ValuesNode, ctx: Ctx) -> Solution:
     rows = [tuple(_term_row(t) for t in row) for row in p.rows]
     schema_t = ", ".join(f"`{n}` {TERM_DDL}" for n in names)
     df = ctx.store.spark.createDataFrame(rows, schema_t)
-    bound = set(names)
+    return Solution(df, _inline_vars(names, rows))
+
+
+def _inline_vars(names: list, rows: list) -> dict:
+    """VarInfo of inline term rows (VALUES, SERVICE bindings): bound when
+    no row leaves the var unbound; a static kind when every bound row
+    agrees on one."""
+    out = {}
     for j, v in enumerate(names):
-        if any(row[j] is None for row in p.rows):
-            bound.discard(v)
-    kinds = {}
-    for j, v in enumerate(names):
-        ks = {_static_kind_of_row(row[j]) for row in rows if row[j] is not None}
-        if len(ks) == 1 and None not in ks:
-            kinds[v] = ks.pop()
-    return Solution(df=df, bound=bound, maybe=set(names), kinds=kinds)
+        col = [row[j] for row in rows]
+        ks = {_static_kind_of_row(x) for x in col if x is not None}
+        out[v] = VarInfo(bound=None not in col,
+                         kind=ks.pop() if len(ks) == 1 else None)
+    return out
 
 
 def _static_kind_of_row(row) -> Optional[int]:
@@ -1940,13 +1841,8 @@ def _translate_project_cse(p: A.Project, ctx: Ctx) -> Solution:
             # positional rename: projection order is part of the α-key
             df = sol.df.toDF(*names)
             ren = dict(zip(cached_proj, names))
-            return Solution(
-                df=df,
-                bound={ren[v] for v in sol.bound if v in ren},
-                maybe=set(names),
-                kinds={ren[v]: k for v, k in sol.kinds.items() if v in ren},
-                vcanon={ren[v] for v in sol.vcanon if v in ren},
-                expensive={ren[v] for v in sol.expensive if v in ren})
+            return Solution(df, {ren[v]: i for v, i in sol.vars.items()
+                                 if v in ren})
     sol = _translate_project(p, ctx)
     ctx.subquery_cache[key] = (sol, names)
     return sol
@@ -2216,14 +2112,8 @@ def _translate_distinct_ordered(p: A.Distinct, ctx: Ctx) -> Optional[Solution]:
         knames = [ctx.fresh("sk") for _ in keys]
         df = it.df.withColumns(dict(zip(knames, keys)))
         extra = [F.col(n) for n in knames]
-    cols = [(df[n].alias(n) if n in sol.maybe else NULL_TERM().alias(n))
-            for n in names]
-    vis = df.select(*cols, *extra)
-    out_sol = Solution(
-        df=vis, bound=sol.bound & set(names), maybe=set(names),
-        kinds={v: k for v, k in sol.kinds.items()
-               if v in names and v in sol.maybe},
-        expensive=sol.expensive & set(names))
+    out_sol = project_solution(sol.with_df(df), names, extra)
+    vis = out_sol.df
     if ord_name not in vis.columns:
         sort_cols = [
             F.col(n).asc_nulls_first() if c.ascending
@@ -2275,17 +2165,7 @@ def _translate_project(p: A.Project, ctx: Ctx,
                 phantom |= {v for v in vs if v not in sol.maybe}
         if not _order_deferrable(pending, set(names) | phantom):
             sol = _apply_order(sol, ctx)
-    cols = [
-        (sol.df[n].alias(n) if n in sol.maybe else NULL_TERM().alias(n))
-        for n in names
-    ]
-    df = sol.df.select(*cols)
-    return Solution(df=df, bound=sol.bound & set(names), maybe=set(names),
-                    pending_order=sol.pending_order,
-                    kinds={v: k for v, k in sol.kinds.items() if v in names
-                           and v in sol.maybe},
-                    vcanon=sol.vcanon & set(names) & sol.maybe,
-                    expensive=sol.expensive & set(names))
+    return project_solution(sol, names)
 
 
 def _apply_order(sol: Solution, ctx: Ctx) -> Solution:
@@ -2519,15 +2399,13 @@ def _translate_complement_agg(p: A.Group, ctx: Ctx) -> Optional[Solution]:
             if solR.kinds.get(v) not in narrow:
                 return None
 
+    pair_sol = Solution(solP.df.select(*corr), project_vars(solP, corr))
+    solM = replace(pair_sol, df=_dedupe_normalized(pair_sol))
     if not negated:
         # positive EXISTS: each R row joins each V feature it matches
         # exactly once (distinct pairs ⇒ multiplicity 1), then the
         # ordinary Group translation aggregates — identical semantics to
         # cross-then-semi, minus the |V|·|R| blow-up
-        pair_sol = Solution(
-            df=solP.df.select(*corr), bound=set(corr), maybe=set(corr),
-            kinds={k: v for k, v in solP.kinds.items() if k in corr})
-        solM = replace(pair_sol, df=_dedupe_normalized(pair_sol))
         solMV = join_solutions(solM, solV, "inner")
         solJ = join_solutions(solR, solMV, "inner")
         return _translate_group(p, ctx, sol=solJ)
@@ -2572,10 +2450,6 @@ def _translate_complement_agg(p: A.Group, ctx: Ctx) -> Optional[Solution]:
         F.first(F.col(v)).alias(v) for v in extra]
     tot = (rdf.groupBy(*[F.col(v)["v"].alias(gcols[v]) for v in extra])
            .agg(*tot_aggs) if extra else rdf.agg(*tot_aggs))
-    pair_sol = Solution(
-        df=solP.df.select(*corr), bound=set(corr), maybe=set(corr),
-        kinds={k: v for k, v in solP.kinds.items() if k in corr})
-    solM = replace(pair_sol, df=_dedupe_normalized(pair_sol))
     solW = join_solutions(replace(solR, df=rdf), solM, "inner")
     wdf = solW.df.groupBy(
         F.col(f)["v"].alias("__ca_fk"),
@@ -2615,13 +2489,12 @@ def _translate_complement_agg(p: A.Group, ctx: Ctx) -> Optional[Solution]:
             .otherwise(inner).alias(name))
     out = joined.where(n_wo > 0).select(*out_cols)
 
-    agg_names = {v.name for v, _ in p.aggregates}
-    bound = {f, *extra} | {v.name for v, call in p.aggregates
-                           if call.name == "COUNT"}
-    kinds = {f: solV.kinds[f]}
-    kinds.update({v: solR.kinds[v] for v in extra})
-    return Solution(df=out, bound=bound, maybe={f, *extra} | agg_names,
-                    kinds=kinds, expensive=set(agg_names))
+    vars_ = {f: VarInfo(bound=True, kind=solV.vars[f].kind)}
+    vars_.update((v, VarInfo(bound=True, kind=solR.vars[v].kind))
+                 for v in extra)
+    vars_.update((v.name, VarInfo(bound=call.name == "COUNT", expensive=True))
+                 for v, call in p.aggregates)
+    return Solution(out, vars_)
 
 
 def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
@@ -2651,8 +2524,7 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
         raw_aggs.append(col.alias(name))
         return F.col(name)
 
-    out_kinds: dict = {}
-    out_vcanon: set = set()
+    out_vars: dict = {}
     # Identical aggregate calls compile ONCE (r12, guide §2.3): HAVING
     # repeats its SELECT aggregate verbatim (the algebra lowers it to a
     # second AggCall), and without dedup each copy registered its own
@@ -2681,11 +2553,9 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
             if agg_col is None:
                 agg_col = _compile_aggregate(call, sol, ctx, tmp, raw)
                 seen_calls[key] = agg_col
-            sk = tv.skind(agg_col)
-            if sk is not None:
-                out_kinds[out_var.name] = sk
-            if tv.is_vc(agg_col):
-                out_vcanon.add(out_var.name)
+            out_vars[out_var.name] = VarInfo(
+                bound=call.name == "COUNT", kind=tv.skind(agg_col),
+                vcanon=tv.is_vc(agg_col), expensive=True)
             post_exprs.append(agg_col.alias(out_var.name))
     df = it.df
 
@@ -2700,8 +2570,9 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
     # hash out of the scan→partial-agg pipeline (measured ~25% off the
     # TPC-H Q1 shape); the struct is rebuilt once per GROUP, not per row.
     from ..terms import iri_col
-    narrow = {k for k in keys
-              if k in sol.bound and sol.kinds.get(k) in (tv.SK_IRI, tv.SK_PLAIN)}
+    info = {k: sol.vars.get(k, UNBOUND) for k in keys}
+    narrow = {k for k, i in info.items()
+              if i.bound and i.kind in (tv.SK_IRI, tv.SK_PLAIN)}
     # Numeric narrow keys (r12, same soundness base as the MIN/MAX
     # decomposition): a bound VALUE-CANONICAL numeric key's term is a
     # pure function of its typed value, so grouping on the primitive
@@ -2712,23 +2583,21 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
     # key that is one long (guide §2.3 "narrower types"; measured:
     # engine q3 2.76 s vs 1.52 s for the raw-SQL decimal equivalent,
     # most of the gap this struct grouping).
-    narrow_num = {k for k in keys
-                  if k in sol.bound and k in sol.vcanon
-                  and sol.kinds.get(k) in (tv.K_INTEGER, tv.K_DECIMAL,
-                                           tv.K_DOUBLE)}
+    narrow_num = {k for k, i in info.items()
+                  if i.bound and i.vcanon
+                  and i.kind in (tv.K_INTEGER, tv.K_DECIMAL, tv.K_DOUBLE)}
     # Native-LONG group keys (r12, guide §2.3): an integer-literal key
-    # whose scan minted a companion long column (Solution.nkey template
+    # whose scan minted a companion long column (VarInfo.nkey template
     # "xsd:integer": term ≡ int_term(long), injective) groups on the
     # 8-byte long instead of the 16-byte decimal(38,18) `d` view — the
     # decimal's unscaled value exceeds a compact long (v·10¹⁸), so every
     # per-row key hash/compare boxed a BigDecimal; the long is a native
     # hash. Rebuild: int_term(long), cheaper than the decimal rtrim.
     from ..sources.relational import NKEY_INT
-    narrow_long = {k: sol.nkey[k][1] for k in keys
-                   if k in sol.bound and sol.nkey.get(k)
-                   and sol.nkey[k][0] == NKEY_INT
-                   and sol.nkey[k][1] in sol.df.columns
-                   and sol.kinds.get(k) == tv.K_INTEGER}
+    narrow_long = {k: i.nkey[1] for k, i in info.items()
+                   if i.bound and i.nkey and i.nkey[0] == NKEY_INT
+                   and i.nkey[1] in sol.df.columns
+                   and i.kind == tv.K_INTEGER}
 
     def key_expr(k: str) -> Column:
         if k in narrow:
@@ -2736,7 +2605,7 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
         if k in narrow_long:
             return F.col(narrow_long[k]).alias(k)
         if k in narrow_num:
-            field = "x" if sol.kinds[k] == tv.K_DOUBLE else "d"
+            field = "x" if info[k].kind == tv.K_DOUBLE else "d"
             return df[k][field].alias(k)
         return (F.col(k) if k in sol.maybe else NULL_TERM()).alias(k)
 
@@ -2744,7 +2613,7 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
         if k in narrow_long:
             return tv.int_term(F.col(k)).alias(k)
         if k in narrow_num:
-            kind = sol.kinds[k]
+            kind = info[k].kind
             if kind == tv.K_DOUBLE:
                 return tv.double_term(F.col(k)).alias(k)
             if kind == tv.K_DECIMAL:
@@ -2752,7 +2621,7 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
             return tv.int_term_from_decimal(F.col(k)).alias(k)
         if k not in narrow:
             return F.col(k)
-        if sol.kinds[k] == tv.SK_IRI:
+        if info[k].kind == tv.SK_IRI:
             return tv.tag(iri_col(F.col(k)), tv.SK_IRI).alias(k)
         return tv.string_term(F.col(k)).alias(k)
 
@@ -2768,7 +2637,7 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
         # tree re-expands it ~12x and blows up codegen compile time
         fix = [
             tv.materialize_lexical(
-                tv.tag(F.col(v.name), out_kinds.get(v.name))).alias(v.name)
+                tv.tag(F.col(v.name), out_vars[v.name].kind)).alias(v.name)
             for v, _ in p.aggregates
         ]
         out = out.select(*[key_rebuild(k) for k in keys], *fix)
@@ -2777,16 +2646,9 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
         if narrow or narrow_num or narrow_long:
             out = out.select(*[key_rebuild(k) for k in keys])
 
-    bound = {k for k in keys if k in sol.bound}
-    for out_var, call in p.aggregates:
-        if call.name == "COUNT":
-            bound.add(out_var.name)
-    key_kinds = {k: v for k, v in sol.kinds.items() if k in keys}
-    return Solution(df=out, bound=bound,
-                    maybe=set(keys) | {v.name for v, _ in p.aggregates},
-                    kinds={**key_kinds, **out_kinds},
-                    vcanon={k for k in keys if k in sol.vcanon} | out_vcanon,
-                    expensive={v.name for v, _ in p.aggregates})
+    keys_info = {k: replace(i, expensive=False, nkey=None)
+                 for k, i in info.items()}
+    return Solution(out, {**keys_info, **out_vars})
 
 
 def _minmax_decomposed(name: str, c: Column,
@@ -2809,7 +2671,7 @@ def _minmax_decomposed(name: str, c: Column,
       instead of key + 8-field struct, and Catalyst prunes the struct
       build below the aggregate (§2.3 narrower types).
     * K_INTEGER / K_DECIMAL / K_DOUBLE, value-canonical input ONLY
-      (Solution.vcanon: lexical NULL-or-canonical, datatype canonical) —
+      (VarInfo.vcanon: lexical NULL-or-canonical, datatype canonical) —
       aggregate the exact typed field (`d` decimal / `x` double): a
       fixed-width buffer, so the whole aggregate becomes a
       HashAggregate with map-side partial aggregation (§2.3). Without

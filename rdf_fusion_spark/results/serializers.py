@@ -19,13 +19,16 @@ from xml.sax.saxutils import escape as xml_escape
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..terms import RDF_LANG_STRING, TT_BNODE, TT_IRI, XSD_STRING
+from ..terms import (RDF_LANG_STRING, TT_BNODE, TT_IRI, XSD_STRING,
+                     rebuild_lexical)
 
 
 def _binding_obj(row_val) -> Optional[dict]:
     if row_val is None:
         return None
     t, v, dt, lang = row_val["t"], row_val["v"], row_val["dt"], row_val["lang"]
+    if v is None:
+        v = rebuild_lexical(row_val)
     if t == TT_IRI:
         return {"type": "uri", "value": v}
     if t == TT_BNODE:
@@ -78,7 +81,10 @@ def to_xml(result) -> str:
             if val is None:
                 continue
             parts.append(f'<binding name="{xml_escape(v)}">')
-            t, lex = val["t"], xml_escape(val["v"])
+            t, lex = val["t"], val["v"]
+            if lex is None:
+                lex = rebuild_lexical(val)
+            lex = xml_escape(lex)
             if t == TT_IRI:
                 parts.append(f"<uri>{lex}</uri>")
             elif t == TT_BNODE:
@@ -101,6 +107,8 @@ def _csv_value(val) -> str:
     if val is None:
         return ""
     v = val["v"]
+    if v is None:
+        v = rebuild_lexical(val)
     if val["t"] == TT_BNODE:
         v = f"_:{v}"
     if any(ch in v for ch in ',"\n\r'):
@@ -117,9 +125,12 @@ def _tsv_term(val) -> str:
         return str(NamedNode(val["v"]))
     if t == TT_BNODE:
         return str(BlankNode(val["v"]))
+    v = val["v"]
+    if v is None:
+        v = rebuild_lexical(val)
     if val["lang"]:
-        return str(Literal(val["v"], language=val["lang"]))
-    return str(Literal(val["v"], val["dt"] or XSD_STRING))
+        return str(Literal(v, language=val["lang"]))
+    return str(Literal(v, val["dt"] or XSD_STRING))
 
 
 def to_csv(result) -> str:
@@ -142,10 +153,11 @@ def to_tsv(result) -> str:
 
 def _binding_col(c: Column) -> Column:
     """Term struct → SPARQL-JSON binding object as a JSON string Column."""
+    from ..functions.typed_ops import lexical_of
     typ = (F.when(c["t"] == TT_IRI, "uri")
            .when(c["t"] == TT_BNODE, "bnode").otherwise("literal"))
     obj = F.to_json(F.struct(
-        typ.alias("type"), c["v"].alias("value"),
+        typ.alias("type"), lexical_of(c).alias("value"),
         F.when((c["t"] != TT_IRI) & (c["t"] != TT_BNODE)
                & c["lang"].isNotNull(), c["lang"]).alias("xml:lang"),
         F.when((c["t"] != TT_IRI) & (c["t"] != TT_BNODE)

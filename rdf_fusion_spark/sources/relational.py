@@ -279,7 +279,7 @@ def subject_native(table: str, df: DataFrame) -> Optional[Column]:
     single integral key (or the xxhash64 of a hash-subject table),
     str(long) is injective, so long-equality on this column ⟺ subject
     IRI equality within the table's id space. Consumed by the native
-    join-key path (plans/join.py Solution.nkey)."""
+    join-key path (plans/join.py VarInfo.nkey)."""
     _, key_cols, _ = TPCH_SPEC[table]
     if table in HASH_SUBJECT_TABLES:
         return F.xxhash64(*[F.col(f.name) for f in df.schema.fields])
@@ -298,7 +298,7 @@ def object_native(table: str, col_name: str, df: DataFrame
     for a plain integral column the object is the xsd:integer literal of
     the value (int_term is injective on long) and the template is the
     marker "xsd:integer" — two vars minted under the SAME template may
-    join/group on the longs (plans/join.py Solution.nkey). The marker
+    join/group on the longs (plans/join.py VarInfo.nkey). The marker
     can never collide with a table name."""
     fks = TPCH_SPEC[table][2]
     if not isinstance(df.schema[col_name].dataType, _INT_TYPES):

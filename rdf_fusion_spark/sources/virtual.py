@@ -196,12 +196,17 @@ class VirtualRelationalStore(GraphStore):
 
     def scan_pattern(self, subject, predicate, obj, active_graph=None,
                      graph_var=None) -> DataFrame:
+        return self.scan_solution(subject, predicate, obj, active_graph,
+                                  graph_var)[0]
+
+    def scan_solution(self, subject, predicate, obj, active_graph=None,
+                      graph_var=None) -> tuple:
         if self.resolves(predicate):
-            df = self.star_scan(subject, [(predicate, obj)],
-                                active_graph=active_graph,
-                                graph_var=graph_var)
-            if df is not None:
-                return df
+            scan = self.star_scan(subject, [(predicate, obj)],
+                                  active_graph=active_graph,
+                                  graph_var=graph_var)
+            if scan is not None:
+                return scan
         if isinstance(predicate, Variable):
             # variable-predicate scans anchored on a constant endpoint
             # (the BSBM Explore Q11 "everything about X" shape) resolve to
@@ -210,7 +215,7 @@ class VirtualRelationalStore(GraphStore):
             df = self._var_pred_scan(subject, predicate, obj,
                                      active_graph, graph_var)
             if df is not None:
-                return df
+                return df, {}
         if isinstance(predicate, NamedNode) and not self.resolves(predicate):
             # constant predicate OUTSIDE the mapping vocabulary: the
             # virtual graph provably holds no such triple — an empty
@@ -225,10 +230,10 @@ class VirtualRelationalStore(GraphStore):
             cols = [F.lit(None).cast(TERM_TYPE).alias(v)
                     for v in dict.fromkeys(out_vars)] or \
                 [F.lit(True).alias("__match__")]
-            return self.spark.range(1).select(*cols).limit(0)
+            return self.spark.range(1).select(*cols).limit(0), {}
         return super().scan_pattern(subject, predicate, obj,
                                     active_graph=active_graph,
-                                    graph_var=graph_var)
+                                    graph_var=graph_var), {}
 
     def _var_pred_scan(self, subject, predicate, obj, active_graph,
                        graph_var) -> Optional[DataFrame]:
@@ -420,10 +425,11 @@ class VirtualRelationalStore(GraphStore):
     def star_scan(self, subject: TermOrVar,
                   items: list[tuple[NamedNode, TermOrVar]],
                   active_graph: Optional[ActiveGraph] = None,
-                  graph_var=None) -> Optional[DataFrame]:
+                  graph_var=None) -> Optional[tuple]:
         """One table scan for a same-subject group of constant-predicate
-        patterns. Returns a solution DataFrame (one column per variable,
-        `__match__` if none) or None when not virtualizable here.
+        patterns. Returns (solution DataFrame — one column per variable,
+        `__match__` if none — and {var: VarInfo}), or None when not
+        virtualizable here.
 
         Different-table predicates in one group are contradictory (subject
         IRI spaces are disjoint) → empty result, correct by construction.
@@ -469,7 +475,9 @@ class VirtualRelationalStore(GraphStore):
         if contradictory:
             return self._empty_solution(subject, items, graph_var)
 
-        from ..functions.typed_ops import SK_IRI
+        from ..functions.typed_ops import K_DECIMAL, SK_IRI
+        from ..plans.join import VarInfo
+        from ..terms import K_DOUBLE, K_INTEGER
         from .relational import object_native, static_object_kind, \
             subject_native
 
@@ -477,7 +485,7 @@ class VirtualRelationalStore(GraphStore):
         subj_term = self._subj_term(table, df)
         out_vars: dict[str, Column] = {}
         out_kinds: dict[str, int] = {}
-        # native join keys (plans/join.py Solution.nkey): var → template
+        # native join keys (plans/join.py VarInfo.nkey): var → template
         # table; the minted LONG rides in a `__nk_<var>` column
         out_nkey: dict[str, str] = {}
         nkey_cols: dict[str, Column] = {}
@@ -558,31 +566,31 @@ class VirtualRelationalStore(GraphStore):
             cond = cond & c
         df = df.where(cond)
         if not out_vars:
-            return df.select(F.lit(True).alias("__match__"))
+            return df.select(F.lit(True).alias("__match__")), {}
         out = df.select(*[c.alias(v) for v, c in out_vars.items()],
                         *[c.alias(f"__nk_{v}")
                           for v, c in nkey_cols.items()])
-        out._rf_kinds = out_kinds
-        out._rf_nkey = out_nkey
-        # value-canonical promise (plans/join.py Solution.vcanon): scan
+        # value-canonical promise (plans/join.py VarInfo.vcanon): scan
         # terms for numeric columns are built lazily (doubles/decimals,
         # v=NULL) or with the canonical cast lexical (integers), and the
         # datatype is always the kind's canonical type — so the MIN/MAX
         # hash-agg decomposition may rebuild winners from typed fields.
         # K_DATETIME is deliberately absent: DateType columns keep an
         # eager date-only lexical a rebuild cannot reproduce.
-        from ..functions.typed_ops import K_DECIMAL as _KDEC
-        from ..terms import K_DOUBLE as _KDBL, K_INTEGER as _KINT
-        out._rf_vcanon = {v for v, k in out_kinds.items()
-                          if k in (_KINT, _KDEC, _KDBL)}
-        return out
+        return out, {v: VarInfo(
+            bound=True, kind=out_kinds.get(v),
+            vcanon=out_kinds.get(v) in (K_INTEGER, K_DECIMAL, K_DOUBLE),
+            nkey=(out_nkey[v], f"__nk_{v}") if v in out_nkey else None)
+            for v in out_vars}
 
     def optional_star_scan(self, subject: Variable, groups,
                            consts=None,
                            active_graph: Optional[ActiveGraph] = None,
-                           ) -> Optional[DataFrame]:
+                           ) -> Optional[tuple]:
         """ONE conditional-column scan for a chain of same-subject
         OPTIONAL stars (r11 opt; translator._try_fuse_optional_chain).
+        Returns (DataFrame, {var: VarInfo}): the subject is bound, the
+        conditional object columns are not.
 
         Every mapped predicate is FUNCTIONAL by construction (one column
         per row), so `OPTIONAL { ?s <p> ?v . FILTER(C(?v)) }` against a
@@ -605,6 +613,7 @@ class VirtualRelationalStore(GraphStore):
         per-OPTIONAL join.
         """
         from ..functions.typed_ops import SK_IRI
+        from ..plans.join import VarInfo
         from .relational import static_object_kind
 
         allowed = self._graph_tables(active_graph)
@@ -634,7 +643,7 @@ class VirtualRelationalStore(GraphStore):
             prune.append(self._object_filter(table, m[1], df, obj))
 
         out_cols: dict[str, Column] = {}
-        kinds: dict[str, int] = {subject.name: SK_IRI}
+        vars_ = {subject.name: VarInfo(bound=True, kind=SK_IRI)}
         for items, fb in groups:
             cols: dict[str, tuple] = {}
             m_cond = F.lit(True)
@@ -654,8 +663,7 @@ class VirtualRelationalStore(GraphStore):
                 m_cond = m_cond & fc
             for v, (c, k) in cols.items():
                 out_cols[v] = F.when(m_cond, c)
-                if k is not None:
-                    kinds[v] = k
+                vars_[v] = VarInfo(kind=k)
 
         if prune:
             cond = prune[0]
@@ -665,8 +673,7 @@ class VirtualRelationalStore(GraphStore):
         out = df.select(
             self._subj_term(table, df).alias(subject.name),
             *[c.alias(v) for v, c in out_cols.items()])
-        out._rf_kinds = kinds
-        return out
+        return out, vars_
 
     # ------------------------------------------------------------------
     # virtualized DESCRIBE and zero-length-path node enumeration
@@ -823,7 +830,7 @@ class VirtualRelationalStore(GraphStore):
 
     # ------------------------------------------------------------------
 
-    def _empty_solution(self, subject, items, graph_var=None) -> DataFrame:
+    def _empty_solution(self, subject, items, graph_var=None) -> tuple:
         cols = []
         seen = set()
         if isinstance(subject, Variable):
@@ -838,7 +845,7 @@ class VirtualRelationalStore(GraphStore):
             cols.append(F.lit(None).cast(TERM_TYPE).alias(v))
         if not cols:
             cols = [F.lit(True).alias("__match__")]
-        return self.spark.range(1).select(*cols).limit(0)
+        return self.spark.range(1).select(*cols).limit(0), {}
 
     def _subject_filter(self, table: str, df: DataFrame,
                         subject: NamedNode) -> Column:

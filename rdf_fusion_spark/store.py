@@ -118,7 +118,7 @@ class GraphStore:
         # blowup it guarded against is now prevented LOCALLY: filters over
         # computed (BIND/aggregate) variables sit above a nondeterministic
         # no-op projection Catalyst cannot substitute through
-        # (translator._apply_plain_filters + Solution.expensive). The
+        # (translator._apply_plain_filters + VarInfo.expensive). The
         # global conf flip was both leaky — it mutated the user's session
         # for their own non-engine DataFrames — and harmful to our own
         # plans: it blocked the Filter-into-Join fusion that turns a
@@ -281,6 +281,15 @@ class GraphStore:
     # lib/logical/src/quad_pattern/logical.rs:33-140 +
     # MemQuadPatternDataSource, pattern_data_source.rs:19-108)
     # ------------------------------------------------------------------
+
+    def scan_solution(self, subject, predicate, obj, active_graph=None,
+                      graph_var=None) -> tuple:
+        """(scan_pattern frame, {var: VarInfo}) — the facts the store
+        proves about the pattern's variables beyond boundness (every
+        variable column of a scan is bound); the quads relation proves
+        none."""
+        return self.scan_pattern(subject, predicate, obj, active_graph,
+                                 graph_var), {}
 
     def scan_pattern(
         self,

@@ -512,7 +512,7 @@ def _const_vcanon(k, v, dt, d, x) -> bool:
     """True when a constant literal's lexical/datatype are exactly what
     the engine's canonical rebuild from the typed fields would produce —
     the precondition for treating the constant as value-canonical
-    (plans/join.py Solution.vcanon). '05'^^xsd:integer, '5'^^xsd:int,
+    (plans/join.py VarInfo.vcanon). '05'^^xsd:integer, '5'^^xsd:int,
     '1.0E10'^^xsd:double etc. all answer False."""
     if k == K_INTEGER:
         return dt == XSD_INTEGER and d is not None and _canon_dec_py(d) == v
@@ -669,6 +669,22 @@ def term_py_row(t: Optional[Term]):
     return (TT_LITERAL, t.lexical, dt, lang, k, x, d, ts)
 
 
+def rebuild_lexical(row) -> Optional[str]:
+    """Lexical form of a literal term Row whose `v` is NULL — a lazy
+    lexical (virtual-store scans of double/decimal/dateTime columns),
+    rebuilt from the typed fields. Driver-side readers call it only on
+    that branch."""
+    k = row["k"]
+    if k is not None and k <= K_DECIMAL and row["d"] is not None:
+        d = row["d"].normalize()
+        return str(int(d)) if d == d.to_integral_value() else str(d)
+    if k is not None and k <= K_DOUBLE and row["x"] is not None:
+        return repr(row["x"])
+    if k == K_DATETIME and row["ts"] is not None:
+        return row["ts"].isoformat()
+    return None
+
+
 def term_to_python(row) -> Optional[Term]:
     """Decode a term struct Row to a Python term (driver-side, result decoding)."""
     if row is None:
@@ -680,15 +696,7 @@ def term_to_python(row) -> Optional[Term]:
         return BlankNode(row["v"])
     v = row["v"]
     if v is None:
-        # lazy lexical (virtual scans): rebuild from the typed fields
-        k = row["k"]
-        if k is not None and k <= K_DECIMAL and row["d"] is not None:
-            d = row["d"].normalize()
-            v = str(int(d)) if d == d.to_integral_value() else str(d)
-        elif k is not None and k <= K_DOUBLE and row["x"] is not None:
-            v = repr(row["x"])
-        elif k == K_DATETIME and row["ts"] is not None:
-            v = row["ts"].isoformat()
+        v = rebuild_lexical(row)
     if row["lang"]:
         return Literal(v, language=row["lang"])
     return Literal(v, row["dt"] or XSD_STRING)

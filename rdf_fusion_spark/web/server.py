@@ -21,8 +21,8 @@ is a thin driver-side shim, all heavy lifting stays in the cluster.
 from __future__ import annotations
 
 import json
+import logging
 import threading
-import traceback
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Optional
@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 
 from ..sparql.algebra import Dataset
 from ..terms import TERM_TYPE, NamedNode
+
+_log = logging.getLogger(__name__)
 
 _RESULT_TYPES = (
     ("application/sparql-results+json", "json"),
@@ -150,9 +152,12 @@ class SparqlHttpServer:
                                       ctype + "; charset=utf-8")
                 except BrokenPipeError:
                     raise
-                except Exception:
-                    return self._bad("evaluation error:\n"
-                                     + traceback.format_exc(), 500)
+                except Exception as e:
+                    # the traceback names server internals: log it, send
+                    # the client only the error itself
+                    _log.exception("evaluation error for query %r", query)
+                    return self._bad(
+                        f"evaluation error: {type(e).__name__}: {e}", 500)
 
             # ---- HTTP verbs
             def do_GET(self):

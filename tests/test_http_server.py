@@ -94,6 +94,31 @@ def test_query_error_is_400(endpoint):
         assert e.code == 400
 
 
+def test_evaluation_error_is_500_without_traceback(endpoint):
+    """A query that fails while its result is produced gets a 500 naming
+    the error; the Python traceback stays in the server log."""
+    from pyspark.sql import functions as F
+
+    from rdf_fusion_spark.functions import registry
+    from rdf_fusion_spark.functions import typed_ops as tv
+    iri = "http://example.org/fn/fail"
+    registry.register(iri, lambda args: tv.string_term(
+        F.raise_error(F.concat(F.lit("boom "), args[0]["v"])).cast("string")))
+    q = ("SELECT (<%s>(?name) AS ?v) WHERE "
+         "{ ?s <http://xmlns.com/foaf/0.1/name> ?name }" % iri)
+    try:
+        _get(endpoint, "/query?query=" + urllib.parse.quote(q))
+        assert False, "expected HTTPError"
+    except urllib.error.HTTPError as e:
+        body = e.read().decode()
+        assert e.code == 500
+        assert body.startswith("evaluation error: "), body
+        assert "boom" in body
+        assert "Traceback" not in body and 'File "' not in body, body
+    finally:
+        registry.unregister(iri)
+
+
 def test_data_upload_and_dataset_params(endpoint):
     # upload into a named graph, then query it via named-graph-uri
     status, _, body = _post(

@@ -429,3 +429,58 @@ def test_n3_reader_roundtrip_and_rejection(spark, tmp_path):
     ]:
         with pytest.raises(NotImplementedError):
             parse_rdf(spark, bad, N3)
+
+
+def test_document_serializers_render_lazy_virtual_literals(spark):
+    """Raw double/dateTime columns of a virtual-store scan reach the
+    result with a lazy lexical (v=NULL): every document serializer must
+    rebuild it, agreeing with term_to_python, and the distributed line
+    serializer must render a value too."""
+    import csv
+    import io
+    import xml.etree.ElementTree as ET
+
+    from rdf_fusion_spark.entry_queries import PROLOGUE
+    from rdf_fusion_spark.sources.virtual import VirtualRelationalStore
+    from rdf_fusion_spark.terms import Literal, term_to_python
+
+    st = VirtualRelationalStore(spark, "/root/testdata/sf0.001")
+    res = st.query(PROLOGUE + """
+        SELECT ?li ?qty ?price ?sd WHERE {
+          ?li l:l_quantity ?qty ; l:l_extendedprice ?price ;
+              l:l_shipdate ?sd .
+        } ORDER BY ?li LIMIT 5""")
+    vs = ["qty", "price", "sd"]
+    rows = res.df.collect()
+    assert len(rows) == 5
+    assert any(r[v]["v"] is None for r in rows for v in vs)  # really lazy
+    want = [{v: term_to_python(r[v]) for v in vs} for r in rows]
+    assert all(isinstance(w[v], Literal) and w[v].lexical is not None
+               for w in want for v in vs)
+
+    js = json.loads(S.to_json(res))["results"]["bindings"]
+    assert [{v: b[v]["value"] for v in vs} for b in js] == \
+        [{v: w[v].lexical for v in vs} for w in want]
+    assert [{v: b[v]["datatype"] for v in vs} for b in js] == \
+        [{v: w[v].datatype for v in vs} for w in want]
+
+    ns = "{http://www.w3.org/2005/sparql-results#}"
+    xml_rows = ET.fromstring(S.to_xml(res)).iter(ns + "result")
+    got_xml = [{b.get("name"): b.find(ns + "literal").text
+                for b in r.iter(ns + "binding") if b.get("name") in vs}
+               for r in xml_rows]
+    assert got_xml == [{v: w[v].lexical for v in vs} for w in want]
+
+    got_csv = list(csv.DictReader(io.StringIO(S.to_csv(res))))
+    assert [{v: r[v] for v in vs} for r in got_csv] == \
+        [{v: w[v].lexical for v in vs} for w in want]
+
+    tsv = S.to_tsv(res).splitlines()
+    head = [h.lstrip("?") for h in tsv[0].split("\t")]
+    got_tsv = [dict(zip(head, line.split("\t"))) for line in tsv[1:]]
+    assert [{v: r[v] for v in vs} for r in got_tsv] == \
+        [{v: str(w[v]) for v in vs} for w in want]
+
+    lines = [json.loads(r["line"])
+             for r in S.bindings_json_df(res).collect()]
+    assert all(isinstance(b[v]["value"], str) for b in lines for v in vs)

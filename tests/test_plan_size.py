@@ -14,7 +14,7 @@ Two historical blow-up modes, both fixed and pinned here:
   substitutes the producing projection's aliases into every of the
   predicate's ~25 operand references, multiplying per projection layer.
   Fixed locally (round 5): computed variables are tracked in
-  Solution.expensive, and a filter referencing one is applied above a
+  VarInfo.expensive, and a filter referencing one is applied above a
   nondeterministic no-op projection the rule cannot push through
   (translator._apply_plain_filters) — the session-global rule exclusion
   this test originally pinned is gone (it leaked into user sessions and

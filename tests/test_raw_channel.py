@@ -5,9 +5,9 @@ build. These tests pin (a) the constructor invariant the whole channel
 rests on — the raw expression is NULL exactly when the term struct is
 NULL, and its value agrees with the struct field — including the NaN /
 ±INF / negative edge values, (b) result equivalence of a computed-value
-aggregate pipeline against the struct-only evaluation (channels
-stripped), and (c) the plan effects: q3's group key is the native long
-and its pre-aggregate pipeline builds no term struct."""
+aggregate pipeline against the same computation written directly on the
+parquet columns, and (c) the plan effects: q3's group key is the native
+long and its pre-aggregate pipeline builds no term struct."""
 
 import io
 import sys
@@ -63,12 +63,6 @@ def test_constructor_raw_invariants(spark):
                     tf = t[field]
                     same = (tf == r) or (tf != tf and r != r)  # NaN==NaN
                     assert same, f"{name}.{k}: value mismatch {tf!r} vs {r!r}"
-
-
-def _strip(col):
-    """A struct-only copy of a term column: same expression, channels and
-    static tag dropped — forces every consumer onto the generic path."""
-    return col.alias("__strip")
 
 
 def test_computed_aggregate_equivalence(spark):

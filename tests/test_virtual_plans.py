@@ -240,11 +240,11 @@ def test_bind_year_key_join_is_not_split(spark):
 
 def test_extend_certainly_bound_whitelist():
     from rdf_fusion_spark.plans.translator import (
-        Solution, _extend_certainly_bound)
+        BOUND, UNBOUND, Solution, VarInfo, _extend_certainly_bound)
     from rdf_fusion_spark.sparql import algebra as A
     from rdf_fusion_spark.terms import K_DATETIME, Literal
-    sol = Solution(df=None, bound={"t", "x"}, maybe={"t", "x", "opt"},
-                   kinds={"t": K_DATETIME})
+    sol = Solution(df=None, vars={"t": VarInfo(bound=True, kind=K_DATETIME),
+                                  "x": BOUND, "opt": UNBOUND})
     yr = A.ECall("YEAR", [A.EVar("t")])
     assert _extend_certainly_bound(yr, sol)
     # var without the static dateTime kind → could error → not bound
