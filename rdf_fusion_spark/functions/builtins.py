@@ -6,7 +6,7 @@ JVM-side, whole-stage-codegen'd, no Python UDFs in the hot path.
 dispatched from lib/execution/src/sparql/rewriting/expression_rewriter.rs:44-250;
 here one builder per function, dispatched from a dict.)
 
-`compile_expr` returns a term-struct Column (errors = NULL);
+`compile_expr` returns a typed_ops.TermExpr (errors = NULL);
 `compile_bool` returns a native boolean Column (the EBV), skipping the
 term round-trip for comparisons/logicals — the same strength reduction the
 reference implements as SimplifySparqlExpressionsRule
@@ -61,6 +61,7 @@ from .typed_ops import (
     is_string_like,
     numeric_rank,
     string_term,
+    TermExpr,
 )
 
 from ..terms import TERM_DDL  # noqa: F811  (re-export for translator)
@@ -75,7 +76,7 @@ def NULL_BOOL() -> Column:
     from ..terms import memo_col
     return memo_col("NULL_BOOL", lambda: F.lit(None).cast("boolean"))
 
-Resolver = Callable[[str], Column]
+Resolver = Callable[[str], TermExpr]
 
 
 class SparqlCompileError(Exception):
@@ -93,25 +94,31 @@ def _err_if(cond: Column, val: Column) -> Column:
 # (numeric_rank / as_long / as_decimal / ... are each a CASE over the
 # operand), so inlining operand trees grows plans exponentially with nesting
 # and OOMs the driver JVM at plan time. The translator pushes an interner
-# (Column -> named temp column reference) while compiling against a
-# DataFrame; every ECall result routes through it, so operands are always
-# plain column references. Catalyst's CollapseProject keeps multi-referenced
-# aliases materialized, preserving linearity through optimization.
+# (a record -> the same record over named temp columns) while compiling
+# against a DataFrame; every ECall result routes through it, so operands
+# are always plain column references. Catalyst's CollapseProject keeps
+# multi-referenced aliases materialized, preserving linearity through
+# optimization.
 # ---------------------------------------------------------------------------
 
-_INTERN_STACK: list[Callable[[Column], Column]] = []
+_INTERN_STACK: list[Callable[[TermExpr], TermExpr]] = []
 
 
-def _intern(col: Column) -> Column:
+def _intern(te: TermExpr) -> TermExpr:
     if _INTERN_STACK:
-        return _INTERN_STACK[-1](col)
-    return col
+        return _INTERN_STACK[-1](te)
+    return te
+
+
+def _intern_col(col: Column) -> Column:
+    """_intern for a plain (non-term) Column."""
+    return _intern(TermExpr(col)).col
 
 
 class intern_scope:
     """Context manager installing an interner for the duration of a compile."""
 
-    def __init__(self, interner: Callable[[Column], Column]):
+    def __init__(self, interner: Callable[[TermExpr], TermExpr]):
         self.interner = interner
 
     def __enter__(self):
@@ -156,7 +163,7 @@ def _statically_null(expr, resolve: Resolver) -> bool:
     over such an argument."""
     from ..sparql.algebra import ECall, EVar
     if isinstance(expr, EVar):
-        return tv.skind(resolve(expr.name)) == tv.SK_NULL
+        return resolve(expr.name).kind == tv.SK_NULL
     if isinstance(expr, ECall):
         name = expr.name
         if name in _NULL_STRICT_FNS or (
@@ -166,8 +173,8 @@ def _statically_null(expr, resolve: Resolver) -> bool:
     return False
 
 
-def compile_expr(expr, resolve: Resolver) -> Column:
-    """Expression → term-struct Column."""
+def compile_expr(expr, resolve: Resolver) -> TermExpr:
+    """Expression → term record."""
     from ..sparql.algebra import ECall, ETerm, EVar, EExists
 
     if isinstance(expr, EVar):
@@ -180,7 +187,7 @@ def compile_expr(expr, resolve: Resolver) -> Column:
     if isinstance(expr, ECall):
         name = expr.name
         if _statically_null(expr, resolve):
-            return tv.tag(NULL_TERM(), tv.SK_NULL)
+            return TermExpr(NULL_TERM(), tv.SK_NULL)
         if name in _BOOL_OPS:
             return _intern(bool_term(compile_bool(expr, resolve)))
         fn = _TERM_FNS.get(name)
@@ -190,8 +197,8 @@ def compile_expr(expr, resolve: Resolver) -> Column:
             from .registry import lookup
             builder = lookup(name)
             if builder is not None:
-                cols = [compile_expr(a, resolve) for a in expr.args]
-                return _intern(builder(cols))
+                cols = [compile_expr(a, resolve).col for a in expr.args]
+                return _intern(tv.as_term(builder(cols)))
             raise SparqlCompileError(f"unsupported function: {name}")
         return _intern(fn([a for a in expr.args], resolve))
     raise SparqlCompileError(f"unknown expression node: {expr!r}")
@@ -252,7 +259,7 @@ def compile_bool(expr, resolve: Resolver) -> Column:
             conds = [tv.rdf_equal(l, compile_expr(x, resolve)) for x in a[1:]]
             if not conds:
                 # even `?x IN ()` propagates an errored left operand
-                res = F.when(l.isNotNull(), F.lit(False))
+                res = F.when(l.col.isNotNull(), F.lit(False))
             else:
                 res = conds[0]
                 for c in conds[1:]:
@@ -262,23 +269,23 @@ def compile_bool(expr, resolve: Resolver) -> Column:
             from ..sparql.algebra import EVar
             if not isinstance(a[0], EVar):
                 raise SparqlCompileError("BOUND requires a variable")
-            return resolve(a[0].name).isNotNull()
+            return resolve(a[0].name).col.isNotNull()
         if name == "SAMETERM":
             l = tv.materialize_lexical(compile_expr(a[0], resolve))
             r = tv.materialize_lexical(compile_expr(a[1], resolve))
             return F.when(l.isNull() | r.isNull(), NULL_BOOL()).otherwise(l == r)
         if name == "ISIRI" or name == "ISURI":
             c = compile_expr(a[0], resolve)
-            return F.when(c.isNotNull(), c["t"] == TT_IRI)
+            return F.when(c.col.isNotNull(), c["t"] == TT_IRI)
         if name == "ISBLANK":
             c = compile_expr(a[0], resolve)
-            return F.when(c.isNotNull(), c["t"] == TT_BNODE)
+            return F.when(c.col.isNotNull(), c["t"] == TT_BNODE)
         if name == "ISLITERAL":
             c = compile_expr(a[0], resolve)
-            return F.when(c.isNotNull(), c["t"] == TT_LITERAL)
+            return F.when(c.col.isNotNull(), c["t"] == TT_LITERAL)
         if name == "ISNUMERIC":
             c = compile_expr(a[0], resolve)
-            return F.when(c.isNotNull(), is_numeric(c))
+            return F.when(c.col.isNotNull(), is_numeric(c))
         if name in ("STRSTARTS", "STRENDS", "CONTAINS", "LANGMATCHES", "REGEX"):
             return _string_predicate(name, a, resolve)
     if isinstance(expr, EExists):
@@ -298,7 +305,7 @@ _BOOL_OPS = {
 # string helpers
 # ---------------------------------------------------------------------------
 
-def _args_compatible(a: Column, b: Column) -> Column:
+def _args_compatible(a: TermExpr, b: TermExpr) -> Column:
     """SPARQL 17.4.3.1.2 argument compatibility for binary string functions."""
     return is_string_like(a) & is_string_like(b) & (
         b["lang"].isNull() | (a["lang"] == b["lang"])
@@ -403,7 +410,7 @@ def _string_predicate(name: str, args: list, resolve: Resolver) -> Column:
     return F.when(ok, fn(a["v"], b["v"]))
 
 
-def _preserve_lang(src: Column, new_value: Column) -> Column:
+def _preserve_lang(src: TermExpr, new_value: Column) -> TermExpr:
     """Result literal carries src's lang/dt (for SUBSTR/UCASE/REPLACE...).
 
     The result is string-like by construction (the guard requires it of
@@ -413,39 +420,45 @@ def _preserve_lang(src: Column, new_value: Column) -> Column:
     otherwise push one WholeStageCodegen past Janino's 64 KB method
     limit and the whole projection chain falls back to interpreted)."""
     out = F.when(
-        src.isNotNull() & is_string_like(src) & new_value.isNotNull(),
+        src.col.isNotNull() & is_string_like(src) & new_value.isNotNull(),
         term_struct(F.lit(TT_LITERAL), new_value, src["dt"], src["lang"],
                     k=F.lit(tv.K_STRING), x=tv.None_x(), d=tv.None_d(),
                     ts=tv.None_ts()),
     )
     # a plain-string input (lang/dt-free) yields a plain-string result;
     # any other input still yields SOME string-like literal
-    return tv.tag(out, tv.SK_PLAIN if tv.skind(src) == tv.SK_PLAIN
-                  else tv.K_STRING)
+    return TermExpr(out, tv.SK_PLAIN if src.kind == tv.SK_PLAIN
+                    else tv.K_STRING)
 
 
 # ---------------------------------------------------------------------------
 # term-valued builtins
 # ---------------------------------------------------------------------------
 
+def _str_of(c: TermExpr) -> TermExpr:
+    """STR() and xsd:string(): the lexical form as a plain literal."""
+    return TermExpr(
+        F.when(c["t"] != TT_BNODE, string_term(tv.lexical_of(c)).col),
+        tv.SK_PLAIN)
+
+
 def _fn_str(args, resolve):
-    c = compile_expr(args[0], resolve)
-    return tv.tag(F.when(c["t"] != TT_BNODE, string_term(tv.lexical_of(c))),
-                  tv.SK_PLAIN)
+    return _str_of(compile_expr(args[0], resolve))
 
 
 def _fn_lang(args, resolve):
     c = compile_expr(args[0], resolve)
-    return tv.tag(
+    return TermExpr(
         F.when(c["t"] == TT_LITERAL,
-               string_term(F.coalesce(c["lang"], F.lit("")))),
+               string_term(F.coalesce(c["lang"], F.lit(""))).col),
         tv.SK_PLAIN)
 
 
 def _fn_datatype(args, resolve):
     c = compile_expr(args[0], resolve)
-    return F.when(c["t"] == TT_LITERAL,
-                  term_struct(F.lit(TT_IRI), F.coalesce(c["dt"], F.lit(XSD_STRING))))
+    return TermExpr(F.when(
+        c["t"] == TT_LITERAL,
+        term_struct(F.lit(TT_IRI), F.coalesce(c["dt"], F.lit(XSD_STRING)))))
 
 
 def _fn_iri(args, resolve):
@@ -459,17 +472,18 @@ def _fn_iri(args, resolve):
         if base:
             v = F.when(v.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), v) \
                 .otherwise(F.concat(F.lit(base), v))
-    return (
-        F.when(c["t"] == TT_IRI, c)
+    return TermExpr(
+        F.when(c["t"] == TT_IRI, c.col)
         .when(is_plain_string(c), term_struct(F.lit(TT_IRI), v))
     )
 
 
 def _fn_bnode(args, resolve):
     if not args:
-        return term_struct(F.lit(TT_BNODE), F.expr("uuid()"))
+        return TermExpr(term_struct(F.lit(TT_BNODE), F.expr("uuid()")))
     c = compile_expr(args[0], resolve)
-    return F.when(is_plain_string(c), term_struct(F.lit(TT_BNODE), c["v"]))
+    return TermExpr(
+        F.when(is_plain_string(c), term_struct(F.lit(TT_BNODE), c["v"])))
 
 
 def _fn_strdt(args, resolve):
@@ -486,26 +500,27 @@ def _fn_strdt(args, resolve):
         k = static_kind_for_datatype(iri)
         out = F.when(is_plain_string(lex),
                      term_struct_static_dt(lex["v"], iri))
-        return tv.tag(out, tv.SK_PLAIN if k == tv.K_STRING else k)
+        return TermExpr(out, tv.SK_PLAIN if k == tv.K_STRING else k)
     dt = compile_expr(dt_node, resolve)
-    return F.when(
+    return TermExpr(F.when(
         is_plain_string(lex) & (dt["t"] == TT_IRI),
         term_struct(F.lit(TT_LITERAL), lex["v"], dt["v"]),
-    )
+    ))
 
 
 def _fn_strlang(args, resolve):
     lex = compile_expr(args[0], resolve)
     lang = compile_expr(args[1], resolve)
-    return F.when(
+    return TermExpr(F.when(
         is_plain_string(lex) & is_plain_string(lang) & (F.length(lang["v"]) > 0),
         term_struct(F.lit(TT_LITERAL), lex["v"], F.lit(RDF_LANG_STRING),
                     F.lower(lang["v"])),
-    )
+    ))
 
 
 def _fn_uuid(args, resolve):
-    return term_struct(F.lit(TT_IRI), F.concat(F.lit("urn:uuid:"), F.expr("uuid()")))
+    return TermExpr(term_struct(
+        F.lit(TT_IRI), F.concat(F.lit("urn:uuid:"), F.expr("uuid()"))))
 
 
 def _fn_struuid(args, resolve):
@@ -549,8 +564,8 @@ def _fn_strbefore(args, resolve):
     b = compile_expr(args[1], resolve)
     pos = F.instr(a["v"], b["v"])
     found = _preserve_lang(a, a["v"].substr(F.lit(1), pos - 1))
-    return F.when(_args_compatible(a, b),
-                  F.when(pos > 0, found).otherwise(string_term(F.lit(""))))
+    return TermExpr(F.when(_args_compatible(a, b), F.when(pos > 0, found.col)
+                           .otherwise(string_term(F.lit("")).col)))
 
 
 def _fn_strafter(args, resolve):
@@ -559,17 +574,17 @@ def _fn_strafter(args, resolve):
     pos = F.instr(a["v"], b["v"])
     tail = _preserve_lang(
         a, a["v"].substr(pos + F.length(b["v"]), F.lit(2147483647)))
-    return F.when(_args_compatible(a, b),
-                  F.when(pos > 0, tail).otherwise(string_term(F.lit(""))))
+    return TermExpr(F.when(_args_compatible(a, b), F.when(pos > 0, tail.col)
+                           .otherwise(string_term(F.lit("")).col)))
 
 
 def _fn_concat(args, resolve):
     terms = [compile_expr(a, resolve) for a in args]
     if not terms:
         return string_term(F.lit(""))
-    all_str = terms[0].isNotNull() & is_string_like(terms[0])
+    all_str = terms[0].col.isNotNull() & is_string_like(terms[0])
     for t in terms[1:]:
-        all_str = all_str & t.isNotNull() & is_string_like(t)
+        all_str = all_str & t.col.isNotNull() & is_string_like(t)
     value = F.concat(*[t["v"] for t in terms])
     lang0 = terms[0]["lang"]
     same_lang = F.lit(True)
@@ -580,11 +595,11 @@ def _fn_concat(args, resolve):
         .otherwise(F.lit(XSD_STRING))
     # string-like by construction: constant kind, no typed views (see
     # _preserve_lang for why the derived ladder must not be emitted)
-    return tv.tag(
+    return TermExpr(
         F.when(all_str, term_struct(F.lit(TT_LITERAL), value, out_dt, out_lang,
                                     k=F.lit(tv.K_STRING), x=tv.None_x(),
                                     d=tv.None_d(), ts=tv.None_ts())),
-        tv.SK_PLAIN if all(tv.skind(t) == tv.SK_PLAIN for t in terms)
+        tv.SK_PLAIN if all(t.kind == tv.SK_PLAIN for t in terms)
         else tv.K_STRING)
 
 
@@ -592,20 +607,20 @@ def _fn_replace(args, resolve):
     c = compile_expr(args[0], resolve)
     pat, group_count, matches_empty = _regex_pattern(args, resolve, 1, 3)
     if pat is None:  # constant pattern failed to compile
-        return NULL_TERM()
+        return TermExpr(NULL_TERM())
     if matches_empty:
         # XPath fn:replace FORX0003: a pattern that matches the
         # zero-length string is an error, not Java's interleaving
-        return NULL_TERM()
+        return TermExpr(NULL_TERM())
     rep_c = _const_plain_str(args[2])
     if rep_c is not None and _replacement_invalid(rep_c, group_count):
-        return NULL_TERM()  # bare '$' / missing group ref (FORX0004)
+        return TermExpr(NULL_TERM())  # bare '$' / bad group ref (FORX0004)
     rep = as_string(compile_expr(args[2], resolve))
     out = _preserve_lang(c, F.regexp_replace(as_string(c), pat, rep))
     if matches_empty is None:
         # dynamic pattern: the FORX0003 zero-length-match check must
         # run per row
-        out = F.when(~F.regexp_like(F.lit(""), pat), out)
+        out = TermExpr(F.when(~F.regexp_like(F.lit(""), pat), out.col))
     return out
 
 
@@ -626,50 +641,38 @@ def _hash_fn(h):
     return fn
 
 
-def _fn_abs(args, resolve):
+def _by_rank(args, resolve, dbl, dec, lng=lambda n: n) -> TermExpr:
+    """A numeric builtin over its argument's runtime rank: dbl/dec/lng
+    map the double/decimal/long view to the result's value."""
     c = compile_expr(args[0], resolve)
     rank = numeric_rank(c)
-    return (
+    return TermExpr(
         F.when(rank.isNull(), NULL_TERM())
-        .when(rank >= RANK_FLOAT, double_term(F.abs(as_double(c))))
-        .when(rank == RANK_DECIMAL, decimal_term(F.abs(as_decimal(c))))
-        .otherwise(int_term(F.abs(as_long(c))))
+        .when(rank >= RANK_FLOAT, double_term(dbl(as_double(c))).col)
+        .when(rank == RANK_DECIMAL, decimal_term(dec(as_decimal(c))).col)
+        .otherwise(int_term(lng(as_long(c))).col)
     )
+
+
+def _fn_abs(args, resolve):
+    return _by_rank(args, resolve, F.abs, F.abs, F.abs)
 
 
 def _fn_round(args, resolve):
     # SPARQL ROUND = round half toward +inf == floor(x + 0.5)
-    c = compile_expr(args[0], resolve)
-    rank = numeric_rank(c)
-    return (
-        F.when(rank.isNull(), NULL_TERM())
-        .when(rank >= RANK_FLOAT, double_term(F.floor(as_double(c) + 0.5).cast("double")))
-        .when(rank == RANK_DECIMAL,
-              decimal_term(F.floor(as_decimal(c) + 0.5).cast(DECIMAL_T)))
-        .otherwise(int_term(as_long(c)))
-    )
+    return _by_rank(args, resolve,
+                    lambda x: F.floor(x + 0.5).cast("double"),
+                    lambda d: F.floor(d + 0.5).cast(DECIMAL_T))
 
 
 def _fn_ceil(args, resolve):
-    c = compile_expr(args[0], resolve)
-    rank = numeric_rank(c)
-    return (
-        F.when(rank.isNull(), NULL_TERM())
-        .when(rank >= RANK_FLOAT, double_term(F.ceil(as_double(c)).cast("double")))
-        .when(rank == RANK_DECIMAL, decimal_term(F.ceil(as_decimal(c)).cast(DECIMAL_T)))
-        .otherwise(int_term(as_long(c)))
-    )
+    return _by_rank(args, resolve, lambda x: F.ceil(x).cast("double"),
+                    lambda d: F.ceil(d).cast(DECIMAL_T))
 
 
 def _fn_floor(args, resolve):
-    c = compile_expr(args[0], resolve)
-    rank = numeric_rank(c)
-    return (
-        F.when(rank.isNull(), NULL_TERM())
-        .when(rank >= RANK_FLOAT, double_term(F.floor(as_double(c)).cast("double")))
-        .when(rank == RANK_DECIMAL, decimal_term(F.floor(as_decimal(c)).cast(DECIMAL_T)))
-        .otherwise(int_term(as_long(c)))
-    )
+    return _by_rank(args, resolve, lambda x: F.floor(x).cast("double"),
+                    lambda d: F.floor(d).cast(DECIMAL_T))
 
 
 def _fn_rand(args, resolve):
@@ -702,13 +705,13 @@ def _dt_part(part_fn):
         # named temp column so a run of accessors (YEAR..MINUTES over the
         # same dateTime) doesn't re-emit it per accessor — stacked BINDs
         # otherwise push one WholeStageCodegen past Janino's 64 KB limit
-        return int_term(part_fn(_intern(_local_ts(c))).cast("long"))
+        return int_term(part_fn(_intern_col(_local_ts(c))).cast("long"))
     return fn
 
 
 def _fn_seconds(args, resolve):
     c = compile_expr(args[0], resolve)
-    ts = _intern(_local_ts(c))
+    ts = _intern_col(_local_ts(c))
     # keep fractional seconds: second() truncates
     frac = ts.cast("decimal(38,6)") % 60
     return decimal_term(frac.cast(DECIMAL_T))
@@ -717,7 +720,7 @@ def _fn_seconds(args, resolve):
 def _fn_tz(args, resolve):
     c = compile_expr(args[0], resolve)
     tz = F.regexp_extract(c["v"], r"(Z|[+-]\d\d:\d\d)$", 1)
-    return F.when(as_timestamp(c).isNotNull(), string_term(tz))
+    return TermExpr(F.when(as_timestamp(c).isNotNull(), string_term(tz).col))
 
 
 def _fn_timezone(args, resolve):
@@ -726,11 +729,11 @@ def _fn_timezone(args, resolve):
     # interning keeps the compiled tree linear (uninterned, this one
     # builtin alone emitted a ~19 KB plan and pushed accessor-heavy BINDs
     # over Janino's 64 KB method limit)
-    tz = _intern(F.regexp_extract(c["v"], r"(Z|[+-]\d\d:\d\d)$", 1))
+    tz = _intern_col(F.regexp_extract(c["v"], r"(Z|[+-]\d\d:\d\d)$", 1))
     sign = F.when(tz.startswith("-"), -1).otherwise(1)
-    hours = _intern(
+    hours = _intern_col(
         F.regexp_extract(tz, r"(\d\d):", 1).try_cast("int") * sign)
-    mins = _intern(
+    mins = _intern_col(
         F.regexp_extract(tz, r":(\d\d)$", 1).try_cast("int") * sign)
     lex = (
         F.when(tz == "Z", F.lit("PT0S"))
@@ -741,20 +744,21 @@ def _fn_timezone(args, resolve):
                             F.lit("PT"), F.abs(hours).cast("string"), F.lit("H"),
                             F.abs(mins).cast("string"), F.lit("M")))
     )
-    return F.when((tz != "") & as_timestamp(c).isNotNull(),
-                  term_struct(F.lit(TT_LITERAL), lex, F.lit(XSD_DAY_TIME_DURATION)))
+    return TermExpr(F.when(
+        (tz != "") & as_timestamp(c).isNotNull(),
+        term_struct(F.lit(TT_LITERAL), lex, F.lit(XSD_DAY_TIME_DURATION))))
 
 
 def _fn_if(args, resolve):
     cond = compile_bool(args[0], resolve)
     t = compile_expr(args[1], resolve)
     e = compile_expr(args[2], resolve)
-    return F.when(cond, t).when(~cond, e)
+    return TermExpr(F.when(cond, t.col).when(~cond, e.col))
 
 
 def _fn_coalesce(args, resolve):
-    cols = [compile_expr(a, resolve) for a in args]
-    return F.coalesce(*cols) if cols else NULL_TERM()
+    cols = [compile_expr(a, resolve).col for a in args]
+    return TermExpr(F.coalesce(*cols) if cols else NULL_TERM())
 
 
 def _arith(op):
@@ -813,13 +817,13 @@ def _cast_fn(name: str):
 
     def fn(args, resolve):
         c = compile_expr(args[0], resolve)
-        sk = tv.skind(c)
+        sk = c.kind
         num_rt = sk == tv.SK_NUM  # numeric, rank known only at runtime
         if num_rt:
             sk = None
             # 2-branch ladders: every non-NULL value is numeric, so the
             # non-numeric arms of the generic k-dispatch fold away
-            # (SUM/AVG outputs carry this tag — the post-agg xsd:double
+            # (SUM/AVG outputs carry this kind — the post-agg xsd:double
             # wrapper was a full 5-arm CASE over the output struct)
             if target in ("integer", "int", "long", "short", "byte"):
                 return int_term(
@@ -836,13 +840,13 @@ def _cast_fn(name: str):
             if sk is not None:
                 # single-branch: the input's kind is statically known
                 if sk == tv.K_INTEGER:
-                    val = tv.dval(c).cast("long")
+                    val = c.view("d").cast("long")
                 elif tv._sk_numeric(sk):
-                    val = tv.xval(c).cast("long")
+                    val = c.view("x").cast("long")
                 elif sk == tv.K_BOOLEAN:
                     val = F.when(as_boolean(c), 1).otherwise(0).cast("long")
                 elif sk == tv.SK_PLAIN:
-                    val = tv.vval(c).try_cast("long")
+                    val = c.view("v").try_cast("long")
                 else:
                     val = F.lit(None).cast("long")
                 return int_term(val)
@@ -858,15 +862,15 @@ def _cast_fn(name: str):
         if target == "decimal":
             if sk is not None:
                 if sk <= K_DECIMAL:
-                    val = tv.dval(c)
+                    val = c.view("d")
                 elif tv._sk_numeric(sk):
-                    val = tv.xval(c).cast(DECIMAL_T)
+                    val = c.view("x").cast(DECIMAL_T)
                 elif sk == tv.K_BOOLEAN:
                     val = F.when(as_boolean(c), 1).otherwise(0).cast(DECIMAL_T)
                 elif sk == tv.SK_PLAIN:
                     # XSD decimal lexical has no exponent form; Spark's
                     # cast accepts one — enforce the lexical grammar
-                    v = tv.vval(c)
+                    v = c.view("v")
                     val = F.when(v.rlike(r"^[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)$"), v).try_cast(DECIMAL_T)
                 else:
                     val = F.lit(None).cast(DECIMAL_T)
@@ -883,11 +887,11 @@ def _cast_fn(name: str):
             mk = double_term if target == "double" else _float_term
             if sk is not None:
                 if tv._sk_numeric(sk):
-                    val = tv.xval(c)
+                    val = c.view("x")
                 elif sk == tv.K_BOOLEAN:
                     val = F.when(as_boolean(c), 1.0).otherwise(0.0)
                 elif sk == tv.SK_PLAIN:
-                    val = _str_to_double(tv.vval(c))
+                    val = _str_to_double(c.view("v"))
                 else:
                     val = F.lit(None).cast("double")
                 return mk(val)
@@ -907,9 +911,7 @@ def _cast_fn(name: str):
             )
             return bool_term(val)
         if target == "string":
-            return tv.tag(
-                F.when(c["t"] != TT_BNODE, string_term(tv.lexical_of(c))),
-                tv.SK_PLAIN)
+            return _str_of(c)
         if target == "dateTime":
             if sk == K_DATETIME:
                 val = c["ts"]
@@ -923,7 +925,7 @@ def _cast_fn(name: str):
                     F.when(is_plain_string(c), (c["v"]).try_cast("timestamp")),
                 )
             lex = F.regexp_replace(val.cast("string"), " ", "T")
-            return tv.tag(
+            return TermExpr(
                 F.when(val.isNotNull(),
                        term_struct(F.lit(TT_LITERAL), lex,
                                    F.lit(XSD_DATETIME),
@@ -935,7 +937,7 @@ def _cast_fn(name: str):
                 c["dt"].isin(XSD_DATETIME, XSD_DATE) | is_plain_string(c),
                 (c["v"]).try_cast("date"),
             )
-            return tv.tag(
+            return TermExpr(
                 F.when(val.isNotNull(),
                        term_struct(F.lit(TT_LITERAL), val.cast("string"),
                                    F.lit(XSD_DATE))),
@@ -956,7 +958,7 @@ def _cast_fn(name: str):
                 r"\.?0+$", "")
             anchored = F.to_timestamp(
                 F.concat(F.lit("1970-01-01 "), lex))
-            return tv.tag(
+            return TermExpr(
                 F.when(
                     src_ts.isNotNull(),
                     term_struct(F.lit(TT_LITERAL), lex, F.lit(XSD_TIME),
@@ -998,13 +1000,13 @@ def _str_to_double(v: Column) -> Column:
             .otherwise(v.try_cast("double")))
 
 
-def _float_term(x: Column) -> Column:
+def _float_term(x: Column) -> TermExpr:
     # canonical float lexical: integral values print without ".0"
     # (matches Rust/oxigraph f32 Display; W3C canonical allows both);
     # Infinity/-Infinity render as INF/-INF per XSD
     lex = F.regexp_replace(
         tv.canon_double_string(x.cast("float").cast("double")), r"\.0$", "")
-    return F.when(
+    return TermExpr(F.when(
         x.isNotNull(),
         term_struct(F.lit(TT_LITERAL), lex, F.lit(XSD_FLOAT)),
-    )
+    ))

@@ -28,34 +28,35 @@ from ..terms import (
     XSD_STRING,
 )
 from . import typed_ops as tv
-from .typed_ops import as_boolean, as_double, as_timestamp, is_numeric
+from .typed_ops import (TermExpr, as_boolean, as_double, as_timestamp,
+                        is_numeric)
 
 
-def sort_key(c: Column) -> Column:
+def sort_key(c: TermExpr) -> Column:
     """Sortable struct (rank, num, s1, s2) for a term column; NULL for unbound
     so orderBy(asc_nulls_first) puts unbound first like the reference.
 
-    Static-kind fast path: when the column's tag proves every non-NULL
+    Static-kind fast path: when the term's kind proves every non-NULL
     value lives in ONE rank class, the 4-field struct collapses to a
     single primitive — same pairwise order within the class, and NULLs
     (unbound) still sort first. A full-scan top-k (WindFarm production
     query 4: 5 ORDER BY keys over a 600k-row join) spends most of its CPU
     constructing the generic structs; the narrow keys cut that to plain
     column reads."""
-    sk = tv.skind(c)
+    sk = c.kind
     if sk is not None:
         if sk in (tv.SK_IRI, tv.SK_BNODE, tv.K_STRING, tv.SK_PLAIN):
             # single string-ordered class: IRIs, bnodes, or string
             # literals (langString ties with its plain twin exactly like
             # the generic struct: s1=v, lang ignored)
-            return tv.vval(c)
+            return c.view("v")
         if sk == tv.K_DATETIME:
             # k=6 spans dateTime/date (generic rank 4, by timestamp) AND
             # xsd:time (generic rank 6, by datatype-then-lexical) — a
             # bare timestamp key would interleave times with dates, so
             # keep a 4-field struct but with single-branch fields
             on_ts = c["dt"].isin(XSD_DATETIME, XSD_DATE)
-            return F.when(c.isNotNull(), F.struct(
+            return F.when(c.col.isNotNull(), F.struct(
                 F.when(on_ts, F.lit(4)).otherwise(F.lit(6))
                 .cast("tinyint").alias("rank"),
                 F.when(on_ts, as_timestamp(c).cast("double"))
@@ -93,6 +94,6 @@ def sort_key(c: Column) -> Column:
     )
     s2 = F.when(rank == 6, c["v"]).otherwise(F.lit(None).cast("string"))
     return F.when(
-        c.isNotNull(),
+        c.col.isNotNull(),
         F.struct(rank.alias("rank"), num.alias("num"), s1.alias("s1"), s2.alias("s2")),
     )

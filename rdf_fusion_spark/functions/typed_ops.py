@@ -14,7 +14,8 @@ FILTER (reference: lib/functions/src/builtin/native/effective_boolean_value.rs).
 
 from __future__ import annotations
 
-from typing import Optional
+from dataclasses import dataclass
+from typing import Callable, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -58,18 +59,44 @@ RANK_DOUBLE = K_DOUBLE
 
 
 # ---------------------------------------------------------------------------
-# static kinds — compile-time type specialization
+# TermExpr — a compiled term expression and what is known about it
 #
-# A term Column can carry a *static kind* tag: a Python-side promise that
-# every NON-NULL value of the column has the given k (and, for SK_IRI /
-# SK_BNODE, term type). Sources of truth: the relational scan (column dtypes
-# are known), term constructors (the result kind is known by construction),
-# and constant terms. Tagged operands compile to single-branch expressions
-# instead of the generic CASE ladder — the Spark analogue of the reference's
-# per-variant dispatch over its dense-union encoding
-# (lib/functions/src/scalar/dispatch/binary.rs). Untagged columns fall back
-# to the generic ladder, so a lost tag is a missed optimization, never a
-# wrong answer.
+# Every term-valued SPARQL expression compiles to one frozen TermExpr.
+# `col` is the term-struct Column (terms.TERM_TYPE); the other fields are
+# facts its producer knows by construction, named as on
+# plans/join.VarInfo:
+#
+# * kind — the static kind: a promise that every NON-NULL value has this k
+#   (and, for SK_IRI / SK_BNODE, term type). Sources of truth: the
+#   relational scan (column dtypes are known), term constructors (the
+#   result kind is known by construction) and constants. Kinded operands
+#   compile to single-branch expressions instead of the generic CASE
+#   ladder — the Spark analogue of the reference's per-variant dispatch
+#   over its dense-union encoding (lib/functions/src/scalar/dispatch/
+#   binary.rs).
+# * vcanon — the value-canonical marker (VarInfo.vcanon): the non-NULL
+#   terms' lexical/datatype are pure functions of the typed value fields.
+# * x / d / v / ts — raw channels: the native expression a constructor
+#   built the struct's typed field from (double / decimal / string /
+#   timestamp). Consumers read the channel (view) instead of a struct-field
+#   extraction, so Catalyst can PRUNE the 8-field struct build entirely
+#   when only the value is consumed — the struct materialization per
+#   intermediate arithmetic node was the largest per-row cost of
+#   computed-value queries (q3's ?price*(1-?disc): two 8-field structs per
+#   row built only to read back `.x`; guide §1.2-2 per-task work, §2.3
+#   narrower types).
+#
+# x, v and ts are NULL exactly when the term is NULL (every constructor
+# wraps its struct in `F.when(raw.isNotNull(), ...)` over the value the
+# channel is cast from), so null-guards may read them (witness). d is not
+# a null witness: int_term over a decimal(38,0) SUM total of 1e20 or more
+# keeps the term but its decimal(38,18) cast overflows (NULL, or an error
+# under ANSI mode).
+#
+# Every fact is optional and only narrows what consumers emit: a record
+# carrying the bare `col` takes the generic ladders over the struct
+# fields and yields the same answers, so a dropped fact is a missed
+# optimization, never a wrong answer.
 # ---------------------------------------------------------------------------
 
 SK_PLAIN = 8    # xsd:string literal, lang guaranteed NULL
@@ -94,117 +121,60 @@ SK_NULL = 120
 # compounds exponentially when Catalyst inlines through Project chains.
 SK_NUM = 110
 
-
-def skind(c: Column):
-    """The static kind of a column, or None if unknown.
-
-    Reads the instance __dict__ directly: Column.__getattr__ would turn a
-    plain getattr for a missing attribute into a struct-field access column.
-    """
-    try:
-        return c.__dict__.get("_rf_sk")
-    except AttributeError:  # pragma: no cover
-        return None
+_CHANNELS = ("x", "d", "v", "ts")
 
 
-def tag(c: Column, sk) -> Column:
-    """Attach a static kind tag to a Column (no-op for sk=None)."""
-    if sk is not None:
-        c._rf_sk = sk
-    return c
+@dataclass(frozen=True, eq=False)
+class TermExpr:
+    """A compiled term expression: the struct Column plus its facts."""
+    col: Column
+    kind: Optional[int] = None
+    vcanon: bool = False
+    x: Optional[Column] = None
+    d: Optional[Column] = None
+    v: Optional[Column] = None
+    ts: Optional[Column] = None
+
+    def __getitem__(self, field: str) -> Column:
+        """A field of the term struct (the generic path's read)."""
+        return self.col[field]
+
+    def view(self, field: str) -> Column:
+        """The typed field x/d/v/ts: its raw channel when the producer
+        supplied one, else the struct field."""
+        raw = getattr(self, field)
+        return self.col[field] if raw is None else raw
+
+    def witness(self) -> Column:
+        """A Column that is NULL exactly when the term is: the first of
+        the x, v, ts channels present (never d, see above), else the
+        struct itself."""
+        for f in ("x", "v", "ts"):
+            raw = getattr(self, f)
+            if raw is not None:
+                return raw
+        return self.col
+
+    def channels(self) -> dict:
+        return {f: getattr(self, f) for f in _CHANNELS
+                if getattr(self, f) is not None}
+
+    def rehome(self, place: Callable[[Column, str], str]) -> "TermExpr":
+        """The same facts over named columns. place(expr, field) puts
+        expr on a column and returns its name; field is "" for the term
+        itself, else the channel's name. Consumers then read __ex_N_x
+        instead of __ex_N.x, so Catalyst prunes the struct column when
+        only the value is used."""
+        return TermExpr(F.col(place(self.col, "")), self.kind, self.vcanon,
+                        **{f: F.col(place(e, f))
+                           for f, e in self.channels().items()})
 
 
-def is_vc(c: Column) -> bool:
-    """True when the column carries the value-canonical marker (see
-    plans/join.py VarInfo.vcanon): its non-NULL terms' lexical/datatype
-    are pure functions of the typed value fields. Reads __dict__
-    directly for the same reason skind() does."""
-    try:
-        return bool(c.__dict__.get("_rf_vc"))
-    except AttributeError:  # pragma: no cover
-        return False
-
-
-def mark_vc(c: Column) -> Column:
-    """Attach the value-canonical marker (numeric term constructors and
-    provably-canonical constants only)."""
-    c._rf_vc = True
-    return c
-
-
-# ---------------------------------------------------------------------------
-# raw-value side-channel — term CONSTRUCTORS attach the native expression
-# their typed field was built from (`_rf_x` double / `_rf_d` decimal /
-# `_rf_v` string) to the returned Column object. Consumers (the as_* views,
-# the static comparison/arithmetic branches) read the raw expression
-# instead of a struct-field extraction, so Catalyst can PRUNE the 8-field
-# struct build entirely when only the value is consumed — the struct
-# materialization per intermediate arithmetic node was the largest
-# per-row cost of computed-value queries (q3's ?price*(1-?disc): two
-# 8-field structs per row built only to read back `.x`; guide §1.2-2
-# per-task work, §2.3 narrower types). Invariant required of every
-# attach site: the raw expression is NULL exactly when the term struct
-# is NULL (all constructors wrap `F.when(raw.isNotNull(), struct)`), so
-# null-guards may read the raw column. The attributes ride the Column
-# object only — any alias()/F.col() round trip drops them, which is
-# always safe (consumers fall back to the struct field).
-# ---------------------------------------------------------------------------
-
-def _raw(c: Column, key: str):
-    try:
-        return c.__dict__.get(key)
-    except AttributeError:  # pragma: no cover
-        return None
-
-
-def xval(c: Column) -> Column:
-    """The term's double view, bypassing the struct when the constructor
-    exposed it (NULL iff the term is NULL — constructor invariant)."""
-    r = _raw(c, "_rf_x")
-    return r if r is not None else c["x"]
-
-
-def dval(c: Column) -> Column:
-    r = _raw(c, "_rf_d")
-    return r if r is not None else c["d"]
-
-
-def vval(c: Column) -> Column:
-    r = _raw(c, "_rf_v")
-    return r if r is not None else c["v"]
-
-
-def tsval(c: Column) -> Column:
-    r = _raw(c, "_rf_ts")
-    return r if r is not None else c["ts"]
-
-
-def nnval(c: Column) -> Column:
-    """isNotNull via the cheapest raw channel (exact: constructors null
-    the struct exactly when the attached raw expression is null)."""
-    for k in ("_rf_x", "_rf_d", "_rf_v", "_rf_ts"):
-        r = _raw(c, k)
-        if r is not None:
-            return r.isNotNull()
-    return c.isNotNull()
-
-
-def raw_channels(c: Column) -> dict:
-    """The raw-value attachments present on c (for interners to re-home
-    onto named columns)."""
-    try:
-        d = c.__dict__
-    except AttributeError:  # pragma: no cover
-        return {}
-    return {k: d[k] for k in ("_rf_x", "_rf_d", "_rf_v", "_rf_ts") if k in d}
-
-
-def attach_raw(c: Column, **kw) -> Column:
-    """Attach raw-value channels (x=, d=, v=, ts=); None values skipped."""
-    for k, e in kw.items():
-        if e is not None:
-            c.__dict__[f"_rf_{k}"] = e
-    return c
+def as_term(c) -> TermExpr:
+    """A bare term-struct Column as a record without facts; a record as
+    itself. Only for the boundaries that take either: custom-function
+    builders (functions/registry.py) and lexical_of's outside callers."""
+    return c if isinstance(c, TermExpr) else TermExpr(c)
 
 
 def _sk_numeric(sk) -> bool:
@@ -220,60 +190,60 @@ def _sk_stringish(sk) -> bool:
     return sk in (K_STRING, SK_PLAIN)
 
 
-def is_numeric(c: Column) -> Column:
-    sk = skind(c)
+def is_numeric(c: TermExpr) -> Column:
+    sk = c.kind
     if sk is not None:
-        return nnval(c) if _sk_numeric(sk) else F.lit(False)
+        return c.witness().isNotNull() if _sk_numeric(sk) else F.lit(False)
     return c["k"].isNotNull() & (c["k"] <= K_DOUBLE)
 
 
-def numeric_rank(c: Column) -> Column:
+def numeric_rank(c: TermExpr) -> Column:
     """0=integer family, 1=decimal, 2=float, 3=double; NULL if not numeric."""
-    sk = skind(c)
+    sk = c.kind
     if sk is not None:
         if sk == SK_NUM:
-            return F.when(c.isNotNull(), c["k"].cast("int"))
+            return F.when(c.col.isNotNull(), c["k"].cast("int"))
         if _sk_numeric(sk):
-            return F.when(nnval(c), F.lit(sk).cast("int"))
+            return F.when(c.witness().isNotNull(), F.lit(sk).cast("int"))
         return F.lit(None).cast("int")
     return F.when(c["k"] <= K_DOUBLE, c["k"].cast("int"))
 
 
-def as_double(c: Column) -> Column:
+def as_double(c: TermExpr) -> Column:
     """Numeric value as double; NULL (error) for non-numerics / ill-typed."""
-    sk = skind(c)
+    sk = c.kind
     if sk is not None:
-        return xval(c) if _sk_numeric(sk) else None_x()
+        return c.view("x") if _sk_numeric(sk) else None_x()
     return F.when(c["k"] <= K_DOUBLE, c["x"])
 
 
-def as_long(c: Column) -> Column:
-    sk = skind(c)
+def as_long(c: TermExpr) -> Column:
+    sk = c.kind
     if sk is not None:
         if sk == K_INTEGER:
-            return dval(c).try_cast("long")
+            return c.view("d").try_cast("long")
         if sk == SK_NUM:
             return F.when(c["k"] == K_INTEGER, c["d"].try_cast("long"))
         return F.lit(None).cast("long")
     return F.when(c["k"] == K_INTEGER, c["d"].try_cast("long"))
 
 
-def as_decimal(c: Column) -> Column:
-    sk = skind(c)
+def as_decimal(c: TermExpr) -> Column:
+    sk = c.kind
     if sk is not None:
         if sk == SK_NUM:
             return F.when(c["k"] <= K_DECIMAL, c["d"])
-        return dval(c) if sk <= K_DECIMAL else None_d()
+        return c.view("d") if sk <= K_DECIMAL else None_d()
     return F.when(c["k"] <= K_DECIMAL, c["d"])
 
 
-def as_boolean(c: Column) -> Column:
+def as_boolean(c: TermExpr) -> Column:
     """xsd:boolean value; NULL for anything else (incl. bad lexicals)."""
-    sk = skind(c)
+    sk = c.kind
     if sk is not None and sk != K_BOOLEAN:
         return F.lit(None).cast("boolean")
     if sk == K_BOOLEAN:
-        x = xval(c)
+        x = c.view("x")
         return (F.when(x == 1.0, F.lit(True))
                 .when(x == 0.0, F.lit(False)))
     b = (F.when(c["x"] == 1.0, F.lit(True))
@@ -281,35 +251,35 @@ def as_boolean(c: Column) -> Column:
     return F.when(c["k"] == K_BOOLEAN, b)
 
 
-def as_timestamp(c: Column) -> Column:
+def as_timestamp(c: TermExpr) -> Column:
     """xsd:dateTime/date value as a session-UTC timestamp (offset applied)."""
-    sk = skind(c)
+    sk = c.kind
     if sk is not None:
         return c["ts"] if sk == K_DATETIME else None_ts()
     return F.when(c["k"] == K_DATETIME, c["ts"])
 
 
-def as_string(c: Column) -> Column:
+def as_string(c: TermExpr) -> Column:
     """String value of simple/xsd:string/lang literals; NULL otherwise
     (argument-compatibility guard for string functions)."""
-    sk = skind(c)
+    sk = c.kind
     if sk is not None:
-        return vval(c) if _sk_stringish(sk) else _null_str()
+        return c.view("v") if _sk_stringish(sk) else _null_str()
     return F.when(c["k"] == K_STRING, c["v"])
 
 
-def is_string_like(c: Column) -> Column:
-    sk = skind(c)
+def is_string_like(c: TermExpr) -> Column:
+    sk = c.kind
     if sk is not None:
-        return nnval(c) if _sk_stringish(sk) else F.lit(False)
+        return c.witness().isNotNull() if _sk_stringish(sk) else F.lit(False)
     return c["k"].isNotNull() & (c["k"] == K_STRING)
 
 
-def is_plain_string(c: Column) -> Column:
-    sk = skind(c)
+def is_plain_string(c: TermExpr) -> Column:
+    sk = c.kind
     if sk is not None:
         if sk == SK_PLAIN:
-            return nnval(c)
+            return c.witness().isNotNull()
         if sk != K_STRING:
             return F.lit(False)
     return (c["k"] == K_STRING) & c["lang"].isNull()
@@ -319,25 +289,25 @@ def is_plain_string(c: Column) -> Column:
 # Effective boolean value
 # ---------------------------------------------------------------------------
 
-def ebv(c: Column) -> Column:
+def ebv(c: TermExpr) -> Column:
     """SPARQL effective boolean value; NULL = type error.
 
     reference: lib/functions/src/builtin/native/effective_boolean_value.rs:98-130
     """
-    sk = skind(c)
+    sk = c.kind
     if sk is not None:
         if sk == K_BOOLEAN:
-            body = F.coalesce(xval(c) == 1.0, F.lit(False))
+            body = F.coalesce(c.view("x") == 1.0, F.lit(False))
         elif _sk_numeric(sk):
-            x = xval(c)
+            x = c.view("x")
             body = F.coalesce((x != 0.0) & ~F.isnan(x), F.lit(False))
         elif _sk_stringish(sk):
-            body = F.length(vval(c)) > 0
+            body = F.length(c.view("v")) > 0
         else:
             return F.lit(None).cast("boolean")
-        return F.when(nnval(c), body)
+        return F.when(c.witness().isNotNull(), body)
     return (
-        F.when(c.isNull(), F.lit(None).cast("boolean"))
+        F.when(c.col.isNull(), F.lit(None).cast("boolean"))
         .when(c["k"] == K_BOOLEAN,
               # ill-typed boolean lexical (x NULL) → false per spec
               F.coalesce(c["x"] == 1.0, F.lit(False)))
@@ -348,15 +318,15 @@ def ebv(c: Column) -> Column:
     )
 
 
-def bool_term(b: Column) -> Column:
+def bool_term(b: Column) -> TermExpr:
     """Wrap a native boolean Column back into an xsd:boolean term
     (reference: NativeBooleanAsTerm, lib/functions/src/builtin/native/)."""
-    return attach_raw(tag(F.when(
+    return TermExpr(F.when(
         b.isNotNull(),
         term_struct(_tt(TT_LITERAL), F.when(b, "true").otherwise("false"),
                     lit_str(XSD_BOOLEAN), k=F.lit(K_BOOLEAN),
                     x=F.when(b, 1.0).otherwise(0.0), d=None_d(), ts=None_ts()),
-    ), K_BOOLEAN), x=F.when(b, 1.0).when(~b, 0.0))
+    ), K_BOOLEAN, x=F.when(b, 1.0).when(~b, 0.0))
 
 
 def None_d() -> Column:
@@ -428,22 +398,22 @@ def canon_double_string(x: Column) -> Column:
             .otherwise(x.cast("string")))
 
 
-def _typed_lex(c: Column) -> Column:
+def _typed_lex(c: TermExpr) -> Column:
     """Recompute a numeric/dateTime lexical from the typed fields."""
-    sk = skind(c)
+    sk = c.kind
     if sk == SK_NUM:
         sk = None  # rank varies at runtime → the generic k-ladder below
     if sk is not None:
         if sk <= K_DECIMAL:
-            return canon_decimal_string(dval(c))
+            return canon_decimal_string(c.view("d"))
         if sk == K_FLOAT:
             return F.regexp_replace(
-                canon_double_string(xval(c).cast("float").cast("double")),
+                canon_double_string(c.view("x").cast("float").cast("double")),
                 r"\.0$", "")
         if sk == K_DOUBLE:
-            return canon_double_string(xval(c))
+            return canon_double_string(c.view("x"))
         if sk == K_DATETIME:
-            return F.regexp_replace(tsval(c).cast("string"), " ", "T")
+            return F.regexp_replace(c.view("ts").cast("string"), " ", "T")
         return _null_str()
     return (
         F.when(c["k"] <= K_DECIMAL, canon_decimal_string(c["d"]))
@@ -464,78 +434,78 @@ def _sk_lazyable(sk) -> bool:
     return _sk_numeric(sk) or sk == K_DATETIME
 
 
-def lexical_of(c: Column) -> Column:
-    """The lexical form of a (possibly lazy) term."""
-    sk = skind(c)
+def lexical_of(c) -> Column:
+    """The lexical form of a (possibly lazy) term, record or bare Column."""
+    c = as_term(c)
+    sk = c.kind
     if sk is not None and not _sk_lazyable(sk):
         return c["v"]
     return F.coalesce(c["v"], _typed_lex(c))
 
 
-def materialize_lexical(c: Column) -> Column:
+def materialize_lexical(c: TermExpr) -> Column:
     """Fill a lazy term's v before it escapes expression scope."""
-    sk = skind(c)
+    sk = c.kind
     if sk is not None and not _sk_lazyable(sk):
-        return c  # only numeric/dateTime constructors emit lazy lexicals
-    needs = c.isNull() | c["v"].isNotNull()
-    out = F.when(
+        return c.col  # only numeric/dateTime constructors emit lazy lexicals
+    needs = c.col.isNull() | c["v"].isNotNull()
+    return F.when(
         ~needs if sk is not None else
-        (c.isNotNull() & c["v"].isNull()
+        (c.col.isNotNull() & c["v"].isNull()
          & ((c["k"] <= K_DOUBLE) | (c["k"] == K_DATETIME))),
         term_struct(c["t"], _typed_lex(c), c["dt"], c["lang"],
                     k=c["k"], x=c["x"], d=c["d"], ts=c["ts"]),
-    ).otherwise(c)
-    return tag(out, sk)
+    ).otherwise(c.col)
 
 
 def _null_str() -> Column:
     return F.lit(None).cast("string")
 
 
-def int_term(n: Column) -> Column:
+def int_term(n: Column) -> TermExpr:
     v = _null_str() if _lazy() else n.cast("string")
-    return attach_raw(mark_vc(tag(F.when(
+    return TermExpr(F.when(
         n.isNotNull(),
         term_struct(_tt(TT_LITERAL), v, lit_str(XSD_INTEGER),
                     k=F.lit(K_INTEGER), x=n.cast("double"),
                     d=n.cast(DECIMAL_T), ts=None_ts()),
-    ), K_INTEGER)), x=n.cast("double"), d=n.cast(DECIMAL_T))
+    ), K_INTEGER, vcanon=True, x=n.cast("double"), d=n.cast(DECIMAL_T))
 
 
-def double_term(x: Column) -> Column:
+def double_term(x: Column) -> TermExpr:
     v = _null_str() if _lazy() else canon_double_string(x)
-    return attach_raw(mark_vc(tag(F.when(
+    return TermExpr(F.when(
         x.isNotNull(),
         term_struct(_tt(TT_LITERAL), v, lit_str(XSD_DOUBLE),
                     k=F.lit(K_DOUBLE), x=x.cast("double"), d=None_d(),
                     ts=None_ts()),
-    ), K_DOUBLE)), x=x.cast("double"))
+    ), K_DOUBLE, vcanon=True, x=x.cast("double"))
 
 
-def int_term_from_decimal(d: Column) -> Column:
+def int_term_from_decimal(d: Column) -> TermExpr:
     """xsd:integer term rebuilt from its exact decimal value field `d`
     (the MIN/MAX hash-agg decomposition path): no long roundtrip, so
     integer values beyond int64 survive; lexical lazy/canonical exactly
     like int_term (canon_decimal_string of an integer-valued decimal is
     the plain integer lexical)."""
     v = _null_str() if _lazy() else canon_decimal_string(d)
-    return attach_raw(mark_vc(tag(F.when(
+    return TermExpr(F.when(
         d.isNotNull(),
         term_struct(_tt(TT_LITERAL), v, lit_str(XSD_INTEGER),
                     k=F.lit(K_INTEGER), x=d.cast("double"), d=d,
                     ts=None_ts()),
-    ), K_INTEGER)), x=d.cast("double"), d=d)
+    ), K_INTEGER, vcanon=True, x=d.cast("double"), d=d)
 
 
-def decimal_term(x: Column) -> Column:
+def decimal_term(x: Column) -> TermExpr:
     x = x.cast(DECIMAL_T)
     v = _null_str() if _lazy() else canon_decimal_string(x)
-    return attach_raw(mark_vc(tag(F.when(
+    return TermExpr(F.when(
         x.isNotNull(),
         term_struct(_tt(TT_LITERAL), v, lit_str(XSD_DECIMAL),
                     k=F.lit(K_DECIMAL), x=x.cast("double"), d=x,
                     ts=None_ts()),
-    ), K_DECIMAL)), x=x.cast("double"), d=x)
+    ), K_DECIMAL, vcanon=True, x=x.cast("double"), d=x)
 
 
 def duration_lex(months: Column, secs: Column) -> Column:
@@ -570,7 +540,7 @@ def duration_lex(months: Column, secs: Column) -> Column:
     return F.when(zero, F.lit("PT0S")).otherwise(body)
 
 
-def duration_term(months: Column, secs: Column, dt: str = None) -> Column:
+def duration_term(months: Column, secs: Column, dt: str = None) -> TermExpr:
     """Build a duration term from (months, seconds); canonical lexical.
 
     reference: lib/model/src/xsd/duration.rs (months+seconds value model).
@@ -578,7 +548,7 @@ def duration_term(months: Column, secs: Column, dt: str = None) -> Column:
     from ..terms import XSD_DURATION
     months = months.cast("double")
     secs = secs.cast(DECIMAL_T)
-    return tag(F.when(
+    return TermExpr(F.when(
         months.isNotNull() & secs.isNotNull(),
         term_struct(_tt(TT_LITERAL), duration_lex(months, secs),
                     lit_str(dt or XSD_DURATION), k=F.lit(K_DURATION),
@@ -593,7 +563,7 @@ def duration_term(months: Column, secs: Column, dt: str = None) -> Column:
 # slightly more conservative than the spec's four-reference-dates rule,
 # so it can return "indeterminate" where the spec decides, but never the
 # opposite order. reference: lib/model/src/xsd/duration.rs partial_cmp.
-def _duration_cmp3(a: Column, b: Column) -> Column:
+def _duration_cmp3(a: TermExpr, b: TermExpr) -> Column:
     dm = (b["x"] - a["x"]).cast("double")            # months: b - a
     ds = (a["d"] - b["d"]).cast("double")            # seconds: a - b
     by_secs = (F.when(a["d"] < b["d"], -1).when(a["d"] > b["d"], 1)
@@ -608,19 +578,19 @@ def _duration_cmp3(a: Column, b: Column) -> Column:
     )
 
 
-def string_term(s: Column) -> Column:
-    return attach_raw(
-        tag(F.when(s.isNotNull(),
-                   term_struct(_tt(TT_LITERAL), s, lit_str(XSD_STRING),
-                               k=F.lit(K_STRING), x=None_x(), d=None_d(),
-                               ts=None_ts())), SK_PLAIN), v=s)
+def string_term(s: Column) -> TermExpr:
+    return TermExpr(
+        F.when(s.isNotNull(),
+               term_struct(_tt(TT_LITERAL), s, lit_str(XSD_STRING),
+                           k=F.lit(K_STRING), x=None_x(), d=None_d(),
+                           ts=None_ts())), SK_PLAIN, v=s)
 
 
 # ---------------------------------------------------------------------------
 # Value-space equality and ordering
 # ---------------------------------------------------------------------------
 
-def rdf_equal(a: Column, b: Column, flat: bool = False) -> Column:
+def rdf_equal(a: TermExpr, b: TermExpr, flat: bool = False) -> Column:
     """SPARQL '=' (value space), 3-valued: NULL = error.
 
     reference: lib/functions/src/scalar/comparison/equal.rs semantics —
@@ -641,19 +611,19 @@ def rdf_equal(a: Column, b: Column, flat: bool = False) -> Column:
         # (XPath op:numeric-equal; Spark's NaN = NaN is TRUE)
         return (x == y) & ~F.isnan(x) & ~F.isnan(y)
 
-    sa, sb = skind(a), skind(b)
+    sa, sb = a.kind, b.kind
     if sa is not None and sb is not None:
-        null_guard = ~nnval(a) | ~nnval(b)
+        null_guard = ~a.witness().isNotNull() | ~b.witness().isNotNull()
         if _sk_numeric(sa) and _sk_numeric(sb):
             if _sk_rank_static(sa) and _sk_rank_static(sb):
-                body = (dval(a) == dval(b)) if (sa <= K_DECIMAL
-                                                and sb <= K_DECIMAL) \
-                    else eqx(xval(a), xval(b))
+                body = (a.view("d") == b.view("d")) \
+                    if sa <= K_DECIMAL and sb <= K_DECIMAL \
+                    else eqx(a.view("x"), b.view("x"))
             else:  # SK_NUM operand: rank resolved per row
                 body = F.when((a["k"] <= K_DECIMAL) & (b["k"] <= K_DECIMAL),
                               a["d"] == b["d"]).otherwise(eqx(a["x"], b["x"]))
         elif sa == SK_PLAIN and sb == SK_PLAIN:
-            body = vval(a) == vval(b)
+            body = a.view("v") == b.view("v")
         elif sa == K_DATETIME and sb == K_DATETIME:
             # xsd:dateTime/date/time share the ts view but are DISTINCT
             # value spaces: cross-type comparison is a type error
@@ -666,13 +636,13 @@ def rdf_equal(a: Column, b: Column, flat: bool = False) -> Column:
             body = (a["x"] == b["x"]) & (a["d"] == b["d"])
         elif sa in (SK_IRI, SK_BNODE) or sb in (SK_IRI, SK_BNODE):
             # node-kind mismatch or identity comparison: plain equality
-            body = (vval(a) == vval(b)) if sa == sb else F.lit(False)
+            body = (a.view("v") == b.view("v")) if sa == sb else F.lit(False)
         elif sa == K_STRING or sb == K_STRING:
             # possibly lang-tagged strings vs anything stringish
             body = None  # fall through to generic below
         else:
             # two literals of different value spaces: error unless identical
-            body = F.when(a == b, F.lit(True))
+            body = F.when(a.col == b.col, F.lit(True))
         if body is not None:
             if flat:
                 return (~null_guard) & body
@@ -686,7 +656,7 @@ def rdf_equal(a: Column, b: Column, flat: bool = False) -> Column:
                & (a["dt"] == b["dt"]))
     both_dur = (a["k"] == K_DURATION) & (b["k"] == K_DURATION)
     return (
-        F.when(a.isNull() | b.isNull(), F.lit(None).cast("boolean"))
+        F.when(a.col.isNull() | b.col.isNull(), F.lit(None).cast("boolean"))
         .when(both_num,
               # exact within decimal range; doubles compared as double
               F.when((a["k"] <= K_DECIMAL) & (b["k"] <= K_DECIMAL),
@@ -697,18 +667,18 @@ def rdf_equal(a: Column, b: Column, flat: bool = False) -> Column:
         .when(both_bool, as_boolean(a) == as_boolean(b))
         .when(both_dt, a["ts"] == b["ts"])
         .when(both_dur, (a["x"] == b["x"]) & (a["d"] == b["d"]))
-        .when((a["t"] != TT_LITERAL) | (b["t"] != TT_LITERAL), a == b)
+        .when((a["t"] != TT_LITERAL) | (b["t"] != TT_LITERAL), a.col == b.col)
         # both literals, at least one of unknown/unsupported datatype:
-        .when(a == b, F.lit(True))
+        .when(a.col == b.col, F.lit(True))
         .otherwise(F.lit(None).cast("boolean"))
     )
 
 
-def rdf_not_equal(a: Column, b: Column) -> Column:
+def rdf_not_equal(a: TermExpr, b: TermExpr) -> Column:
     return ~rdf_equal(a, b)
 
 
-def rdf_compare(a: Column, b: Column) -> Column:
+def rdf_compare(a: TermExpr, b: TermExpr) -> Column:
     """Three-way value comparison for < <= > >=: -1/0/1, NULL = not comparable.
 
     Comparable pairs per SPARQL 1.1 operator table: numeric/numeric,
@@ -723,19 +693,19 @@ def rdf_compare(a: Column, b: Column) -> Column:
         # NaN semantics would sort it greater than everything instead)
         return F.when(F.isnan(x) | F.isnan(y), F.lit(9)).otherwise(cmp3(x, y))
 
-    sa, sb = skind(a), skind(b)
+    sa, sb = a.kind, b.kind
     if sa is not None and sb is not None:
         if _sk_numeric(sa) and _sk_numeric(sb):
             if _sk_rank_static(sa) and _sk_rank_static(sb):
-                body = cmp3(dval(a), dval(b)) if (sa <= K_DECIMAL
-                                                  and sb <= K_DECIMAL) \
-                    else cmp3x(xval(a), xval(b))
+                body = cmp3(a.view("d"), b.view("d")) \
+                    if sa <= K_DECIMAL and sb <= K_DECIMAL \
+                    else cmp3x(a.view("x"), b.view("x"))
             else:  # SK_NUM operand: rank resolved per row
                 body = F.when((a["k"] <= K_DECIMAL) & (b["k"] <= K_DECIMAL),
                               cmp3(a["d"], b["d"])) \
                     .otherwise(cmp3x(a["x"], b["x"]))
         elif sa == SK_PLAIN and sb == SK_PLAIN:
-            body = cmp3(vval(a), vval(b))
+            body = cmp3(a.view("v"), b.view("v"))
         elif sa == K_BOOLEAN and sb == K_BOOLEAN:
             body = cmp3(as_boolean(a).cast("int"), as_boolean(b).cast("int"))
         elif sa == K_DATETIME and sb == K_DATETIME:
@@ -748,7 +718,8 @@ def rdf_compare(a: Column, b: Column) -> Column:
         else:
             return F.lit(None).cast("int")  # statically not comparable
         if body is not None:
-            return F.when(nnval(a) & nnval(b), body)
+            return F.when(a.witness().isNotNull() & b.witness().isNotNull(),
+                          body)
 
     both_num = is_numeric(a) & is_numeric(b)
     both_str = is_plain_string(a) & is_plain_string(b)
@@ -762,7 +733,7 @@ def rdf_compare(a: Column, b: Column) -> Column:
                  & a["lang"].isNotNull() & (a["lang"] == b["lang"]))
 
     return (
-        F.when(a.isNull() | b.isNull(), F.lit(None).cast("int"))
+        F.when(a.col.isNull() | b.col.isNull(), F.lit(None).cast("int"))
         .when(both_num,
               F.when((a["k"] <= K_DECIMAL) & (b["k"] <= K_DECIMAL),
                      cmp3(a["d"], b["d"]))
@@ -776,7 +747,7 @@ def rdf_compare(a: Column, b: Column) -> Column:
     )
 
 
-def _rel_direct(a: Column, b: Column, op: str,
+def _rel_direct(a: TermExpr, b: TermExpr, op: str,
                 flat: bool = False) -> Optional[Column]:
     """Direct relational predicate for statically-typed operands.
 
@@ -794,7 +765,7 @@ def _rel_direct(a: Column, b: Column, op: str,
     false (XPath unordered), dateTime across value spaces → NULL.
     Returns None (generic fallback) for every case the static analysis
     cannot prove: durations, possibly-lang-tagged strings, SK_NUM."""
-    sa, sb = skind(a), skind(b)
+    sa, sb = a.kind, b.kind
     if sa is None or sb is None:
         return None
 
@@ -806,14 +777,14 @@ def _rel_direct(a: Column, b: Column, op: str,
         if not (_sk_rank_static(sa) and _sk_rank_static(sb)):
             return None
         if sa <= K_DECIMAL and sb <= K_DECIMAL:
-            body = rel(dval(a), dval(b))
+            body = rel(a.view("d"), b.view("d"))
         else:
             # NaN is UNORDERED (false for every operator) — Spark's
             # native comparison would instead sort NaN above everything
-            xa, xb = xval(a), xval(b)
+            xa, xb = a.view("x"), b.view("x")
             body = (~F.isnan(xa)) & (~F.isnan(xb)) & rel(xa, xb)
     elif sa == SK_PLAIN and sb == SK_PLAIN:
-        body = rel(vval(a), vval(b))
+        body = rel(a.view("v"), b.view("v"))
     elif sa == K_BOOLEAN and sb == K_BOOLEAN:
         body = rel(as_boolean(a).cast("int"), as_boolean(b).cast("int"))
     elif sa == K_DATETIME and sb == K_DATETIME:
@@ -821,33 +792,34 @@ def _rel_direct(a: Column, b: Column, op: str,
             else F.when(a["dt"] == b["dt"], rel(a["ts"], b["ts"]))
     else:
         return None
+    bound = a.witness().isNotNull() & b.witness().isNotNull()
     if flat:
         # positive-filter context (NULL ≡ false): a plain conjunction —
         # the shape DataSourceStrategy can translate into a pushed
         # parquet range predicate, unlike any CASE form
-        return nnval(a) & nnval(b) & body
-    return F.when(nnval(a) & nnval(b), body)
+        return bound & body
+    return F.when(bound, body)
 
 
 # exact comparisons against the -1/0/1 outcomes (not range tests): the
 # NaN-unordered sentinel 9 must make every operator FALSE, and NULL
 # (type error) must stay NULL
-def rdf_less(a: Column, b: Column, flat: bool = False) -> Column:
+def rdf_less(a: TermExpr, b: TermExpr, flat: bool = False) -> Column:
     d = _rel_direct(a, b, "lt", flat)
     return d if d is not None else rdf_compare(a, b) == -1
 
 
-def rdf_less_eq(a: Column, b: Column, flat: bool = False) -> Column:
+def rdf_less_eq(a: TermExpr, b: TermExpr, flat: bool = False) -> Column:
     d = _rel_direct(a, b, "le", flat)
     return d if d is not None else rdf_compare(a, b).isin(-1, 0)
 
 
-def rdf_greater(a: Column, b: Column, flat: bool = False) -> Column:
+def rdf_greater(a: TermExpr, b: TermExpr, flat: bool = False) -> Column:
     d = _rel_direct(a, b, "gt", flat)
     return d if d is not None else rdf_compare(a, b) == 1
 
 
-def rdf_greater_eq(a: Column, b: Column, flat: bool = False) -> Column:
+def rdf_greater_eq(a: TermExpr, b: TermExpr, flat: bool = False) -> Column:
     d = _rel_direct(a, b, "ge", flat)
     return d if d is not None else rdf_compare(a, b).isin(0, 1)
 
@@ -867,7 +839,7 @@ def _double_div(xa: Column, xb: Column) -> Column:
             .otherwise(F.lit(float("-inf"))))
 
 
-def _binary_numeric(a: Column, b: Column, op: str) -> Column:
+def _binary_numeric(a: TermExpr, b: TermExpr, op: str) -> TermExpr:
     """a OP b with the XPath promotion ladder; result is a term struct.
 
     integer OP integer → integer (except '/': decimal);
@@ -875,16 +847,16 @@ def _binary_numeric(a: Column, b: Column, op: str) -> Column:
     (float kept as double internally; lexical forms match either way).
     reference: lib/functions/src/scalar/numeric/add.rs et al.
     """
-    sa, sb = skind(a), skind(b)
+    sa, sb = a.kind, b.kind
     if sa == SK_NULL or sb == SK_NULL:
         # an ALWAYS-unbound operand: the whole op is statically an error
         # — fold NOW so nested arithmetic over unbound vars never builds
         # a tree at all (see SK_NULL; the result is itself always-NULL,
         # so enclosing ops keep folding)
-        return tag(F.lit(None).cast(TERM_DDL), SK_NULL)
+        return TermExpr(F.lit(None).cast(TERM_DDL), SK_NULL)
     if sa is not None and sb is not None:
         if not (_sk_numeric(sa) and _sk_numeric(sb)):
-            return F.lit(None).cast(TERM_DDL)
+            return TermExpr(F.lit(None).cast(TERM_DDL))
         if not (_sk_rank_static(sa) and _sk_rank_static(sb)):
             # an SK_NUM operand: both promised numeric, rank per row —
             # 2-branch runtime ladder, no is_numeric guards
@@ -901,26 +873,27 @@ def _binary_numeric(a: Column, b: Column, op: str) -> Column:
                 dres = {"+": da + db, "-": da - db, "*": da * db}[op]
                 xres = {"+": xa + xb, "-": xa - xb, "*": xa * xb}[op]
             out = (
-                F.when(rank >= RANK_FLOAT, double_term(xres))
+                F.when(rank >= RANK_FLOAT, double_term(xres).col)
                 .when((rank == RANK_DECIMAL) | F.lit(op == "/"),
-                      decimal_term(dres))
+                      decimal_term(dres).col)
             )
             if op != "/":
-                out = out.otherwise(int_term(lres))
-            return tag(F.when(a.isNotNull() & b.isNotNull(), out), SK_NUM)
+                out = out.otherwise(int_term(lres).col)
+            return TermExpr(F.when(a.col.isNotNull() & b.col.isNotNull(), out),
+                            SK_NUM)
         rank = max(sa, sb)
         if rank >= RANK_FLOAT:
-            xa, xb = xval(a), xval(b)
+            xa, xb = a.view("x"), b.view("x")
             res = {"+": xa + xb, "-": xa - xb, "*": xa * xb,
                    "/": _double_div(xa, xb)}[op]
             return double_term(res)
         if rank == RANK_DECIMAL or op == "/":
-            da, db = dval(a), dval(b)
+            da, db = a.view("d"), b.view("d")
             if op == "/":
                 return decimal_term(F.when(db != 0, da / db))
             res = {"+": da + db, "-": da - db, "*": da * db}[op]
             return decimal_term(res)
-        la, lb = dval(a).try_cast("long"), dval(b).try_cast("long")
+        la, lb = a.view("d").try_cast("long"), b.view("d").try_cast("long")
         res = {"+": F.try_add(la, lb), "-": F.try_subtract(la, lb),
                "*": F.try_multiply(la, lb)}[op]
         return int_term(res)
@@ -948,16 +921,17 @@ def _binary_numeric(a: Column, b: Column, op: str) -> Column:
     valid = is_numeric(a) & is_numeric(b)
     out = (
         F.when(~valid, F.lit(None).cast(TERM_DDL))
-        .when(rank >= RANK_FLOAT, double_term(xres))
-        .when((rank == RANK_DECIMAL) | F.lit(op == "/"), decimal_term(dres))
+        .when(rank >= RANK_FLOAT, double_term(xres).col)
+        .when((rank == RANK_DECIMAL) | F.lit(op == "/"),
+              decimal_term(dres).col)
     )
     # '/' has no integer branch: integer ÷ integer → decimal per the spec
     if op != "/":
-        out = out.otherwise(int_term(lres))
-    return tag(out, SK_NUM)
+        out = out.otherwise(int_term(lres).col)
+    return TermExpr(out, SK_NUM)
 
 
-def _duration_sum(a: Column, b: Column, sign: int) -> Column:
+def _duration_sum(a: TermExpr, b: TermExpr, sign: int) -> TermExpr:
     """duration ± duration → duration term; a MIXED-SIGN result (months
     and seconds nonzero with opposite signs) is an expression ERROR: the
     value has no XSD lexical representation, and the reference refuses
@@ -970,7 +944,7 @@ def _duration_sum(a: Column, b: Column, sign: int) -> Column:
     return duration_term(F.when(ok, m), F.when(ok, s))
 
 
-def _datetime_shift(dtc: Column, dur: Column, sign: int) -> Column:
+def _datetime_shift(dtc: TermExpr, dur: TermExpr, sign: int) -> Column:
     """dateTime ± duration: add the month part calendar-aware first, then
     the seconds part (XPath op:add-yearMonthDuration-to-dateTime followed
     by op:add-dayTimeDuration-to-dateTime; reference:
@@ -987,7 +961,7 @@ def _datetime_shift(dtc: Column, dur: Column, sign: int) -> Column:
                     k=F.lit(K_DATETIME), x=None_x(), d=None_d(), ts=shifted))
 
 
-def _datetime_diff(a: Column, b: Column) -> Column:
+def _datetime_diff(a: TermExpr, b: TermExpr) -> TermExpr:
     """dateTime - dateTime → xsd:dayTimeDuration (op:subtract-dateTimes)."""
     from ..terms import XSD_DAY_TIME_DURATION
     micros = F.unix_micros(a["ts"]) - F.unix_micros(b["ts"])
@@ -995,18 +969,18 @@ def _datetime_diff(a: Column, b: Column) -> Column:
     return duration_term(F.lit(0.0), secs, XSD_DAY_TIME_DURATION)
 
 
-def _temporal_arith(a: Column, b: Column, op: str) -> Column:
+def _temporal_arith(a: TermExpr, b: TermExpr, op: str) -> TermExpr:
     """'+'/'-' over dateTime/duration operand combinations; falls through
     to numeric promotion for everything else."""
-    sa, sb = skind(a), skind(b)
+    sa, sb = a.kind, b.kind
     if sa is not None and sb is not None:
         if sa == K_DATETIME and sb == K_DURATION:
-            return tag(_datetime_shift(a, b, +1 if op == "+" else -1),
-                       K_DATETIME)
+            return TermExpr(_datetime_shift(a, b, +1 if op == "+" else -1),
+                            K_DATETIME)
         if sa == K_DURATION and sb == K_DURATION:
             return _duration_sum(a, b, +1 if op == "+" else -1)
         if sa == K_DURATION and sb == K_DATETIME and op == "+":
-            return tag(_datetime_shift(b, a, +1), K_DATETIME)
+            return TermExpr(_datetime_shift(b, a, +1), K_DATETIME)
         if sa == K_DATETIME and sb == K_DATETIME and op == "-":
             return _datetime_diff(a, b)
         return _binary_numeric(a, b, op)
@@ -1016,35 +990,35 @@ def _temporal_arith(a: Column, b: Column, op: str) -> Column:
         F.when((a["k"] == K_DATETIME) & (b["k"] == K_DURATION),
                _datetime_shift(a, b, sign))
         .when((a["k"] == K_DURATION) & (b["k"] == K_DURATION),
-              _duration_sum(a, b, sign))
+              _duration_sum(a, b, sign).col)
     )
     if op == "+":
         out = out.when((a["k"] == K_DURATION) & (b["k"] == K_DATETIME),
                        _datetime_shift(b, a, +1))
     else:
         out = out.when((a["k"] == K_DATETIME) & (b["k"] == K_DATETIME),
-                       _datetime_diff(a, b))
-    return out.otherwise(num)
+                       _datetime_diff(a, b).col)
+    return TermExpr(out.otherwise(num.col))
 
 
-def rdf_add(a: Column, b: Column) -> Column:
+def rdf_add(a: TermExpr, b: TermExpr) -> TermExpr:
     return _temporal_arith(a, b, "+")
 
 
-def rdf_sub(a: Column, b: Column) -> Column:
+def rdf_sub(a: TermExpr, b: TermExpr) -> TermExpr:
     return _temporal_arith(a, b, "-")
 
 
-def rdf_mul(a: Column, b: Column) -> Column:
+def rdf_mul(a: TermExpr, b: TermExpr) -> TermExpr:
     return _binary_numeric(a, b, "*")
 
 
-def rdf_div(a: Column, b: Column) -> Column:
+def rdf_div(a: TermExpr, b: TermExpr) -> TermExpr:
     return _binary_numeric(a, b, "/")
 
 
-def _unary_numeric(a: Column, sign: int) -> Column:
-    sk = skind(a)
+def _unary_numeric(a: TermExpr, sign: int) -> TermExpr:
+    sk = a.kind
     if _sk_rank_static(sk):
         if sk >= RANK_FLOAT:
             return double_term(sign * a["x"])
@@ -1052,26 +1026,26 @@ def _unary_numeric(a: Column, sign: int) -> Column:
             return decimal_term(sign * a["d"])
         return int_term(sign * a["d"].try_cast("long"))
     if sk is not None and sk != SK_NUM:
-        return F.lit(None).cast(TERM_DDL)
+        return TermExpr(F.lit(None).cast(TERM_DDL))
     if sk == SK_NUM:
         # promised numeric: 3-branch runtime rank, no is_numeric guard
         out = (
-            F.when(a["k"] >= RANK_FLOAT, double_term(sign * a["x"]))
-            .when(a["k"] == RANK_DECIMAL, decimal_term(sign * a["d"]))
-            .otherwise(int_term(sign * a["d"].try_cast("long")))
+            F.when(a["k"] >= RANK_FLOAT, double_term(sign * a["x"]).col)
+            .when(a["k"] == RANK_DECIMAL, decimal_term(sign * a["d"]).col)
+            .otherwise(int_term(sign * a["d"].try_cast("long")).col)
         )
-        return tag(F.when(a.isNotNull(), out), SK_NUM)
+        return TermExpr(F.when(a.col.isNotNull(), out), SK_NUM)
     rank = numeric_rank(a)
-    return tag(
+    return TermExpr(
         F.when(rank.isNull(), F.lit(None).cast(TERM_DDL))
-        .when(rank >= RANK_FLOAT, double_term(sign * as_double(a)))
-        .when(rank == RANK_DECIMAL, decimal_term(sign * as_decimal(a)))
-        .otherwise(int_term(sign * as_long(a))), SK_NUM)
+        .when(rank >= RANK_FLOAT, double_term(sign * as_double(a)).col)
+        .when(rank == RANK_DECIMAL, decimal_term(sign * as_decimal(a)).col)
+        .otherwise(int_term(sign * as_long(a)).col), SK_NUM)
 
 
-def rdf_neg(a: Column) -> Column:
+def rdf_neg(a: TermExpr) -> TermExpr:
     return _unary_numeric(a, -1)
 
 
-def rdf_unary_plus(a: Column) -> Column:
+def rdf_unary_plus(a: TermExpr) -> TermExpr:
     return _unary_numeric(a, +1)

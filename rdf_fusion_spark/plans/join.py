@@ -33,6 +33,8 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.typed_ops import TermExpr
+
 # Split-union guard: total nullable shared vars across both sides; 2^k slice
 # pairs are materialized, so keep k small (k=3 → at most 8 equi joins).
 _SPLIT_UNION_MAX_NULLABLE = 3
@@ -83,7 +85,7 @@ class VarInfo:
     output leaves it at the default (the merge rules below).
 
     `bound` — guaranteed non-NULL in every row
-    `kind`  — static kind where known (typed_ops.skind codes): a promise
+    `kind`  — static kind where known (typed_ops.TermExpr.kind): a promise
               that every non-NULL value has that kind, letting expression
               compilation emit single-branch code
     """
@@ -240,7 +242,8 @@ def project_solution(sol: Solution, names: list, extra=()) -> Solution:
                     sol.pending_order)
 
 
-BoolCompiler = Callable[[object, Callable[[str], Column]], Column]
+# (filter expression, resolver of variable names to term records) -> bool
+BoolCompiler = Callable[[object, Callable[[str], TermExpr]], Column]
 
 
 def _compat(lc: Column, rc: Column) -> Column:
@@ -346,7 +349,8 @@ def _split_union_join(
                     return R[name]
                 return F.lit(None).cast(TERM_DDL)
 
-            cond = cond & compile_bool(filter_expr, resolve)
+            cond = cond & compile_bool(filter_expr,
+                                       lambda n: TermExpr(resolve(n)))
         return cond
 
     right_slices = list(_null_patterns(right.df, nr))
@@ -485,7 +489,8 @@ def join_solutions(
 
     if filter_expr is not None:
         assert compile_bool is not None
-        conds.append(compile_bool(filter_expr, resolve))
+        conds.append(compile_bool(filter_expr,
+                                  lambda n: TermExpr(resolve(n))))
 
     cond = F.lit(True)
     for c in conds:

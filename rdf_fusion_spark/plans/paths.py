@@ -154,7 +154,8 @@ def _const_self_pairs(ctx, graphs: Optional[DataFrame]) -> Optional[DataFrame]:
     one = spark.range(1)
     pair = None
     for t in dict.fromkeys(terms):
-        p = one.select(term_lit(t).alias(SRC), term_lit(t).alias(TGT))
+        p = one.select(term_lit(t).col.alias(SRC),
+                       term_lit(t).col.alias(TGT))
         pair = p if pair is None else pair.unionByName(p)
     if graphs is not None:
         pair = graphs.crossJoin(pair)

@@ -57,10 +57,8 @@ def _dedupe_normalized(sol: "Solution") -> DataFrame:
     if not cols:
         return sol.df.limit(1)
     df = sol.df
-    repl = {
-        c: tv.materialize_lexical(tv.tag(df[c], sol.kinds.get(c)))
-        for c in cols
-    }
+    repl = {c: tv.materialize_lexical(_var_term(df[c], sol.vars[c]))
+            for c in cols}
     return df.withColumns(repl).dropDuplicates(cols)
 
 
@@ -115,50 +113,54 @@ class Ctx:
 # expression plumbing
 # ---------------------------------------------------------------------------
 
-def _resolver(sol: Solution) -> Callable[[str], Column]:
-    def resolve(name: str) -> Column:
+# The two conversions between a variable's VarInfo and a compiled term
+# record: variables enter expressions through _var_term, and BIND and
+# aggregate outputs leave them through _var_info.
+def _var_term(col: Column, info: VarInfo) -> tv.TermExpr:
+    return tv.TermExpr(col, info.kind, info.vcanon)
+
+
+def _var_info(te: tv.TermExpr, bound: bool, expensive: bool) -> VarInfo:
+    return VarInfo(bound=bound, kind=te.kind, vcanon=te.vcanon,
+                   expensive=expensive)
+
+
+def _resolver(sol: Solution) -> Callable[[str], tv.TermExpr]:
+    def resolve(name: str) -> tv.TermExpr:
         info = sol.vars.get(name)
         if info is not None:
-            c = tv.tag(F.col(name), info.kind)
-            return tv.mark_vc(c) if info.vcanon else c
-        # provably unbound: tag the NULL constant so arithmetic /
-        # comparison folds statically instead of handing the optimizer
-        # an exponentially-inlinable literal tree (typed_ops.SK_NULL)
-        return tv.tag(NULL_TERM(), tv.SK_NULL)
+            return _var_term(F.col(name), info)
+        # provably unbound: the NULL constant of kind SK_NULL, so
+        # arithmetic / comparison folds statically instead of handing the
+        # optimizer an exponentially-inlinable literal tree
+        return tv.TermExpr(NULL_TERM(), tv.SK_NULL)
     return resolve
 
 
 class Interner:
     """Materializes each compiled subexpression as a named temp column so
     plans stay linear in expression size (see builtins._intern). Collect the
-    compiled Columns with __call__, read the augmented frame from .df, and
-    drop .names afterwards."""
+    compiled records with __call__ (plain Columns with .column), read the
+    augmented frame from .df, and drop .names afterwards."""
 
     def __init__(self, df: DataFrame, ctx: "Ctx"):
         self.df = df
         self.ctx = ctx
         self.names: list[str] = []
 
-    def __call__(self, col: Column) -> Column:
-        name = self.ctx.fresh("ex")
+    def _add(self, name: str, col: Column) -> str:
         self.df = self.df.withColumn(name, col)
         self.names.append(name)
-        out = tv.tag(F.col(name), tv.skind(col))
-        if tv.is_vc(col):
-            out = tv.mark_vc(out)
-        # re-home the raw-value channels onto named columns: downstream
-        # consumers then reference __ex_N_x instead of __ex_N.x, and
-        # Catalyst PRUNES the struct column when only the value is used
-        # (the struct build per intermediate arithmetic node was the
-        # dominant per-row cost of computed-value queries; typed_ops
-        # raw-value side-channel)
-        raws = tv.raw_channels(col)
-        for key, expr in raws.items():
-            rn = f"{name}{key[3:]}"  # "_rf_x" -> "__ex_N_x"
-            self.df = self.df.withColumn(rn, expr)
-            self.names.append(rn)
-            out.__dict__[key] = F.col(rn)
-        return out
+        return name
+
+    def column(self, col: Column) -> Column:
+        return F.col(self._add(self.ctx.fresh("ex"), col))
+
+    def __call__(self, te: tv.TermExpr) -> tv.TermExpr:
+        # the raw channels land on __ex_N_x etc. beside the term __ex_N
+        name = self.ctx.fresh("ex")
+        return te.rehome(
+            lambda col, f: self._add(f"{name}_{f}" if f else name, col))
 
 
 def _inject_now(expr, ctx: Ctx):
@@ -171,7 +173,7 @@ def _inject_now(expr, ctx: Ctx):
     return expr
 
 
-def compile_term_expr(expr, sol: Solution, ctx: Ctx) -> Column:
+def compile_term_expr(expr, sol: Solution, ctx: Ctx) -> tv.TermExpr:
     return B.compile_expr(_inject_now(expr, ctx), _resolver(sol))
 
 
@@ -278,19 +280,19 @@ def _translate_unit_extend_chain(p, ctx: Ctx) -> Optional[Solution]:
     unit = spark.range(1)
     consts: dict = {}   # var -> Term | None (error → unbound)
 
-    def resolve(name: str) -> Column:
+    def resolve(name: str) -> tv.TermExpr:
         t = consts.get(name)
-        return NULL_TERM() if t is None else term_lit(t)
+        return tv.TermExpr(NULL_TERM()) if t is None else term_lit(t)
 
     for e in chain:
         try:
-            col = B.compile_expr(_inject_now(e.expr, ctx), resolve)
-            row = unit.select(col.alias("_r")).first()["_r"]
+            te = B.compile_expr(_inject_now(e.expr, ctx), resolve)
+            row = unit.select(te.col.alias("_r")).first()["_r"]
             consts[e.var.name] = term_to_python(row)
         except Exception:
             consts[e.var.name] = None  # expression error → var unbound
 
-    cols = [(NULL_TERM() if t is None else term_lit(t)).alias(v)
+    cols = [(NULL_TERM() if t is None else term_lit(t).col).alias(v)
             for v, t in consts.items()]
     return Solution(unit.select(*cols), {
         v: VarInfo(bound=t is not None, kind=_sk_of_term(t))
@@ -417,7 +419,8 @@ def _keyed_seed(sol: Solution, ctx: Ctx, tag: str = "ex_id"):
     increasing_id is only stable if the plan is not recomputed, hence the
     checkpoint."""
     key = ctx.fresh(tag)
-    df = sol.df.withColumn(key, tv.int_term(F.monotonically_increasing_id()))
+    df = sol.df.withColumn(key,
+                           tv.int_term(F.monotonically_increasing_id()).col)
     df = df.localCheckpoint(eager=True)
     return key, replace(sol, df=df, vars={
         **sol.vars, key: VarInfo(bound=True, kind=tv.K_INTEGER)})
@@ -473,9 +476,9 @@ def _correlated_exists_marker(sol: Solution, pattern, ctx: Ctx):
     matched = _lat(pattern, seed, key, _no_consts(ctx))
     keys = matched.df.select(key).dropDuplicates() \
         .withColumn(f"__m_{name}", F.lit(True))
+    marker = tv.bool_term(F.col(f"__m_{name}").isNotNull()).col
     df = seed.df.join(keys, on=key, how="left") \
-        .withColumn(name, tv.bool_term(F.col(f"__m_{name}").isNotNull())) \
-        .drop(f"__m_{name}", key)
+        .withColumn(name, marker).drop(f"__m_{name}", key)
     return name, replace(sol, df=df, vars={**sol.vars, name: BOUND})
 
 
@@ -528,7 +531,8 @@ def _exists_marker(left: Solution, right: Solution, ctx: Ctx):
             back = back & L[v].eqNullSafe(M[v])
         df = L.join(M, back, "left").select(
             *[L[c] for c in left.df.columns], M[f"__m_{name}"])
-    df = df.withColumn(name, tv.bool_term(F.col(f"__m_{name}").isNotNull())) \
+    df = df.withColumn(name,
+                       tv.bool_term(F.col(f"__m_{name}").isNotNull()).col) \
         .drop(f"__m_{name}")
     return name, replace(left, df=df, vars={**left.vars, name: BOUND})
 
@@ -760,7 +764,7 @@ def _lat_slice(p: A.Slice, seed: Solution, key: str, ctx: Ctx) -> Solution:
     with B.intern_scope(it), tv.lazy_lexicals():
         keys = []
         for cond in sol.pending_order:
-            k = it(sort_key(compile_term_expr(cond.expr, sol, ctx)))
+            k = it.column(sort_key(compile_term_expr(cond.expr, sol, ctx)))
             keys.append(k.asc_nulls_first() if cond.ascending
                         else k.desc_nulls_last())
     if not keys:
@@ -827,19 +831,17 @@ def _apply_extend(p: A.Extend, sol: Solution, ctx: Ctx) -> Solution:
         expr, sol = _bind_exists_markers(expr, sol, ctx)
     it = Interner(sol.df, ctx)
     with B.intern_scope(it), tv.lazy_lexicals():
-        col = compile_term_expr(expr, sol, ctx)
-    sk = tv.skind(col)
+        te = compile_term_expr(expr, sol, ctx)
+    info = _var_info(te, _extend_certainly_bound(p.expr, sol),
+                     _extend_expensive(expr, sol))
     keep = [c for c in sol.df.columns if c in orig]
     # materialize the lazy lexical through a NAMED column: applying it
     # to the expression tree directly re-expands the tree ~12x (struct
     # fields + condition), which blows up codegen compile time
-    df = (it.df.withColumn(p.var.name, col)
+    df = (it.df.withColumn(p.var.name, te.col)
           .withColumn(p.var.name, tv.materialize_lexical(
-              tv.tag(F.col(p.var.name), sk)))
+              _var_term(F.col(p.var.name), info)))
           .select(*keep, p.var.name))
-    info = VarInfo(bound=_extend_certainly_bound(p.expr, sol), kind=sk,
-                   vcanon=tv.is_vc(col),
-                   expensive=_extend_expensive(expr, sol))
     return replace(sol, df=df, vars={**orig, p.var.name: info})
 
 
@@ -888,23 +890,21 @@ def _apply_extend_wave(wave: list, sol: Solution, ctx: Ctx) -> Solution:
     multi-var generalization of _apply_extend; same lazy-lexical and
     named-column materialization discipline)."""
     it = Interner(sol.df, ctx)
-    cols: dict[str, Column] = {}
-    sks: dict[str, object] = {}
+    terms: dict[str, tv.TermExpr] = {}
     with B.intern_scope(it), tv.lazy_lexicals():
         for e in wave:
-            cols[e.var.name] = compile_term_expr(e.expr, sol, ctx)
-            sks[e.var.name] = tv.skind(cols[e.var.name])
+            terms[e.var.name] = compile_term_expr(e.expr, sol, ctx)
+    new = {e.var.name: _var_info(terms[e.var.name],
+                                 _extend_certainly_bound(e.expr, sol),
+                                 _extend_expensive(e.expr, sol))
+           for e in wave}
     keep = [c for c in sol.df.columns if c in sol.vars]
     df = it.df
-    for v, col in cols.items():
-        df = df.withColumn(v, col)
+    for v, te in terms.items():
+        df = df.withColumn(v, te.col)
     df = df.select(*keep, *[
-        tv.materialize_lexical(tv.tag(F.col(v), sks[v])).alias(v)
-        for v in cols])
-    new = {e.var.name: VarInfo(
-        bound=_extend_certainly_bound(e.expr, sol), kind=sks[e.var.name],
-        vcanon=tv.is_vc(cols[e.var.name]),
-        expensive=_extend_expensive(e.expr, sol)) for e in wave}
+        tv.materialize_lexical(_var_term(F.col(v), new[v])).alias(v)
+        for v in terms])
     return replace(sol, df=df, vars={**sol.vars, **new})
 
 
@@ -1235,9 +1235,9 @@ def _optional_filter_builder(expr, ctx: Ctx):
     the pairing, so the flat where-variant applies — same rule as the
     generic LeftJoin condition compilation."""
     def build(cols: dict) -> Optional[Column]:
-        def resolve(name: str) -> Column:
+        def resolve(name: str) -> tv.TermExpr:
             c, k = cols[name]
-            return tv.tag(c, k)
+            return tv.TermExpr(c, k)
         try:
             return B.compile_bool_where(_inject_now(expr, ctx), resolve)
         except B.SparqlCompileError:
@@ -2094,7 +2094,7 @@ def _translate_distinct_ordered(p: A.Distinct, ctx: Ctx) -> Optional[Solution]:
     dirs = {c.ascending for c in pending}
     it = Interner(sol.df, ctx)
     with B.intern_scope(it), tv.lazy_lexicals():
-        keys = [it(sort_key(compile_term_expr(c.expr, sol, ctx)))
+        keys = [it.column(sort_key(compile_term_expr(c.expr, sol, ctx)))
                 for c in pending]
     ord_name = ctx.fresh("ord")
     if len(dirs) == 1:
@@ -2126,7 +2126,7 @@ def _translate_distinct_ordered(p: A.Distinct, ctx: Ctx) -> Optional[Solution]:
         out_sol = replace(out_sol, df=vis)
     dd_keys = sorted(out_sol.maybe)
     if dd_keys:
-        repl = {c: tv.materialize_lexical(tv.tag(vis[c], out_sol.kinds.get(c)))
+        repl = {c: tv.materialize_lexical(_var_term(vis[c], out_sol.vars[c]))
                 for c in dd_keys}
         dd = vis.withColumns(repl)
         rep = (F.min if asc else F.max)(F.col(ord_name)).alias(ord_name)
@@ -2176,7 +2176,7 @@ def _apply_order(sol: Solution, ctx: Ctx) -> Solution:
     with B.intern_scope(it), tv.lazy_lexicals():
         sort_cols = []
         for cond in sol.pending_order:
-            key = it(sort_key(compile_term_expr(cond.expr, sol, ctx)))
+            key = it.column(sort_key(compile_term_expr(cond.expr, sol, ctx)))
             sort_cols.append(key.asc_nulls_first() if cond.ascending
                              else key.desc_nulls_last())
     df = it.df.orderBy(*sort_cols).select(*keep)
@@ -2363,15 +2363,13 @@ def _translate_complement_agg(p: A.Group, ctx: Ctx) -> Optional[Solution]:
             if call.name == "COUNT" and call.expr is None:
                 specs.append((out_var.name, "count_star", None, None))
                 continue
-            in_col = compile_term_expr(call.expr, solR, ctx)
+            in_te = compile_term_expr(call.expr, solR, ctx)
             if call.name == "COUNT":
-                specs.append((out_var.name, "count", None, in_col))
+                specs.append((out_var.name, "count", None, in_te.col))
                 continue
-            sk = tv.skind(in_col)
-            if sk not in (tv.RANK_INTEGER, tv.RANK_DECIMAL):
+            if in_te.kind not in (tv.RANK_INTEGER, tv.RANK_DECIMAL):
                 return None
-            specs.append((out_var.name, call.name, sk,
-                          tv.tag(in_col, sk)["d"]))
+            specs.append((out_var.name, call.name, in_te.kind, in_te["d"]))
 
     solV = translate(D, ctx)
     solP = translate(P, _no_consts(ctx))
@@ -2469,12 +2467,12 @@ def _translate_complement_agg(p: A.Group, ctx: Ctx) -> Optional[Solution]:
     out_cols = [F.col(f)] + [F.col(v) for v in extra]
     for i, (name, mode, sk, _c) in enumerate(specs):
         if mode == "count_star":
-            out_cols.append(tv.int_term(n_wo).alias(name))
+            out_cols.append(tv.int_term(n_wo).col.alias(name))
             continue
         c_wo = F.col(f"__cat_c{i}") - F.coalesce(F.col(f"__caw_c{i}"),
                                                  F.lit(0))
         if mode == "count":
-            out_cols.append(tv.int_term(c_wo).alias(name))
+            out_cols.append(tv.int_term(c_wo).col.alias(name))
             continue
         s_wo = (F.col(f"__cat_s{i}")
                 - F.coalesce(F.col(f"__caw_s{i}"),
@@ -2485,8 +2483,8 @@ def _translate_complement_agg(p: A.Group, ctx: Ctx) -> Optional[Solution]:
         else:  # AVG — integer and decimal kinds both divide as decimal
             inner = tv.decimal_term(s_wo / c_wo)
         out_cols.append(
-            F.when(c_wo == 0, tv.int_term(F.lit(0)))
-            .otherwise(inner).alias(name))
+            F.when(c_wo == 0, tv.int_term(F.lit(0)).col)
+            .otherwise(inner.col).alias(name))
     out = joined.where(n_wo > 0).select(*out_cols)
 
     vars_ = {f: VarInfo(bound=True, kind=solV.vars[f].kind)}
@@ -2535,7 +2533,7 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
     # repr() is a sound structural key; the shared compiled Column
     # references the same raw agg columns, and only the cheap per-GROUP
     # post-projection is duplicated per alias.
-    seen_calls: dict[str, Column] = {}
+    seen_calls: dict[str, tv.TermExpr] = {}
 
     def _nondet(e) -> bool:
         # two textually identical RAND()/UUID()/... calls are distinct
@@ -2549,14 +2547,13 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
     with B.intern_scope(it), tv.lazy_lexicals():
         for out_var, call in p.aggregates:
             key = repr(call)
-            agg_col = None if _nondet(call.expr) else seen_calls.get(key)
-            if agg_col is None:
-                agg_col = _compile_aggregate(call, sol, ctx, tmp, raw)
-                seen_calls[key] = agg_col
-            out_vars[out_var.name] = VarInfo(
-                bound=call.name == "COUNT", kind=tv.skind(agg_col),
-                vcanon=tv.is_vc(agg_col), expensive=True)
-            post_exprs.append(agg_col.alias(out_var.name))
+            agg_te = None if _nondet(call.expr) else seen_calls.get(key)
+            if agg_te is None:
+                agg_te = _compile_aggregate(call, sol, ctx, tmp, raw)
+                seen_calls[key] = agg_te
+            out_vars[out_var.name] = _var_info(
+                agg_te, call.name == "COUNT", expensive=True)
+            post_exprs.append(agg_te.col.alias(out_var.name))
     df = it.df
 
     for name, col in tmp_cols.items():
@@ -2611,19 +2608,19 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
 
     def key_rebuild(k: str) -> Column:
         if k in narrow_long:
-            return tv.int_term(F.col(k)).alias(k)
+            return tv.int_term(F.col(k)).col.alias(k)
         if k in narrow_num:
             kind = info[k].kind
             if kind == tv.K_DOUBLE:
-                return tv.double_term(F.col(k)).alias(k)
+                return tv.double_term(F.col(k)).col.alias(k)
             if kind == tv.K_DECIMAL:
-                return tv.decimal_term(F.col(k)).alias(k)
-            return tv.int_term_from_decimal(F.col(k)).alias(k)
+                return tv.decimal_term(F.col(k)).col.alias(k)
+            return tv.int_term_from_decimal(F.col(k)).col.alias(k)
         if k not in narrow:
             return F.col(k)
         if info[k].kind == tv.SK_IRI:
-            return tv.tag(iri_col(F.col(k)), tv.SK_IRI).alias(k)
-        return tv.string_term(F.col(k)).alias(k)
+            return iri_col(F.col(k)).alias(k)
+        return tv.string_term(F.col(k)).col.alias(k)
 
     if keys:
         gdf = df.groupBy(*[key_expr(k) for k in keys])
@@ -2637,7 +2634,7 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
         # tree re-expands it ~12x and blows up codegen compile time
         fix = [
             tv.materialize_lexical(
-                tv.tag(F.col(v.name), out_vars[v.name].kind)).alias(v.name)
+                _var_term(F.col(v.name), out_vars[v.name])).alias(v.name)
             for v, _ in p.aggregates
         ]
         out = out.select(*[key_rebuild(k) for k in keys], *fix)
@@ -2651,8 +2648,9 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
     return Solution(out, {**keys_info, **out_vars})
 
 
-def _minmax_decomposed(name: str, c: Column,
-                       raw: Callable[[Column], Column]) -> Optional[Column]:
+def _minmax_decomposed(name: str, c: tv.TermExpr,
+                       raw: Callable[[Column], Column]
+                       ) -> Optional[tv.TermExpr]:
     """MIN/MAX as a primitive-buffer aggregate + canonical term rebuild.
 
     min_by/max_by over the 8-field term struct puts the struct in the
@@ -2683,30 +2681,30 @@ def _minmax_decomposed(name: str, c: Column,
     determines the term), so the rebuild equals min_by's pick exactly.
     NaN keeps Spark's native greatest-ordering in both forms. Returns
     None when no case applies (generic min_by runs)."""
-    sk = tv.skind(c)
+    sk = c.kind
     agg = F.min if name == "MIN" else F.max
     if sk in (tv.SK_IRI, tv.SK_BNODE, tv.SK_PLAIN):
         from ..terms import bnode_col, iri_col
-        v = raw(agg(tv.vval(c)))
+        v = raw(agg(c.view("v")))
         if sk == tv.SK_IRI:
-            return tv.tag(iri_col(v), tv.SK_IRI)
+            return tv.TermExpr(iri_col(v), tv.SK_IRI)
         if sk == tv.SK_BNODE:
-            return tv.tag(bnode_col(v), tv.SK_BNODE)
+            return tv.TermExpr(bnode_col(v), tv.SK_BNODE)
         return tv.string_term(v)
-    if not tv.is_vc(c):
+    if not c.vcanon:
         return None
     if sk == tv.K_DOUBLE:
-        return tv.double_term(raw(agg(tv.xval(c))))
+        return tv.double_term(raw(agg(c.view("x"))))
     if sk == tv.K_DECIMAL:
-        return tv.decimal_term(raw(agg(tv.dval(c))))
+        return tv.decimal_term(raw(agg(c.view("d"))))
     if sk == tv.K_INTEGER:
-        return tv.int_term_from_decimal(raw(agg(tv.dval(c))))
+        return tv.int_term_from_decimal(raw(agg(c.view("d"))))
     return None
 
 
 def _compile_aggregate(call: A.AggCall, sol: Solution, ctx: Ctx,
                        tmp: Callable[[Column], str],
-                       raw: Callable[[Column], Column]) -> Column:
+                       raw: Callable[[Column], Column]) -> tv.TermExpr:
     name = call.name
     if name == "COUNT" and call.expr is None:
         if call.distinct:
@@ -2717,27 +2715,16 @@ def _compile_aggregate(call: A.AggCall, sol: Solution, ctx: Ctx,
             return tv.int_term(raw(F.count_distinct(F.col(t))))
         return tv.int_term(raw(F.count(F.lit(1))))
 
-    in_col = compile_term_expr(call.expr, sol, ctx)
-    t = tmp(in_col)
-    c = tv.tag(F.col(t), tv.skind(in_col))
-    if tv.is_vc(in_col):
-        c = tv.mark_vc(c)
-    # re-home raw-value channels across the tmp() boundary (same move as
+    # the input and its raw channels on tmp() columns (same move as
     # Interner.__call__): SUM/MIN/... then aggregate the named raw column
     # and the struct build below the aggregate is pruned when unused
-    for key, expr in tv.raw_channels(in_col).items():
-        c.__dict__[key] = F.col(tmp(expr))
+    c = compile_term_expr(call.expr, sol, ctx).rehome(lambda e, _f: tmp(e))
 
     if name == "COUNT":
-        # plain COUNT needs only the input's NULLity — count the cheapest
-        # raw channel (NULL exactly when the term is NULL) so the struct
-        # build is pruned; DISTINCT must stay on the term itself
-        base = c
-        if not call.distinct:
-            raws = tv.raw_channels(c)
-            if raws:
-                base = next(iter(raws.values()))
-        n = F.count_distinct(c) if call.distinct else F.count(base)
+        # plain COUNT needs only the input's NULLity — count its null
+        # witness so the struct build is pruned; DISTINCT must stay on
+        # the term itself
+        n = F.count_distinct(c.col) if call.distinct else F.count(c.witness())
         return tv.int_term(raw(n))
 
     if name in ("SUM", "AVG"):
@@ -2749,13 +2736,12 @@ def _compile_aggregate(call: A.AggCall, sol: Solution, ctx: Ctx,
             return dec
         k = tmp(sort_key(c))
         fn = F.min_by if name == "MIN" else F.max_by
-        out = tv.tag(raw(fn(c, F.col(k))), tv.skind(c))
         # min_by returns an ORIGINAL term — canonical iff the input is
-        return tv.mark_vc(out) if tv.is_vc(c) else out
+        return tv.TermExpr(raw(fn(c.col, F.col(k))), c.kind, c.vcanon)
 
     if name == "SAMPLE":
-        out = tv.tag(raw(F.first(c, ignorenulls=True)), tv.skind(c))
-        return tv.mark_vc(out) if tv.is_vc(c) else out
+        return tv.TermExpr(raw(F.first(c.col, ignorenulls=True)), c.kind,
+                           c.vcanon)
 
     if name == "GROUP_CONCAT":
         sep = call.separator if call.separator is not None else " "
@@ -2774,7 +2760,7 @@ def _compile_aggregate(call: A.AggCall, sol: Solution, ctx: Ctx,
         # implementation-defined per spec; sorted for determinism
         # (collect_list order depends on partitioning).
         strish = tv.is_string_like(c)
-        bad_t = F.col(tmp((c.isNotNull() & ~strish).cast("int")))
+        bad_t = F.col(tmp((c.col.isNotNull() & ~strish).cast("int")))
         pair = tmp(F.when(strish,
                           F.struct(tv.lexical_of(c).alias("v"),
                                    c["lang"].alias("g"))))
@@ -2787,22 +2773,22 @@ def _compile_aggregate(call: A.AggCall, sol: Solution, ctx: Ctx,
         common = (F.size(arr) > 0) & lang0.isNotNull() & F.forall(
             arr, lambda x: x["g"].isNotNull() & (x["g"] == lang0))
         from ..terms import RDF_LANG_STRING, TT_LITERAL, term_struct
-        return tv.tag(
+        return tv.TermExpr(
             F.when(any_bad == 1, NULL_TERM())
             .when(common, term_struct(F.lit(TT_LITERAL), joined,
                                       F.lit(RDF_LANG_STRING), lang0))
-            .otherwise(tv.string_term(joined)), tv.K_STRING)
+            .otherwise(tv.string_term(joined).col), tv.K_STRING)
 
     raise NotImplementedError(f"aggregate {name}")
 
 
-def _sum_avg(name: str, c: Column, tmp: Callable[[Column], str],
-             distinct: bool, raw: Callable[[Column], Column]) -> Column:
+def _sum_avg(name: str, c: tv.TermExpr, tmp: Callable[[Column], str],
+             distinct: bool, raw: Callable[[Column], Column]) -> tv.TermExpr:
     """SUM/AVG with the numeric promotion ladder, single hash-agg pass
     (reference: lib/functions/src/aggregates/sum.rs:14-100, avg.rs).
     integer→integer(sum)/decimal(avg); any decimal→decimal; any float/double
     →double; any non-numeric bound value → error (NULL result)."""
-    sk = tv.skind(c)
+    sk = c.kind
     if sk == tv.SK_NULL:
         # always-unbound input: no bound values in any group — SUM and
         # AVG are 0 per the empty-aggregate rule (must not reach
@@ -2814,7 +2800,7 @@ def _sum_avg(name: str, c: Column, tmp: Callable[[Column], str],
     rank_t = F.col(tmp(tv.numeric_rank(c)))
     dec_t = F.col(tmp(tv.as_decimal(c)))
     dbl_t = F.col(tmp(tv.as_double(c)))
-    bad_t = F.col(tmp((c.isNotNull() & ~tv.is_numeric(c)).cast("int")))
+    bad_t = F.col(tmp((c.col.isNotNull() & ~tv.is_numeric(c)).cast("int")))
 
     if distinct:
         # distinct over the term value; approximate with distinct lexical+dt
@@ -2838,25 +2824,25 @@ def _sum_avg(name: str, c: Column, tmp: Callable[[Column], str],
         # consumers (xsd:double of the HAVING/SELECT wrapper, arithmetic)
         # then use the 2-branch runtime ladder instead of the full
         # kind-dispatch CASE over the output struct
-        return tv.tag(
+        return tv.TermExpr(
             F.when(any_bad == 1, NULL_TERM())
-            .when(max_rank.isNull(), tv.int_term(F.lit(0)))  # empty group
-            .when(max_rank >= tv.RANK_FLOAT, tv.double_term(agg_dbl))
-            .when(max_rank == tv.RANK_DECIMAL, tv.decimal_term(agg_dec))
-            .otherwise(tv.int_term(agg_dec.cast("decimal(38,0)"))),
+            .when(max_rank.isNull(), tv.int_term(F.lit(0)).col)  # empty group
+            .when(max_rank >= tv.RANK_FLOAT, tv.double_term(agg_dbl).col)
+            .when(max_rank == tv.RANK_DECIMAL, tv.decimal_term(agg_dec).col)
+            .otherwise(tv.int_term(agg_dec.cast("decimal(38,0)")).col),
             tv.SK_NUM)
     # AVG
-    return tv.tag(
+    return tv.TermExpr(
         F.when(any_bad == 1, NULL_TERM())
-        .when(max_rank.isNull(), tv.int_term(F.lit(0)))
-        .when(max_rank >= tv.RANK_FLOAT, tv.double_term(agg_dbl / n_dbl))
-        .otherwise(tv.decimal_term(agg_dec / n)), tv.SK_NUM
+        .when(max_rank.isNull(), tv.int_term(F.lit(0)).col)
+        .when(max_rank >= tv.RANK_FLOAT, tv.double_term(agg_dbl / n_dbl).col)
+        .otherwise(tv.decimal_term(agg_dec / n).col), tv.SK_NUM
     )
 
 
-def _sum_avg_static(name: str, c: Column, sk: int,
+def _sum_avg_static(name: str, c: tv.TermExpr, sk: int,
                     tmp: Callable[[Column], str], distinct: bool,
-                    raw: Callable[[Column], Column]) -> Column:
+                    raw: Callable[[Column], Column]) -> tv.TermExpr:
     """SUM/AVG when the input's kind is statically known: the promotion
     ladder collapses at compile time — one raw aggregate (plus a count for
     AVG), no per-row rank/badness bookkeeping."""
@@ -2869,40 +2855,30 @@ def _sum_avg_static(name: str, c: Column, sk: int,
         return tv.duration_term(raw(F.sum(m_t)), raw(F.sum(s_t)))
     if not tv._sk_numeric(sk):
         # every bound value is a type error; empty/all-unbound group → 0
-        bad_t = F.col(tmp(c.isNotNull().cast("int")))
+        bad_t = F.col(tmp(c.col.isNotNull().cast("int")))
         any_bad = raw(F.max(bad_t))
-        return F.when(any_bad == 1, NULL_TERM()).otherwise(tv.int_term(F.lit(0)))
+        return tv.TermExpr(F.when(any_bad == 1, NULL_TERM())
+                           .otherwise(tv.int_term(F.lit(0)).col))
 
-    # outputs below are tagged: every non-NULL value is numeric, and the
+    # outputs below are kinded: every non-NULL value is numeric, and the
     # single-constructor branches pin the exact kind (the empty-group
-    # integer-0 branch makes two-kind outputs SK_NUM, not the input kind)
-    if sk >= tv.RANK_FLOAT:
-        val = F.col(tmp(tv.xval(c)))
-        agg = raw(F.sum_distinct(val) if distinct else F.sum(val))
-        if name == "SUM":
-            return tv.tag(
-                F.when(agg.isNull(), tv.int_term(F.lit(0)))
-                .otherwise(tv.double_term(agg)), tv.SK_NUM)
-        n = raw(F.count_distinct(val) if distinct else F.count(val))
-        return tv.tag(
-            F.when(agg.isNull(), tv.int_term(F.lit(0)))
-            .otherwise(tv.double_term(agg / n)), tv.SK_NUM)
-
-    val = F.col(tmp(tv.dval(c)))
-    agg = raw(F.sum_distinct(val) if distinct else F.sum(val))
-    if name == "SUM":
-        if sk == tv.RANK_INTEGER:
-            return tv.mark_vc(tv.tag(
-                F.when(agg.isNull(), tv.int_term(F.lit(0)))
-                .otherwise(tv.int_term(agg.cast("decimal(38,0)"))),
-                tv.K_INTEGER))
-        return tv.tag(
-            F.when(agg.isNull(), tv.int_term(F.lit(0)))
-            .otherwise(tv.decimal_term(agg)), tv.SK_NUM)
-    n = raw(F.count_distinct(val) if distinct else F.count(val))
-    return tv.tag(
-        F.when(agg.isNull(), tv.int_term(F.lit(0)))
-        .otherwise(tv.decimal_term(agg / n)), tv.SK_NUM)
+    # integer-0 branch, taken on a NULL sum, makes two-kind outputs
+    # SK_NUM, not the input kind)
+    dbl = sk >= tv.RANK_FLOAT
+    val = F.col(tmp(c.view("x" if dbl else "d")))
+    total = raw(F.sum_distinct(val) if distinct else F.sum(val))
+    agg = total if name == "SUM" else \
+        total / raw(F.count_distinct(val) if distinct else F.count(val))
+    kind = tv.SK_NUM
+    if dbl:
+        out = tv.double_term(agg)
+    elif name == "SUM" and sk == tv.RANK_INTEGER:
+        out, kind = tv.int_term(agg.cast("decimal(38,0)")), tv.K_INTEGER
+    else:
+        out = tv.decimal_term(agg)
+    return tv.TermExpr(F.when(total.isNull(), tv.int_term(F.lit(0)).col)
+                       .otherwise(out.col), kind,
+                       vcanon=kind == tv.K_INTEGER)
 
 
 # ---------------------------------------------------------------------------
@@ -3139,7 +3115,7 @@ def evaluate_query(store: GraphStore, q, optimize: bool = True):
                 elif isinstance(x, Variable):
                     col = sdf[x.name] if x.name in sol.maybe else NULL_TERM()
                 else:
-                    col = term_lit(x)
+                    col = term_lit(x).col
                 cols.append(col.alias(pos))
             triples.append(F.struct(*cols))
         out = None

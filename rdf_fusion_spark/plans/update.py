@@ -125,7 +125,7 @@ def _instantiate(sol, quads: list, default_graph, mint_bnodes: bool
         sdf = sdf.withColumn(
             "__row_id", F.monotonically_increasing_id().cast("string"))
 
-    gdefault = term_lit(default_graph) if default_graph is not None \
+    gdefault = term_lit(default_graph).col if default_graph is not None \
         else F.lit(None).cast(TERM_TYPE)
 
     def col_for(x):
@@ -145,7 +145,7 @@ def _instantiate(sol, quads: list, default_graph, mint_bnodes: bool
             if x.name in sol.maybe:
                 return sdf[x.name]
             return F.lit(None).cast(TERM_TYPE)
-        return term_lit(x)
+        return term_lit(x).col
 
     # ONE pass over the solution: each template quad becomes one struct
     # in a per-row array, exploded to a quad per (row, template). The old
@@ -254,7 +254,7 @@ def _apply(store, op) -> None:
             path = src[len("file://"):] if src.startswith("file://") else src
             quads = read_rdf(store.spark, path)
             if op.graph is not None:
-                quads = quads.withColumn("graph", term_lit(op.graph))
+                quads = quads.withColumn("graph", term_lit(op.graph).col)
             insert_quads_df(store, quads)
         except Exception:
             if not op.silent:
@@ -291,7 +291,7 @@ def _apply(store, op) -> None:
         tgt_g = None if op.target == "default" else op.target
         moved = base.where(src_f).withColumn(
             "graph",
-            term_lit(tgt_g) if tgt_g is not None
+            term_lit(tgt_g).col if tgt_g is not None
             else F.lit(None).cast(TERM_TYPE))
         if op.kind in ("COPY", "MOVE"):
             # COPY/MOVE overwrite the target graph

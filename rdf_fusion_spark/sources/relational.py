@@ -310,7 +310,7 @@ def object_native(table: str, col_name: str, df: DataFrame
 
 
 def static_object_kind(table: str, col_name: str, df: DataFrame) -> Optional[int]:
-    """typed_ops static kind (skind) of this column's object terms, or None.
+    """static kind (typed_ops.TermExpr) of this column's object terms, or None.
 
     The relational mapping is statically typed: every object term produced
     from a given column has one known kind, which expression compilation

@@ -274,8 +274,8 @@ class VirtualRelationalStore(GraphStore):
                 df = self.table_df(target)
                 sol = df.select(
                     self._subj_term(target, df).alias("subject"),
-                    term_lit(NamedNode(RDF_TYPE)).alias("predicate"),
-                    term_lit(obj).alias("object"))
+                    term_lit(NamedNode(RDF_TYPE)).col.alias("predicate"),
+                    term_lit(obj).col.alias("object"))
                 parts_out.append(sol)
             tgt_table = self.table_for_subject(obj)
             if tgt_table is not None:
@@ -301,8 +301,8 @@ class VirtualRelationalStore(GraphStore):
                             df.where(kcol == F.lit(kval)).select(
                                 self._subj_term(t2, df).alias("subject"),
                                 term_lit(NamedNode(predicate_iri(t2, col))
-                                         ).alias("predicate"),
-                                term_lit(obj).alias("object")))
+                                         ).col.alias("predicate"),
+                                term_lit(obj).col.alias("object")))
             if not parts_out:
                 return self._empty_var_pred(predicate, subject, graph_var,
                                             subject_side=True)
@@ -353,7 +353,7 @@ class VirtualRelationalStore(GraphStore):
                 # star_scan; r10 GRAPH-layer fuzz)
                 trip = trip.where(term_matches(out[graph_var.name], g))
             else:
-                out[graph_var.name] = term_lit(g)
+                out[graph_var.name] = term_lit(g).col
         return trip.select(*[c.alias(v) for v, c in out.items()])
 
     # ------------------------------------------------------------------
@@ -377,7 +377,7 @@ class VirtualRelationalStore(GraphStore):
                     from ..terms import term_lit
                     parts.append(df.select(
                         self._subj_term(t, df).alias(src),
-                        term_lit(NamedNode(class_iri(t))).alias(tgt)))
+                        term_lit(NamedNode(class_iri(t))).col.alias(tgt)))
                 continue
             m = self._pred_map.get(iri.iri)
             if m is None:
@@ -513,7 +513,7 @@ class VirtualRelationalStore(GraphStore):
                     continue  # constant matches: no filter, no column
                 if isinstance(o, Variable):
                     from ..terms import term_lit
-                    oterm = term_lit(NamedNode(cls))
+                    oterm = term_lit(NamedNode(cls)).col
                 else:
                     conds.append(F.lit(False))
                     continue
@@ -558,7 +558,7 @@ class VirtualRelationalStore(GraphStore):
                                           NamedNode(graph_iri(table))))
             else:
                 out_vars[graph_var.name] = term_lit(
-                    NamedNode(graph_iri(table)))
+                    NamedNode(graph_iri(table))).col
                 out_kinds[graph_var.name] = SK_IRI
 
         cond = F.lit(True)
@@ -805,7 +805,7 @@ class VirtualRelationalStore(GraphStore):
             parts.append(df.select(self._subj_term(t, df).alias("n")))
             # the table's class IRI appears as an rdf:type object
             parts.append(self.spark.range(1).select(
-                term_lit(NamedNode(class_iri(t))).alias("n")))
+                term_lit(NamedNode(class_iri(t))).col.alias("n")))
             for f in df.schema.fields:
                 ot = self._obj_term(t, f.name, df, assume_nonnull=True)
                 if ot is None:

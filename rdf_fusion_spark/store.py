@@ -639,7 +639,7 @@ class GraphStore:
         from .terms import term_lit
         if graph_name is None:
             return F.col(COL_GRAPH).isNull()
-        return F.col(COL_GRAPH).eqNullSafe(term_lit(graph_name))
+        return F.col(COL_GRAPH).eqNullSafe(term_lit(graph_name).col)
 
     def contains_named_graph(self, graph_name) -> bool:
         """True iff the named graph holds at least one triple

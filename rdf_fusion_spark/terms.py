@@ -524,8 +524,9 @@ def _const_vcanon(k, v, dt, d, x) -> bool:
     return False
 
 
-def term_lit(term: Term) -> Column:
-    """A constant term as a Column literal.
+def term_lit(term: Term):
+    """A constant term as a functions/typed_ops.TermExpr over a literal
+    struct (`.col` is the Column).
 
     The typed fields (k/x/d/ts) are computed in PYTHON, not as derived
     Column CASE chains — constant terms are referenced many times inside
@@ -535,7 +536,8 @@ def term_lit(term: Term) -> Column:
     return memo_col(("term", term), lambda: _build_term_lit(term))
 
 
-def _build_term_lit(term: Term) -> Column:
+def _build_term_lit(term: Term):
+    from .functions.typed_ops import SK_BNODE, SK_IRI, SK_PLAIN, TermExpr
     row = term_py_row(term)
     t, v, dt, lang, k, x, d, ts = row
     col = F.struct(
@@ -548,19 +550,18 @@ def _build_term_lit(term: Term) -> Column:
         F.lit(d).cast("decimal(38,18)").alias("d"),
         F.lit(ts).cast("timestamp").alias("ts"),
     )
-    # static-kind tag (see functions/typed_ops.py): constants have a fully
+    # static kind (see functions/typed_ops.py): constants have a fully
     # known kind, which lets consuming operators compile single-branch
     if t == TT_IRI:
-        col._rf_sk = 100  # SK_IRI
+        kind = SK_IRI
     elif t == TT_BNODE:
-        col._rf_sk = 101  # SK_BNODE
+        kind = SK_BNODE
     elif k == K_STRING and lang is None:
-        col._rf_sk = 8    # SK_PLAIN
-    elif k is not None:
-        col._rf_sk = k
-    if t == TT_LITERAL and _const_vcanon(k, v, dt, d, x):
-        col._rf_vc = True
-    return col
+        kind = SK_PLAIN
+    else:
+        kind = k
+    return TermExpr(col, kind, vcanon=(
+        t == TT_LITERAL and _const_vcanon(k, v, dt, d, x)))
 
 
 def term_matches(col: Column, term: Term) -> Column:
@@ -627,12 +628,22 @@ def term_py_row(t: Optional[Term]):
         k = K_STRING
     elif dt in INTEGER_TYPES or dt == XSD_DECIMAL:
         k = K_INTEGER if dt in INTEGER_TYPES else K_DECIMAL
+        # x and d independently, as the Spark side derives them
+        # (term_struct's try_casts): d is NULL only when the value does
+        # not fit decimal(38,18), whose 38 digits the local context holds
+        # (a NaN quantizes quietly, so it is caught by is_finite)
         try:
-            d = _decimal.Decimal(t.lexical).quantize(
-                _decimal.Decimal(1).scaleb(-18))
             x = float(t.lexical)
-        except (ArithmeticError, ValueError):
-            d = x = None
+        except ValueError:
+            x = None
+        with _decimal.localcontext(prec=38, rounding=_decimal.ROUND_HALF_UP):
+            try:
+                d = _decimal.Decimal(t.lexical).quantize(
+                    _decimal.Decimal(1).scaleb(-18))
+            except ArithmeticError:
+                d = None
+        if d is not None and not d.is_finite():
+            d = None
     elif dt in (XSD_FLOAT, XSD_DOUBLE):
         k = K_FLOAT if dt == XSD_FLOAT else K_DOUBLE
         try:

@@ -246,7 +246,7 @@ class SparqlHttpServer:
                     if g is not None:
                         from ..terms import term_lit
                         quads = quads.withColumn("graph",
-                                                 term_lit(NamedNode(g)))
+                                                 term_lit(NamedNode(g)).col)
                     n = server.insert_quads(quads)
                     return self._send(201, json.dumps({"loaded": n}).encode(),
                                       "application/json")

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdf_fusion_spark.functions import builtins as B
+from rdf_fusion_spark.functions.typed_ops import TermExpr
 from rdf_fusion_spark.sparql import algebra as A
 from rdf_fusion_spark.terms import (
     XSD_BOOLEAN,
@@ -148,14 +149,14 @@ def _run(spark, col):
 
 
 def resolve(name):
-    return B.NULL_TERM()
+    return TermExpr(B.NULL_TERM())
 
 
 @pytest.mark.parametrize("name,args,want", TERM_CASES,
                          ids=[f"{i}_{c[0].split('#')[-1]}"
                               for i, c in enumerate(TERM_CASES)])
 def test_term_function(spark, name, args, want):
-    col = B.compile_expr(A.ECall(name, args), resolve)
+    col = B.compile_expr(A.ECall(name, args), resolve).col
     row = _run(spark, col)
     if want is None:
         assert row is None or row["v"] is not None  # executed without raising

@@ -215,6 +215,57 @@ def test_large_daytime_duration_literal(spark):
     assert rows[0]["d"]["d"] == 2000000 * 86400
 
 
+_BIG_NUMERICS = ["9999999999", "10000000000", "-12345678901",
+                 "99999999999999999999", "100000000000000000000",
+                 "12345678901.5", "NaN"]
+
+
+def test_term_py_row_numeric_parity_with_spark(spark):
+    """The Python-side term row (constants, Python-parsed loaders) derives
+    k/x/d like the Spark-side term_struct: |v| >= 1e10 used to lose x and
+    d, a NaN d failed the literal's build, and d is NULL only where
+    decimal(38,18) cannot hold the value."""
+    import pyspark.sql.functions as F
+
+    from rdf_fusion_spark.terms import (TT_LITERAL, XSD_DECIMAL,
+                                        XSD_INTEGER, term_py_row,
+                                        term_struct)
+    cases = [(lex, dt) for lex in _BIG_NUMERICS
+             for dt in (XSD_INTEGER, XSD_DECIMAL)]
+    t = term_struct(F.lit(TT_LITERAL), F.col("lex"), F.col("dt"))
+    rows = spark.createDataFrame(cases, "lex string, dt string").select(
+        "lex", "dt", t["k"].alias("k"), t["x"].alias("x"),
+        t["d"].alias("d")).collect()
+    spark_side = {(r["lex"], r["dt"]): (r["k"], r["x"], r["d"]) for r in rows}
+    for lex, dt in cases:  # repr: NaN == NaN
+        assert repr(term_py_row(Literal(lex, dt))[4:7]) \
+            == repr(spark_side[(lex, dt)]), (lex, dt)
+
+
+def test_big_integers_same_answers_from_both_loaders(spark, tmp_path):
+    """The N-Triples loader parses terms in Spark, the Turtle loader in
+    Python (term_py_row); query constants go through term_py_row too."""
+    from rdf_fusion_spark import GraphStore
+
+    xsd_int = "<http://www.w3.org/2001/XMLSchema#integer>"
+    data = "".join(f'<{EX}s{i}> <{EX}p> "{n}"^^{xsd_int} .\n' for i, n in
+                   enumerate(["10000000000", "20000000000", "5",
+                              "100000000000000000000"]))
+    path = tmp_path / "big.nt"
+    path.write_text(data)
+    for load in (GraphStore.from_ntriples, GraphStore.from_turtle):
+        store = load(spark, str(path))
+        total = store.query(
+            f"SELECT (SUM(?o) AS ?t) WHERE {{ ?s <{EX}p> ?o "
+            f"FILTER(?s != <{EX}s3>) }}").df.collect()[0]["t"]
+        assert total["v"] == "30000000005", (load.__name__, total)
+        hits = store.query(
+            f"SELECT ?s WHERE {{ ?s <{EX}p> ?o "
+            f"FILTER(?o = 10000000000) }}").df.collect()
+        assert [term_to_python(r["s"]) for r in hits] \
+            == [NamedNode(EX + "s0")], load.__name__
+
+
 def test_distinct_preserves_order_before_limit(spark):
     """SELECT DISTINCT ... ORDER BY ... LIMIT must cut the ORDERED distinct
     rows — Spark's dropDuplicates after an orderBy destroys row order, so

@@ -1,20 +1,25 @@
-"""Raw-value side-channel (r12): term constructors attach the native
-expression behind their typed fields (_rf_x/_rf_d/_rf_v) so static-kind
-consumers bypass the 8-field struct and Catalyst prunes the struct
-build. These tests pin (a) the constructor invariant the whole channel
-rests on — the raw expression is NULL exactly when the term struct is
-NULL, and its value agrees with the struct field — including the NaN /
-±INF / negative edge values, (b) result equivalence of a computed-value
-aggregate pipeline against the same computation written directly on the
-parquet columns, and (c) the plan effects: q3's group key is the native
-long and its pre-aggregate pipeline builds no term struct."""
+"""Raw-value channels (r12): term constructors record the native
+expression behind their typed fields on the typed_ops.TermExpr they
+return (fields x/d/v), so kinded consumers bypass the 8-field struct and
+Catalyst prunes the struct build. These tests pin (a) the constructor
+invariant the channels rest on — the raw expression is NULL exactly when
+the term struct is NULL, and its value agrees with the struct field —
+including the NaN / ±INF / negative edge values, (b) result equivalence
+of a computed-value aggregate pipeline against the same computation
+written directly on the parquet columns, (c) the plan effects: q1 and q3
+build no term struct below their first aggregate and q3's group key is
+the native long, and (d) that every record fact is optional: compiled
+with all facts stripped, four bench queries return identical rows while
+the plan canaries of (c) and bi_q5's hash aggregation fire."""
 
 import io
+import re
 import sys
 
 import pyspark.sql.functions as F
 
-from rdf_fusion_spark.entry_queries import PROLOGUE, get_graph
+from rdf_fusion_spark import terms
+from rdf_fusion_spark.entry_queries import PROLOGUE, SPECS, get_graph
 from rdf_fusion_spark.functions import typed_ops as tv
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -30,9 +35,18 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _pre_agg(plan: str) -> str:
+    """The formatted plan's detail sections below the first aggregate:
+    everything before the first `(N) HashAggregate` section header (the
+    tree overview at the top names operators only, no expressions)."""
+    m = re.search(r"^\(\d+\) HashAggregate", plan, re.MULTILINE)
+    assert m is not None, plan
+    return plan[:m.start()]
+
+
 def test_constructor_raw_invariants(spark):
     # struct NULL <=> raw NULL, and values agree, for every constructor
-    # that attaches a channel, over edge inputs
+    # that records a channel, over edge inputs
     df = spark.createDataFrame(
         [(1.5,), (-0.0,), (float("nan",),), (float("inf"),),
          (float("-inf"),), (None,), (2.0**60,), (-7.25,)],
@@ -48,19 +62,18 @@ def test_constructor_raw_invariants(spark):
                                         F.col("x").cast("string"))),
     }
     for name, term in cases.items():
-        raws = tv.raw_channels(term)
-        assert raws, f"{name}: constructor attached no raw channel"
-        sel = [term.alias("t")] + [e.alias(k.lstrip("_"))
-                                   for k, e in raws.items()]
+        raws = term.channels()
+        assert raws, f"{name}: constructor recorded no raw channel"
+        sel = [term.col.alias("t")] + [e.alias(f"raw_{k}")
+                                       for k, e in raws.items()]
         for row in df.select(*sel).collect():
             t = row["t"]
             for k in raws:
-                r = row[k.lstrip("_")]
+                r = row[f"raw_{k}"]
                 assert (t is None) == (r is None), \
                     f"{name}.{k}: raw null mismatch (term={t!r}, raw={r!r})"
                 if t is not None:
-                    field = {"_rf_x": "x", "_rf_d": "d", "_rf_v": "v"}[k]
-                    tf = t[field]
+                    tf = t[k]
                     same = (tf == r) or (tf != tf and r != r)  # NaN==NaN
                     assert same, f"{name}.{k}: value mismatch {tf!r} vs {r!r}"
 
@@ -112,7 +125,44 @@ def test_q3_plan_native_long_group_key_and_structfree_scan(spark):
     plan = _plan(res.df)
     # the group key is the scan's native long, not the decimal `d` view
     assert "Keys [1]: [__nk_okey" in plan, plan
-    # the pre-aggregate side builds no term struct: every struct(...)
-    # occurrence in the plan sits ABOVE the first HashAggregate
-    pre_agg = plan[:plan.index("HashAggregate")]
+    # the pre-aggregate side builds no term struct
+    pre_agg = _pre_agg(plan)
     assert "struct(t, " not in pre_agg, pre_agg
+
+
+def test_q1_plan_structfree_scan(spark):
+    pre_agg = _pre_agg(_plan(SPECS["q1_pricing_summary"].run(spark, SF_DIR)))
+    assert "struct(t, " not in pre_agg, pre_agg
+
+
+def _strip_facts(m) -> None:
+    """Under monkeypatch context m, every TermExpr keeps only its Column:
+    no kind, no value-canonical marker, no raw channel. The constant memo
+    is swapped for an empty one so constants are rebuilt without facts."""
+    init = tv.TermExpr.__init__
+
+    def col_only(self, col, *_facts, **_named):
+        init(self, col)
+
+    m.setattr(tv.TermExpr, "__init__", col_only)
+    m.setattr(terms, "_CCACHE", {})
+
+
+_AB_QUERIES = ["q1_pricing_summary", "q3_topk_revenue", "q5_star_join",
+               "q_bsbm_bi_q5"]
+
+
+def test_stripped_facts_same_rows_and_canaries_fire(spark, monkeypatch):
+    """A dropped fact is a missed optimization, never a wrong answer —
+    and the plan canaries notice the miss."""
+    normal = {n: SPECS[n].run(spark, SF_DIR) for n in _AB_QUERIES}
+    with monkeypatch.context() as m:
+        _strip_facts(m)
+        bare = {n: SPECS[n].run(spark, SF_DIR) for n in _AB_QUERIES}
+    for n in _AB_QUERIES:
+        assert sorted(normal[n].collect()) == sorted(bare[n].collect()), n
+    for n in ("q1_pricing_summary", "q3_topk_revenue"):
+        assert "struct(t, " not in _pre_agg(_plan(normal[n])), n
+        assert "struct(t, " in _pre_agg(_plan(bare[n])), n
+    assert "SortAggregate" not in _plan(normal["q_bsbm_bi_q5"])
+    assert "SortAggregate" in _plan(bare["q_bsbm_bi_q5"])

@@ -1,13 +1,14 @@
 """Capture .explain("formatted") for every bench query into plans/r12/.
 
-Usage: python tools/capture_plans.py <suffix> [query ...]
-Writes plans/r12/<query>_<suffix>.txt for each bench query (default: all).
-Same session confs as bench.py so the captured plans are the plans the
-bench actually executes.
+Usage: python tools/capture_plans.py [--out DIR] <suffix> [query ...]
+Writes <DIR>/<query>_<suffix>.txt for each bench query (default: all;
+DIR defaults to plans/r12/). Same session confs as bench.py so the
+captured plans are the plans the bench actually executes.
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -23,8 +24,13 @@ OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", default=OUT_DIR,
+                    help="directory the captures go to (default plans/r12)")
+    ap.add_argument("suffix", nargs="?", default="before")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    only = set(args.queries)
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
@@ -42,7 +48,7 @@ def main() -> None:
     import bench
     from rdf_fusion_spark import entry_queries as EQ
 
-    os.makedirs(OUT_DIR, exist_ok=True)
+    os.makedirs(args.out, exist_ok=True)
     qs = EQ.queries()
     names = [n for n in bench.BENCH_QUERIES if n in qs
              and (not only or n in only)]
@@ -56,7 +62,7 @@ def main() -> None:
                 df.explain("formatted")
             finally:
                 sys.stdout = stdout
-            path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
+            path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
             with open(path, "w") as f:
                 f.write(buf.getvalue())
             print(f"wrote {path}")
