@@ -81,6 +81,9 @@ def cmd_convert(args) -> int:
     if args.to_file:
         write_rdf(quads, args.to_file, tfmt)
     else:
+        # streamed a partition at a time, not collected at once like the
+        # HTTP server's bodies: a dump of any size goes to stdout with
+        # bounded driver memory
         for r in serialize_rdf_lines(quads, tfmt).toLocalIterator():
             print(r["line"])
     return 0
@@ -137,6 +140,7 @@ def cmd_query(args) -> int:
             return 2
         quads = res.df.withColumn("graph", F.lit(None).cast(TERM_DDL)) \
             .select("graph", "subject", "predicate", "object")
+        # streamed, as in `convert`: bounded driver memory for any size
         for r in serialize_rdf_lines(quads, rfmt).toLocalIterator():
             print(r["line"])
         return 0

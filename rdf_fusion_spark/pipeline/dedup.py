@@ -483,9 +483,7 @@ def _band_keys_col(col: str = "simhash"):
     count drops by ~4 orders of magnitude (measured in BASELINE.md
     round-7: 69.8M -> ~40k candidates at 10^6 random docs), which is
     what keeps candidate generation ~linear at warehouse corpus sizes.
-    Shared by the candidate join and the scale-study histogram
-    (tools/simhash_scale_study.py) so both always describe the scheme
-    actually in production."""
+    Used by the simhash candidate join below."""
     width = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << width) - 1
 

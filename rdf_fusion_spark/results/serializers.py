@@ -1,64 +1,133 @@
 """SPARQL query result serializers: JSON / XML / CSV / TSV.
 
 reference: lib/execution/src/results/mod.rs:26-110 (QueryResultsFormat and
-the oxrdfio serializer bridge). Two shapes here:
+the oxrdfio serializer bridge, which hands result sinks Arrow record
+batches). Two shapes here:
 
-* document serializers (`to_json`/`to_xml`/`to_csv`/`to_tsv`) — collect a
-  (bounded) result to the driver and emit the W3C document formats;
+* document serializers (`to_json`/`to_xml`/`to_csv`/`to_tsv`) collect a
+  (bounded) result to the driver once, as Arrow record batches in a single
+  Spark job, decode each variable's term struct into per-field columns, and
+  render the W3C document formats on the driver from those columns;
 * a distributed line serializer (`bindings_json_df`) — one JSON object per
-  solution row as a DataFrame of strings, for writing massive result sets
-  with `df.write.text` (no driver materialization).
+  solution row as a DataFrame of strings, for result sets too large to
+  collect: write them with `df.write.text` (no driver materialization).
 """
 
 from __future__ import annotations
 
 import json
+from json.encoder import encode_basestring_ascii
 from typing import Optional
 from xml.sax.saxutils import escape as xml_escape
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..terms import (RDF_LANG_STRING, TT_BNODE, TT_IRI, XSD_STRING,
-                     rebuild_lexical)
+from ..terms import (TT_BNODE, TT_IRI, XSD_STRING, BlankNode, Literal,
+                     NamedNode, rebuild_lexical)
 
 
-def _binding_obj(row_val) -> Optional[dict]:
-    if row_val is None:
-        return None
-    t, v, dt, lang = row_val["t"], row_val["v"], row_val["dt"], row_val["lang"]
-    if v is None:
-        v = rebuild_lexical(row_val)
+# ---------------------------------------------------------------------------
+# one Arrow collect, decoded per variable
+# ---------------------------------------------------------------------------
+
+def arrow_table(df: DataFrame) -> pa.Table:
+    """`df` on the driver as one Arrow table, collected in one Spark job.
+
+    Not `DataFrame.toArrow()`: that casts the batches to the declared
+    schema, whose term struct declares `t`/`v` non-null, and an unbound
+    OPTIONAL variable (a NULL struct) or a lazy lexical (`v` NULL) then
+    fails with `ArrowInvalid: nulls in input cannot be viewed as
+    non-nullable`. The batches are taken as Spark wrote them."""
+    return pa.Table.from_batches(
+        df._collect_as_arrow(empty_list_if_zero_records=False))
+
+
+def collect_lines(df: DataFrame) -> list:
+    """The `line` column of a serialized-RDF DataFrame, in one Spark job."""
+    return arrow_table(df).column("line").to_pylist()
+
+
+def _decode(col: pa.ChunkedArray):
+    """One variable's bindings as (t, v, dt, lang) per row: `t` is None
+    where the variable is unbound, and lazy lexicals are rebuilt into `v`."""
+    arr = col.combine_chunks()
+    # flatten() merges the struct's validity into every field
+    fields = dict(zip((f.name for f in arr.type), arr.flatten()))
+    v = fields["v"].to_pylist()
+    lazy = pc.indices_nonzero(
+        pc.and_(arr.is_valid(), fields["v"].is_null())).to_pylist()
+    if lazy:
+        typed = {f: fields[f].take(lazy).to_pylist()
+                 for f in ("k", "x", "d", "ts")}
+        for j, i in enumerate(lazy):
+            v[i] = rebuild_lexical({f: vals[j] for f, vals in typed.items()})
+    return zip(fields["t"].to_pylist(), v, fields["dt"].to_pylist(),
+               fields["lang"].to_pylist())
+
+
+def _rows(result, cell) -> list:
+    """Collect `result` once; per row, the tuple of `cell(t, v, dt, lang)`
+    over the result's variables (None where a variable is unbound)."""
+    table = arrow_table(result.df)
+    cols = []
+    for name in result.variables:
+        cols.append([None if t is None else cell(t, v, dt, lang)
+                     for t, v, dt, lang in _decode(table.column(name))])
+    return list(zip(*cols)) if cols else [()] * table.num_rows
+
+
+# ---------------------------------------------------------------------------
+# document serializers
+# ---------------------------------------------------------------------------
+
+def _json_str(s: Optional[str]) -> str:
+    """A string as json.dumps writes it (ensure_ascii)."""
+    return "null" if s is None else encode_basestring_ascii(s)
+
+
+def _json_cell(t, v, dt, lang) -> str:
     if t == TT_IRI:
-        return {"type": "uri", "value": v}
+        return '{"type": "uri", "value": ' + _json_str(v) + "}"
     if t == TT_BNODE:
-        return {"type": "bnode", "value": v}
-    out = {"type": "literal", "value": v}
+        return '{"type": "bnode", "value": ' + _json_str(v) + "}"
+    out = '{"type": "literal", "value": ' + _json_str(v)
     if lang:
-        out["xml:lang"] = lang
-    elif dt and dt != XSD_STRING:
-        out["datatype"] = dt
-    return out
+        return out + ', "xml:lang": ' + _json_str(lang) + "}"
+    if dt and dt != XSD_STRING:
+        return out + ', "datatype": ' + _json_str(dt) + "}"
+    return out + "}"
 
 
 def to_json(result) -> str:
-    """SPARQL 1.1 Query Results JSON Format (SELECT or ASK)."""
+    """SPARQL 1.1 Query Results JSON Format (SELECT or ASK), byte for byte
+    what `json.dumps` writes for the document's dict form."""
     from ..plans.translator import AskResult, SelectResult
 
     if isinstance(result, AskResult):
         return json.dumps({"head": {}, "boolean": result.value})
     assert isinstance(result, SelectResult)
-    variables = list(result.variables)
-    bindings = []
-    for row in result.df.toLocalIterator():
-        b = {}
-        for v in variables:
-            obj = _binding_obj(row[v])
-            if obj is not None:
-                b[v] = obj
-        bindings.append(b)
-    return json.dumps({"head": {"vars": variables},
-                       "results": {"bindings": bindings}})
+    keys = [_json_str(v) + ": " for v in result.variables]
+    bindings = ", ".join(
+        "{" + ", ".join([k + c for k, c in zip(keys, row) if c is not None])
+        + "}" for row in _rows(result, _json_cell))
+    return ('{"head": {"vars": ' + json.dumps(list(result.variables))
+            + '}, "results": {"bindings": [' + bindings + "]}}")
+
+
+def _xml_cell(t, v, dt, lang) -> str:
+    lex = xml_escape(v)
+    if t == TT_IRI:
+        return f"<uri>{lex}</uri>"
+    if t == TT_BNODE:
+        return f"<bnode>{lex}</bnode>"
+    if lang:
+        return f'<literal xml:lang="{xml_escape(lang)}">{lex}</literal>'
+    if dt and dt != XSD_STRING:
+        return f'<literal datatype="{xml_escape(dt)}">{lex}</literal>'
+    return f"<literal>{lex}</literal>"
 
 
 def to_xml(result) -> str:
@@ -70,80 +139,48 @@ def to_xml(result) -> str:
         return (f"{head}<head/><boolean>"
                 f"{'true' if result.value else 'false'}</boolean></sparql>")
     assert isinstance(result, SelectResult)
+    names = [xml_escape(v) for v in result.variables]
     parts = [head, "<head>"]
-    for v in result.variables:
-        parts.append(f'<variable name="{xml_escape(v)}"/>')
+    parts += [f'<variable name="{n}"/>' for n in names]
     parts.append("</head><results>")
-    for row in result.df.toLocalIterator():
+    for row in _rows(result, _xml_cell):
         parts.append("<result>")
-        for v in result.variables:
-            val = row[v]
-            if val is None:
-                continue
-            parts.append(f'<binding name="{xml_escape(v)}">')
-            t, lex = val["t"], val["v"]
-            if lex is None:
-                lex = rebuild_lexical(val)
-            lex = xml_escape(lex)
-            if t == TT_IRI:
-                parts.append(f"<uri>{lex}</uri>")
-            elif t == TT_BNODE:
-                parts.append(f"<bnode>{lex}</bnode>")
-            elif val["lang"]:
-                parts.append(f'<literal xml:lang="{xml_escape(val["lang"])}">'
-                             f"{lex}</literal>")
-            elif val["dt"] and val["dt"] != XSD_STRING:
-                parts.append(f'<literal datatype="{xml_escape(val["dt"])}">'
-                             f"{lex}</literal>")
-            else:
-                parts.append(f"<literal>{lex}</literal>")
-            parts.append("</binding>")
+        parts += [f'<binding name="{n}">{c}</binding>'
+                  for n, c in zip(names, row) if c is not None]
         parts.append("</result>")
     parts.append("</results></sparql>")
     return "".join(parts)
 
 
-def _csv_value(val) -> str:
-    if val is None:
-        return ""
-    v = val["v"]
-    if v is None:
-        v = rebuild_lexical(val)
-    if val["t"] == TT_BNODE:
+def _csv_cell(t, v, dt, lang) -> str:
+    if t == TT_BNODE:
         v = f"_:{v}"
     if any(ch in v for ch in ',"\n\r'):
         return '"' + v.replace('"', '""') + '"'
     return v
 
 
-def _tsv_term(val) -> str:
-    from ..terms import BlankNode, Literal, NamedNode
-    if val is None:
-        return ""
-    t = val["t"]
-    if t == TT_IRI:
-        return str(NamedNode(val["v"]))
-    if t == TT_BNODE:
-        return str(BlankNode(val["v"]))
-    v = val["v"]
-    if v is None:
-        v = rebuild_lexical(val)
-    if val["lang"]:
-        return str(Literal(v, language=val["lang"]))
-    return str(Literal(v, val["dt"] or XSD_STRING))
-
-
 def to_csv(result) -> str:
     rows = [",".join(result.variables)]
-    for row in result.df.toLocalIterator():
-        rows.append(",".join(_csv_value(row[v]) for v in result.variables))
+    rows += [",".join("" if c is None else c for c in row)
+             for row in _rows(result, _csv_cell)]
     return "\r\n".join(rows) + "\r\n"
+
+
+def _tsv_cell(t, v, dt, lang) -> str:
+    if t == TT_IRI:
+        return str(NamedNode(v))
+    if t == TT_BNODE:
+        return str(BlankNode(v))
+    if lang:
+        return str(Literal(v, language=lang))
+    return str(Literal(v, dt or XSD_STRING))
 
 
 def to_tsv(result) -> str:
     rows = ["\t".join("?" + v for v in result.variables)]
-    for row in result.df.toLocalIterator():
-        rows.append("\t".join(_tsv_term(row[v]) for v in result.variables))
+    rows += ["\t".join("" if c is None else c for c in row)
+             for row in _rows(result, _tsv_cell)]
     return "\n".join(rows) + "\n"
 
 

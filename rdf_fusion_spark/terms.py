@@ -680,19 +680,85 @@ def term_py_row(t: Optional[Term]):
     return (TT_LITERAL, t.lexical, dt, lang, k, x, d, ts)
 
 
+def _double_lexical(x: float) -> str:
+    """A double as Spark's string cast renders it (Java's Double.toString:
+    plain for 1e-3 <= |x| < 1e7, else d.dddE<n>), with canon_double_string's
+    INF/-INF/NaN. The digits are Python's shortest round-trip ones, which
+    Java 19+ prints too; an older JVM prints a few doubles with more."""
+    import decimal as _decimal
+    import math
+
+    if math.isnan(x):
+        return "NaN"
+    if math.isinf(x):
+        return "INF" if x > 0 else "-INF"
+    if x == 0:
+        return "-0.0" if math.copysign(1.0, x) < 0 else "0.0"
+    sign = "-" if x < 0 else ""
+    d = _decimal.Decimal(repr(abs(x))).normalize()
+    _, digits, exp = d.as_tuple()
+    e = len(digits) + exp - 1
+    if -3 <= e < 7:
+        s = format(d, "f")
+        return sign + (s if "." in s else s + ".0")
+    ds = "".join(map(str, digits))
+    return f"{sign}{ds[0]}.{ds[1:] or '0'}E{e}"
+
+
+def _session_tzinfo():
+    """The active Spark session's time zone, a region ID such as the UTC
+    that sources.relational.configure_session sets (UTC without one)."""
+    import zoneinfo
+
+    from pyspark.sql import SparkSession
+
+    s = SparkSession.getActiveSession()
+    return zoneinfo.ZoneInfo(
+        s.conf.get("spark.sql.session.timeZone") if s else "UTC")
+
+
 def rebuild_lexical(row) -> Optional[str]:
-    """Lexical form of a literal term Row whose `v` is NULL — a lazy
-    lexical (virtual-store scans of double/decimal/dateTime columns),
-    rebuilt from the typed fields. Driver-side readers call it only on
-    that branch."""
+    """Lexical form of a literal term whose `v` is NULL — a lazy lexical
+    (virtual-store scans of double/decimal/dateTime columns), rebuilt from
+    the typed fields exactly as typed_ops.lexical_of/STR() renders it in
+    Spark. `row` is a term struct Row or a dict of its fields; driver-side
+    readers call this only on that branch."""
     k = row["k"]
-    if k is not None and k <= K_DECIMAL and row["d"] is not None:
-        d = row["d"].normalize()
-        return str(int(d)) if d == d.to_integral_value() else str(d)
-    if k is not None and k <= K_DOUBLE and row["x"] is not None:
-        return repr(row["x"])
+    if k is None:
+        return None
+    if k <= K_DECIMAL:
+        # canon_decimal_string: the plain decimal(38,18) string, trailing
+        # zeros and then a bare point stripped (never normalize(): its
+        # 28-digit context would round a 38-digit value)
+        d = row["d"]
+        if d is None:
+            return None
+        s = format(d, "f")
+        return s.rstrip("0").rstrip(".") if "." in s else s
+    if k <= K_DOUBLE:
+        x = row["x"]
+        if x is None:
+            return None
+        if k == K_FLOAT:
+            import struct
+            try:
+                x = struct.unpack("f", struct.pack("f", x))[0]
+            except OverflowError:  # beyond float range: Spark's cast → ±inf
+                x = x * float("inf")
+            s = _double_lexical(x)
+            return s[:-2] if s.endswith(".0") else s
+        return _double_lexical(x)
     if k == K_DATETIME and row["ts"] is not None:
-        return row["ts"].isoformat()
+        ts = row["ts"]
+        # a Row carries a process-local naive datetime, an Arrow batch one
+        # already in the session time zone: either way render the session's
+        # wall clock, as Spark's timestamp->string cast does
+        if ts.tzinfo is None:
+            ts = ts.astimezone(_session_tzinfo())
+        s = ts.replace(microsecond=0, tzinfo=None).isoformat()
+        if ts.microsecond:
+            s += f".{ts.microsecond:06d}".rstrip("0")
+        return s
     return None
 
 

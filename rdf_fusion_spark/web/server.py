@@ -257,6 +257,7 @@ class SparqlHttpServer:
     def service_description(self, accept: str):
         """SPARQL 1.1 Service Description document (sd: vocabulary),
         content-negotiated through the RDF format registry."""
+        from ..results.serializers import collect_lines
         from ..sources.formats import serialize_rdf_lines, FORMATS, NTRIPLES, format_from_name
         from ..store import GraphStore
         from ..terms import NamedNode, BlankNode
@@ -292,12 +293,12 @@ class SparqlHttpServer:
         table = [(m, f.name) for f in FORMATS for m in f.media_types]
         key = _accepted(accept, table) or "turtle"
         fmt = format_from_name(key)
-        lines = serialize_rdf_lines(quads, fmt)
-        text = "\n".join(r["line"] for r in lines.toLocalIterator())
+        text = "\n".join(collect_lines(serialize_rdf_lines(quads, fmt)))
         return text + "\n", fmt.media_type
 
     def serialize_graph(self, df, accept: str, graphs: bool = False):
         """Triples/quads DataFrame → (document text, media type)."""
+        from ..results.serializers import collect_lines
         from ..sources.formats import (FORMATS, NQUADS, NTRIPLES,
                                        format_from_name, serialize_rdf_lines)
         table = [(m, f.name) for f in FORMATS for m in f.media_types]
@@ -306,8 +307,7 @@ class SparqlHttpServer:
         fmt = format_from_name(key)
         if "graph" not in df.columns:
             df = df.withColumn("graph", F.lit(None).cast(TERM_TYPE))
-        lines = serialize_rdf_lines(df, fmt)
-        text = "\n".join(r["line"] for r in lines.toLocalIterator())
+        text = "\n".join(collect_lines(serialize_rdf_lines(df, fmt)))
         return (text + "\n" if text else ""), fmt.media_type
 
     def start(self) -> ThreadingHTTPServer:

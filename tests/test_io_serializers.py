@@ -484,3 +484,245 @@ def test_document_serializers_render_lazy_virtual_literals(spark):
     lines = [json.loads(r["line"])
              for r in S.bindings_json_df(res).collect()]
     assert all(isinstance(b[v]["value"], str) for b in lines for v in vs)
+
+    for fmt, (new, oracle) in sorted(_ORACLES.items()):
+        assert new(res) == oracle(res), fmt  # byte parity, lazy lexicals
+
+
+# ---------------------------------------------------------------------------
+# Arrow-collected document serializers: byte parity with the Row renderers
+# ---------------------------------------------------------------------------
+
+def _oracle_binding_obj(val):
+    from rdf_fusion_spark.terms import (TT_BNODE, TT_IRI, XSD_STRING,
+                                        rebuild_lexical)
+    if val is None:
+        return None
+    t, v, dt, lang = val["t"], val["v"], val["dt"], val["lang"]
+    if v is None:
+        v = rebuild_lexical(val)
+    if t == TT_IRI:
+        return {"type": "uri", "value": v}
+    if t == TT_BNODE:
+        return {"type": "bnode", "value": v}
+    out = {"type": "literal", "value": v}
+    if lang:
+        out["xml:lang"] = lang
+    elif dt and dt != XSD_STRING:
+        out["datatype"] = dt
+    return out
+
+
+def _oracle_json(res):
+    bindings = []
+    for row in res.df.toLocalIterator():
+        b = {}
+        for v in res.variables:
+            obj = _oracle_binding_obj(row[v])
+            if obj is not None:
+                b[v] = obj
+        bindings.append(b)
+    return json.dumps({"head": {"vars": list(res.variables)},
+                       "results": {"bindings": bindings}})
+
+
+def _oracle_xml(res):
+    from xml.sax.saxutils import escape as xml_escape
+
+    from rdf_fusion_spark.terms import (TT_BNODE, TT_IRI, XSD_STRING,
+                                        rebuild_lexical)
+    parts = ['<?xml version="1.0"?>\n<sparql xmlns="http://www.w3.org/'
+             '2005/sparql-results#">', "<head>"]
+    for v in res.variables:
+        parts.append(f'<variable name="{xml_escape(v)}"/>')
+    parts.append("</head><results>")
+    for row in res.df.toLocalIterator():
+        parts.append("<result>")
+        for v in res.variables:
+            val = row[v]
+            if val is None:
+                continue
+            parts.append(f'<binding name="{xml_escape(v)}">')
+            t, lex = val["t"], val["v"]
+            if lex is None:
+                lex = rebuild_lexical(val)
+            lex = xml_escape(lex)
+            if t == TT_IRI:
+                parts.append(f"<uri>{lex}</uri>")
+            elif t == TT_BNODE:
+                parts.append(f"<bnode>{lex}</bnode>")
+            elif val["lang"]:
+                parts.append(f'<literal xml:lang="{xml_escape(val["lang"])}">'
+                             f"{lex}</literal>")
+            elif val["dt"] and val["dt"] != XSD_STRING:
+                parts.append(f'<literal datatype="{xml_escape(val["dt"])}">'
+                             f"{lex}</literal>")
+            else:
+                parts.append(f"<literal>{lex}</literal>")
+            parts.append("</binding>")
+        parts.append("</result>")
+    parts.append("</results></sparql>")
+    return "".join(parts)
+
+
+def _oracle_csv(res):
+    from rdf_fusion_spark.terms import TT_BNODE, rebuild_lexical
+
+    def value(val):
+        if val is None:
+            return ""
+        v = val["v"]
+        if v is None:
+            v = rebuild_lexical(val)
+        if val["t"] == TT_BNODE:
+            v = f"_:{v}"
+        if any(ch in v for ch in ',"\n\r'):
+            return '"' + v.replace('"', '""') + '"'
+        return v
+
+    rows = [",".join(res.variables)]
+    for row in res.df.toLocalIterator():
+        rows.append(",".join(value(row[v]) for v in res.variables))
+    return "\r\n".join(rows) + "\r\n"
+
+
+def _oracle_tsv(res):
+    from rdf_fusion_spark.terms import (TT_BNODE, TT_IRI, XSD_STRING,
+                                        BlankNode, Literal, NamedNode,
+                                        rebuild_lexical)
+
+    def term(val):
+        if val is None:
+            return ""
+        t = val["t"]
+        if t == TT_IRI:
+            return str(NamedNode(val["v"]))
+        if t == TT_BNODE:
+            return str(BlankNode(val["v"]))
+        v = val["v"]
+        if v is None:
+            v = rebuild_lexical(val)
+        if val["lang"]:
+            return str(Literal(v, language=val["lang"]))
+        return str(Literal(v, val["dt"] or XSD_STRING))
+
+    rows = ["\t".join("?" + v for v in res.variables)]
+    for row in res.df.toLocalIterator():
+        rows.append("\t".join(term(row[v]) for v in res.variables))
+    return "\n".join(rows) + "\n"
+
+
+_ORACLES = {"json": (S.to_json, _oracle_json), "xml": (S.to_xml, _oracle_xml),
+            "csv": (S.to_csv, _oracle_csv), "tsv": (S.to_tsv, _oracle_tsv)}
+
+
+@pytest.fixture(scope="module")
+def mixed_store(spark):
+    from rdf_fusion_spark.terms import BlankNode, Literal, NamedNode
+    E = "http://e.org/"
+    XSD = "http://www.w3.org/2001/XMLSchema#"
+    s, p, q = NamedNode(E + "s"), NamedNode(E + "p"), NamedNode(E + "q")
+    objs = [
+        NamedNode(E + "o?a=1&b=<2>"), BlankNode("b1"),
+        Literal("chat", language="fr"), Literal("42", XSD + "integer"),
+        Literal("2.50", XSD + "decimal"), Literal("1.0E3", XSD + "double"),
+        Literal("plain, \"quoted\""), Literal("x", XSD + "string"),
+        Literal('q"b\\s\nn é \x01 <&>'), Literal("", language="en"),
+        Literal("tab\there\r", "http://e.org/dt#custom"),
+    ]
+    quads = [(None, s, p, o) for o in objs]
+    quads += [(None, BlankNode("b1"), q, Literal("é\x01"))]
+    return GraphStore.from_python_quads(spark, quads)
+
+
+@pytest.mark.parametrize("fmt", sorted(_ORACLES))
+def test_serializers_byte_parity_with_row_renderers(spark, mixed_store, fmt):
+    """Every document serializer writes exactly the bytes of the per-Row
+    renderers it replaced: IRIs, blank nodes, language-tagged, typed and
+    xsd:string literals, escapes, an unbound OPTIONAL variable (the NULL
+    struct that `toArrow()` rejects), zero variables and zero rows."""
+    new, oracle = _ORACLES[fmt]
+    queries = [
+        """SELECT ?s ?p ?o ?u WHERE { ?s ?p ?o
+             OPTIONAL { ?o <http://e.org/none> ?u } } ORDER BY ?s ?p ?o""",
+        "SELECT * WHERE {}",
+        "SELECT ?s WHERE { ?s <http://e.org/nothing> ?o }",
+    ]
+    for q in queries:
+        res = mixed_store.query(q)
+        assert new(res) == oracle(res), q
+    res = mixed_store.query(queries[0])
+    assert res.df.where(res.df["u"].isNull()).count() == 12
+
+
+def test_document_serializer_collects_in_one_job(spark):
+    """A multi-partition result is collected by exactly one Spark job (a
+    per-partition iterator would start one job per partition)."""
+    from rdf_fusion_spark.terms import Literal, NamedNode
+    quads = [(None, NamedNode(f"http://e.org/s{i}"), NamedNode("http://e.org/p"),
+              Literal(str(i))) for i in range(200)]
+    store = GraphStore(spark, GraphStore.from_python_quads(spark, quads)
+                       .quads.repartition(4))
+    res = store.query("SELECT ?s ?o WHERE { ?s <http://e.org/p> ?o }")
+    assert res.df.rdd.getNumPartitions() >= 2
+    sc = spark.sparkContext
+    group = "rfs-test-serializer-one-job"
+    for fmt, (ser, _) in sorted(_ORACLES.items()):
+        sc.setJobGroup(group + fmt, "serializer job count")
+        try:
+            body = ser(res)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group + fmt)) == 1, fmt
+        assert body.count("http://e.org/s") == 200
+
+
+def test_rebuild_lexical_matches_spark_lexical_of(spark):
+    """A lazy literal rebuilt on the driver, from a Row or from Arrow, reads
+    exactly as typed_ops.lexical_of (STR()) renders it in Spark."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from rdf_fusion_spark.functions.typed_ops import lexical_of
+    from rdf_fusion_spark.terms import (K_DATETIME, K_DECIMAL, K_DOUBLE,
+                                        K_FLOAT, K_INTEGER, TT_LITERAL,
+                                        rebuild_lexical, term_struct)
+    inf = float("inf")
+    cases = [  # (k, x, d, ts, Spark's lexical)
+        (K_DOUBLE, 1e-05, None, None, "1.0E-5"),
+        (K_DOUBLE, 1e20, None, None, "1.0E20"),
+        (K_DOUBLE, 123456789.0, None, None, "1.23456789E8"),
+        (K_DOUBLE, inf, None, None, "INF"),
+        (K_DOUBLE, -inf, None, None, "-INF"),
+        (K_DOUBLE, float("nan"), None, None, "NaN"),
+        (K_DOUBLE, 0.0, None, None, "0.0"),
+        (K_DOUBLE, -0.0, None, None, "-0.0"),
+        (K_DOUBLE, 1e7, None, None, "1.0E7"),
+        (K_DOUBLE, 0.001, None, None, "0.001"),
+        (K_DOUBLE, -1.5, None, None, "-1.5"),
+        (K_FLOAT, 0.1, None, None, "0.10000000149011612"),
+        (K_FLOAT, 3.0, None, None, "3"),
+        (K_DECIMAL, None, Decimal("0.0000001"), None, "0.0000001"),
+        (K_DECIMAL, None, Decimal("-12.50"), None, "-12.5"),
+        (K_INTEGER, None, Decimal("5"), None, "5"),
+        (K_DATETIME, None, None, "2020-01-01 00:00:00.5",
+         "2020-01-01T00:00:00.5"),
+        (K_DATETIME, None, None, "1999-12-31 23:59:59",
+         "1999-12-31T23:59:59"),
+    ]
+    df = spark.createDataFrame(
+        [c[:4] for c in cases],
+        "k tinyint, x double, d decimal(38,18), ts string")
+    term = term_struct(F.lit(TT_LITERAL), F.lit(None).cast("string"),
+                       F.lit(None).cast("string"), F.lit(None).cast("string"),
+                       k=F.col("k"), x=F.col("x"), d=F.col("d"),
+                       ts=F.col("ts").cast("timestamp"))
+    out = df.select(term.alias("term"), lexical_of(term).alias("lex"))
+    rows = out.collect()
+    arrow = S.arrow_table(out).column("term").to_pylist()
+    for case, row, arr in zip(cases, rows, arrow):
+        assert row["lex"] == case[-1], case
+        assert rebuild_lexical(row["term"]) == case[-1], case
+        assert rebuild_lexical(arr) == case[-1], case
