@@ -63,6 +63,9 @@ from .typed_ops import (
     string_term,
     TermExpr,
 )
+# every ECall result goes onto the open compile scope's temp columns
+# (see typed_ops "the compile scope")
+from .typed_ops import intern as _intern
 
 from ..terms import TERM_DDL  # noqa: F811  (re-export for translator)
 
@@ -87,47 +90,9 @@ def _err_if(cond: Column, val: Column) -> Column:
     return F.when(~cond, val)  # cond true (or NULL) → NULL (error)
 
 
-# ---------------------------------------------------------------------------
-# subexpression interning — keeps compiled plans LINEAR in expression size.
-#
-# Every builder below references its operand Columns several times
-# (numeric_rank / as_long / as_decimal / ... are each a CASE over the
-# operand), so inlining operand trees grows plans exponentially with nesting
-# and OOMs the driver JVM at plan time. The translator pushes an interner
-# (a record -> the same record over named temp columns) while compiling
-# against a DataFrame; every ECall result routes through it, so operands
-# are always plain column references. Catalyst's CollapseProject keeps
-# multi-referenced aliases materialized, preserving linearity through
-# optimization.
-# ---------------------------------------------------------------------------
-
-_INTERN_STACK: list[Callable[[TermExpr], TermExpr]] = []
-
-
-def _intern(te: TermExpr) -> TermExpr:
-    if _INTERN_STACK:
-        return _INTERN_STACK[-1](te)
-    return te
-
-
 def _intern_col(col: Column) -> Column:
     """_intern for a plain (non-term) Column."""
     return _intern(TermExpr(col)).col
-
-
-class intern_scope:
-    """Context manager installing an interner for the duration of a compile."""
-
-    def __init__(self, interner: Callable[[TermExpr], TermExpr]):
-        self.interner = interner
-
-    def __enter__(self):
-        _INTERN_STACK.append(self.interner)
-        return self.interner
-
-    def __exit__(self, *exc):
-        _INTERN_STACK.pop()
-        return False
 
 
 # ---------------------------------------------------------------------------

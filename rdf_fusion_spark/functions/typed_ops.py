@@ -14,10 +14,11 @@ FILTER (reference: lib/functions/src/builtin/native/effective_boolean_value.rs).
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
 from typing import Callable, Optional
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..terms import (
@@ -345,34 +346,84 @@ def None_x() -> Column:
 
 
 # ---------------------------------------------------------------------------
-# lazy lexical forms — inside expression compilation, numeric terms skip
-# computing their lexical `v` (Double.toString + decimal canonicalization are
-# the single hottest per-row cost); the typed fields carry the value. Any
-# term that escapes an expression (BIND result, aggregate passthrough) is
-# re-materialized by materialize_lexical(), and lexical_of() serves STR()/
-# GROUP_CONCAT over possibly-lazy terms. Constant terms are never lazy, but
-# virtual-store scans build double/decimal/dateTime columns lazily
-# (sources/relational.object_term), so a raw scan column can reach a result
-# with v=NULL: driver-side readers rebuild it (terms.rebuild_lexical).
+# the compile scope — "an expression is being compiled against frame F".
+#
+# While an Interner is open (`with Interner(df, ctx) as it:`), two things
+# hold for every expression compiled on this thread:
+#
+# - Interning keeps plans LINEAR in expression size. Every builder references
+#   its operand Columns several times (numeric_rank / as_long / as_decimal
+#   / ... are each a CASE over the operand), so inlining operand trees grows
+#   plans exponentially with nesting and OOMs the driver JVM at plan time.
+#   Every ECall result is routed through intern() onto named temp columns of
+#   F, so operands are always plain column references. Catalyst's
+#   CollapseProject keeps multi-referenced aliases materialized, preserving
+#   linearity through optimization.
+# - Lexicals are lazy. Numeric term constructors skip computing `v`
+#   (Double.toString + decimal canonicalization are the single hottest
+#   per-row cost); the typed fields carry the value. Any term that escapes
+#   an expression (BIND result, aggregate passthrough) is re-materialized by
+#   materialize_lexical(), and lexical_of() serves STR()/GROUP_CONCAT over
+#   possibly-lazy terms. Constant terms are never lazy, but virtual-store
+#   scans build double/decimal/dateTime columns lazily
+#   (sources/relational.object_term), so a raw scan column can reach a
+#   result with v=NULL: driver-side readers rebuild it
+#   (terms.rebuild_lexical), graph serializers materialize it.
+#
+# The stack of open scopes is per thread: concurrent queries (the HTTP
+# endpoint serves each request on its own thread) compile independently.
 # ---------------------------------------------------------------------------
 
-_LAZY_LEX: list[bool] = []
+class _Scopes(threading.local):
+    def __init__(self):
+        self.stack: list[Interner] = []
 
 
-class lazy_lexicals:
-    """Context manager: numeric term constructors emit v=NULL within."""
+_SCOPES = _Scopes()
 
-    def __enter__(self):
-        _LAZY_LEX.append(True)
+
+class Interner:
+    """The compile scope over one frame. Compiled records are placed on
+    named temp columns by __call__ (plain Columns by .column); read the
+    augmented frame from .df after the block, and drop .names."""
+
+    def __init__(self, df: DataFrame, ctx):
+        self.df = df
+        self.ctx = ctx  # supplies fresh(prefix) temp-column names
+        self.names: list[str] = []
+
+    def __enter__(self) -> "Interner":
+        _SCOPES.stack.append(self)
         return self
 
-    def __exit__(self, *exc):
-        _LAZY_LEX.pop()
+    def __exit__(self, *exc) -> bool:
+        _SCOPES.stack.pop()
         return False
+
+    def _add(self, name: str, col: Column) -> str:
+        self.df = self.df.withColumn(name, col)
+        self.names.append(name)
+        return name
+
+    def column(self, col: Column) -> Column:
+        return F.col(self._add(self.ctx.fresh("ex"), col))
+
+    def __call__(self, te: TermExpr) -> TermExpr:
+        # the raw channels land on __ex_N_x etc. beside the term __ex_N
+        name = self.ctx.fresh("ex")
+        return te.rehome(
+            lambda col, f: self._add(f"{name}_{f}" if f else name, col))
+
+
+def intern(te: TermExpr) -> TermExpr:
+    """te over named columns of the innermost open scope (te itself when
+    none is open)."""
+    stack = _SCOPES.stack
+    return stack[-1](te) if stack else te
 
 
 def _lazy() -> bool:
-    return bool(_LAZY_LEX)
+    return bool(_SCOPES.stack)
 
 
 def canon_decimal_string(d: Column) -> Column:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions import builtins as B
 from ..functions.sortkeys import sort_key
 from ..functions import typed_ops as tv
+from ..functions.typed_ops import Interner
 from ..sparql import algebra as A
 from ..store import ActiveGraph, GraphStore
 from ..terms import (
@@ -135,32 +136,6 @@ def _resolver(sol: Solution) -> Callable[[str], tv.TermExpr]:
         # optimizer an exponentially-inlinable literal tree
         return tv.TermExpr(NULL_TERM(), tv.SK_NULL)
     return resolve
-
-
-class Interner:
-    """Materializes each compiled subexpression as a named temp column so
-    plans stay linear in expression size (see builtins._intern). Collect the
-    compiled records with __call__ (plain Columns with .column), read the
-    augmented frame from .df, and drop .names afterwards."""
-
-    def __init__(self, df: DataFrame, ctx: "Ctx"):
-        self.df = df
-        self.ctx = ctx
-        self.names: list[str] = []
-
-    def _add(self, name: str, col: Column) -> str:
-        self.df = self.df.withColumn(name, col)
-        self.names.append(name)
-        return name
-
-    def column(self, col: Column) -> Column:
-        return F.col(self._add(self.ctx.fresh("ex"), col))
-
-    def __call__(self, te: tv.TermExpr) -> tv.TermExpr:
-        # the raw channels land on __ex_N_x etc. beside the term __ex_N
-        name = self.ctx.fresh("ex")
-        return te.rehome(
-            lambda col, f: self._add(f"{name}_{f}" if f else name, col))
 
 
 def _inject_now(expr, ctx: Ctx):
@@ -760,21 +735,14 @@ def _lat_slice(p: A.Slice, seed: Solution, key: str, ctx: Ctx) -> Solution:
 
     sol = _lat(p.inner, seed, key, ctx)
     keep = [c for c in sol.df.columns]
-    it = Interner(sol.df, ctx)
-    with B.intern_scope(it), tv.lazy_lexicals():
-        keys = []
-        for cond in sol.pending_order:
-            k = it.column(sort_key(compile_term_expr(cond.expr, sol, ctx)))
-            keys.append(k.asc_nulls_first() if cond.ascending
-                        else k.desc_nulls_last())
-    if not keys:
-        keys = [F.lit(1)]
+    df, keys = _sort_keys(sol, sol.pending_order, ctx)
+    keys = _directed(sol.pending_order, keys) or [F.lit(1)]
     rn = F.row_number().over(Window.partitionBy(F.col(key)).orderBy(*keys))
     lo = p.start or 0
     cond = F.col("__lat_rn") > lo
     if p.length is not None:
         cond = cond & (F.col("__lat_rn") <= lo + p.length)
-    df = it.df.withColumn("__lat_rn", rn).where(cond).select(*keep)
+    df = df.withColumn("__lat_rn", rn).where(cond).select(*keep)
     return replace(sol, df=df, pending_order=[])
 
 
@@ -829,8 +797,7 @@ def _apply_extend(p: A.Extend, sol: Solution, ctx: Ctx) -> Solution:
     expr = p.expr
     if _has_exists(expr):
         expr, sol = _bind_exists_markers(expr, sol, ctx)
-    it = Interner(sol.df, ctx)
-    with B.intern_scope(it), tv.lazy_lexicals():
+    with Interner(sol.df, ctx) as it:
         te = compile_term_expr(expr, sol, ctx)
     info = _var_info(te, _extend_certainly_bound(p.expr, sol),
                      _extend_expensive(expr, sol))
@@ -889,9 +856,8 @@ def _apply_extend_wave(wave: list, sol: Solution, ctx: Ctx) -> Solution:
     """One projection binding several independent BIND expressions (the
     multi-var generalization of _apply_extend; same lazy-lexical and
     named-column materialization discipline)."""
-    it = Interner(sol.df, ctx)
     terms: dict[str, tv.TermExpr] = {}
-    with B.intern_scope(it), tv.lazy_lexicals():
+    with Interner(sol.df, ctx) as it:
         for e in wave:
             terms[e.var.name] = compile_term_expr(e.expr, sol, ctx)
     new = {e.var.name: _var_info(terms[e.var.name],
@@ -1537,8 +1503,7 @@ def _apply_plain_filters(sol: Solution, plain: list, ctx: Ctx) -> Solution:
         if _has_exists(c):  # EXISTS nested below the top-level AND
             c, sol = _bind_exists_markers(c, sol, ctx)
         rewritten.append(c)
-    it = Interner(sol.df, ctx)
-    with B.intern_scope(it), tv.lazy_lexicals():
+    with Interner(sol.df, ctx) as it:
         conds = [compile_bool_expr(c, sol, ctx) for c in rewritten]
     df = it.df
     # Pushdown barrier for filters over EXPENSIVE computed vars (aggregate
@@ -2092,15 +2057,12 @@ def _translate_distinct_ordered(p: A.Distinct, ctx: Ctx) -> Optional[Solution]:
     if _order_deferrable(pending, set(names) | phantom):
         return fallback()
     dirs = {c.ascending for c in pending}
-    it = Interner(sol.df, ctx)
-    with B.intern_scope(it), tv.lazy_lexicals():
-        keys = [it.column(sort_key(compile_term_expr(c.expr, sol, ctx)))
-                for c in pending]
+    df, keys = _sort_keys(sol, pending, ctx)
     ord_name = ctx.fresh("ord")
     if len(dirs) == 1:
         # uniform direction: one struct aggregates under min/max directly
         asc = dirs.pop()
-        df = it.df.withColumn(
+        df = df.withColumn(
             ord_name,
             F.struct(*[k.alias(f"k{i}") for i, k in enumerate(keys)]))
         extra = [F.col(ord_name)]
@@ -2110,15 +2072,12 @@ def _translate_distinct_ordered(p: A.Distinct, ctx: Ctx) -> Optional[Solution]:
         # range exchange; the global row id becomes the ord column.
         asc = True
         knames = [ctx.fresh("sk") for _ in keys]
-        df = it.df.withColumns(dict(zip(knames, keys)))
+        df = df.withColumns(dict(zip(knames, keys)))
         extra = [F.col(n) for n in knames]
     out_sol = project_solution(sol.with_df(df), names, extra)
     vis = out_sol.df
     if ord_name not in vis.columns:
-        sort_cols = [
-            F.col(n).asc_nulls_first() if c.ascending
-            else F.col(n).desc_nulls_last()
-            for n, c in zip(knames, pending)]
+        sort_cols = _directed(pending, [F.col(n) for n in knames])
         vis = (vis.repartitionByRange(*sort_cols)
                .sortWithinPartitions(*sort_cols)
                .withColumn(ord_name, F.monotonically_increasing_id())
@@ -2168,18 +2127,29 @@ def _translate_project(p: A.Project, ctx: Ctx,
     return project_solution(sol, names)
 
 
+def _sort_keys(sol: Solution, conds: list, ctx: Ctx
+               ) -> tuple[DataFrame, list[Column]]:
+    """ORDER BY conditions compiled against sol: sol.df plus one interned
+    sort-key column per condition, and those key columns in order."""
+    with Interner(sol.df, ctx) as it:
+        keys = [it.column(sort_key(compile_term_expr(c.expr, sol, ctx)))
+                for c in conds]
+    return it.df, keys
+
+
+def _directed(conds: list, keys: list[Column]) -> list[Column]:
+    """Each condition's key in its direction (SPARQL: unbound sorts
+    lowest, so NULLs first ascending and last descending)."""
+    return [k.asc_nulls_first() if c.ascending else k.desc_nulls_last()
+            for c, k in zip(conds, keys)]
+
+
 def _apply_order(sol: Solution, ctx: Ctx) -> Solution:
     if not sol.pending_order:
         return sol
     keep = [c for c in sol.df.columns]
-    it = Interner(sol.df, ctx)
-    with B.intern_scope(it), tv.lazy_lexicals():
-        sort_cols = []
-        for cond in sol.pending_order:
-            key = it.column(sort_key(compile_term_expr(cond.expr, sol, ctx)))
-            sort_cols.append(key.asc_nulls_first() if cond.ascending
-                             else key.desc_nulls_last())
-    df = it.df.orderBy(*sort_cols).select(*keep)
+    df, keys = _sort_keys(sol, sol.pending_order, ctx)
+    df = df.orderBy(*_directed(sol.pending_order, keys)).select(*keep)
     return replace(sol, df=df, pending_order=[])
 
 
@@ -2543,8 +2513,7 @@ def _translate_group(p: A.Group, ctx: Ctx, sol: Optional[Solution] = None,
                 or any(_nondet(a) for a in e.args)
         return False
 
-    it = Interner(sol.df, ctx)
-    with B.intern_scope(it), tv.lazy_lexicals():
+    with Interner(sol.df, ctx) as it:
         for out_var, call in p.aggregates:
             key = repr(call)
             agg_te = None if _nondet(call.expr) else seen_calls.get(key)

@@ -136,8 +136,16 @@ def serialize_rdf_lines(quads: DataFrame, fmt: RdfFormat) -> DataFrame:
     TriG uses the repeated-single-statement block form
     `<g> { s p o . }` — valid TriG that stays line-parallel (no
     driver-side grouping by graph at any scale). Non-graph formats
-    serialize the union of all graphs' triples."""
+    serialize the union of all graphs' triples.
+
+    The single entry for every RDF output (endpoint, CLI, write_rdf):
+    a virtual-store scan leaves double/decimal/dateTime objects with a
+    lazy lexical (v NULL), so the object's lexical is materialized here
+    once, before any line format reads `v`."""
+    from ..functions.typed_ops import TermExpr, materialize_lexical
     from .ntriples import format_term, quads_to_lines
+    quads = quads.withColumn(
+        "object", materialize_lexical(TermExpr(F.col("object"))))
     if fmt is NQUADS:
         return quads_to_lines(quads)
     if fmt is TRIG:

@@ -221,6 +221,3 @@ def quads_to_lines(quads: DataFrame) -> DataFrame:
                F.concat(F.lit(" "), format_term(F.col("graph")))).otherwise(F.lit(""))
     return quads.select(F.concat(*parts, g, F.lit(" .")).alias("line"))
 
-
-def write_ntriples(quads: DataFrame, path: str, mode: str = "overwrite") -> None:
-    quads_to_lines(quads).write.mode(mode).text(path)

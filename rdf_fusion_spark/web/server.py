@@ -16,6 +16,13 @@ The server holds ONE GraphStore; POST /store swaps it for a new store whose
 quads are the union of old and uploaded data (localCheckpoint keeps lineage
 flat across uploads). Queries run on Spark worker threads — the HTTP layer
 is a thin driver-side shim, all heavy lifting stays in the cluster.
+
+Requests are served concurrently, one thread each, and each query compiles
+independently: the translator's compile scope (typed_ops.Interner) is per
+thread. A query the client got wrong (syntax, or an expression that cannot
+compile) is answered 400, an unsupported feature 501, and any other failure
+500 with the error's type and first line only; its traceback stays in the
+server log.
 """
 
 from __future__ import annotations
@@ -118,17 +125,29 @@ class SparqlHttpServer:
                                named=[NamedNode(i) for i in ng])
 
             # ---- query operation
+            def _evaluation_error(self, query: str, e: Exception):
+                # the traceback (and a Spark error's plan text) names server
+                # internals: log it, send the client the error's first line
+                _log.exception("evaluation error for query %r", query)
+                first = str(e).split("\n", 1)[0]
+                return self._bad(
+                    f"evaluation error: {type(e).__name__}: {first}", 500)
+
             def _run_query(self, query: str, params):
+                from ..functions.builtins import SparqlCompileError
                 from ..plans.translator import (AskResult, GraphResult,
                                                 SelectResult)
                 from ..results import serializers as S
+                from ..sparql.parser import SparqlSyntaxError
                 try:
                     res = server.store.query(query,
                                              dataset=self._dataset(params))
+                except (SparqlSyntaxError, SparqlCompileError) as e:
+                    return self._bad(f"query error: {e}")
                 except NotImplementedError as e:
                     return self._bad(f"unsupported: {e}", 501)
                 except Exception as e:
-                    return self._bad(f"query error: {e}")
+                    return self._evaluation_error(query, e)
                 accept = self.headers.get("Accept", "")
                 try:
                     if isinstance(res, (SelectResult, AskResult)):
@@ -153,11 +172,7 @@ class SparqlHttpServer:
                 except BrokenPipeError:
                     raise
                 except Exception as e:
-                    # the traceback names server internals: log it, send
-                    # the client only the error itself
-                    _log.exception("evaluation error for query %r", query)
-                    return self._bad(
-                        f"evaluation error: {type(e).__name__}: {e}", 500)
+                    return self._evaluation_error(query, e)
 
             # ---- HTTP verbs
             def do_GET(self):

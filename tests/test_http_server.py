@@ -119,6 +119,86 @@ def test_evaluation_error_is_500_without_traceback(endpoint):
         registry.unregister(iri)
 
 
+def test_internal_failure_is_500_not_query_error(endpoint):
+    """A failure inside the engine while a well-formed query is compiled
+    is not the client's fault: 500 with the error's type and first line,
+    no traceback and no plan text."""
+    from rdf_fusion_spark.functions import registry
+    iri = "http://example.org/fn/divzero"
+    registry.register(iri, lambda args: 1 / 0)
+    q = ("SELECT (<%s>(?name) AS ?v) WHERE "
+         "{ ?s <http://xmlns.com/foaf/0.1/name> ?name }" % iri)
+    try:
+        _get(endpoint, "/query?query=" + urllib.parse.quote(q))
+        assert False, "expected HTTPError"
+    except urllib.error.HTTPError as e:
+        body = e.read().decode()
+        assert e.code == 500
+        assert body == "evaluation error: ZeroDivisionError: division by zero"
+    finally:
+        registry.unregister(iri)
+
+
+def test_concurrent_requests_match_sequential(spark):
+    """Requests compile on their own server threads at the same time:
+    every body equals the one the same query gets when sent alone."""
+    import threading
+
+    from rdf_fusion_spark import GraphStore, Literal, NamedNode
+    from rdf_fusion_spark.web import SparqlHttpServer
+
+    ex, xsd = "http://example.org/", "http://www.w3.org/2001/XMLSchema#"
+    quads = []
+    for i in range(20):
+        s = NamedNode(f"{ex}s{i}")
+        quads += [
+            (None, s, NamedNode(ex + "n"), Literal(str(i), xsd + "integer")),
+            (None, s, NamedNode(ex + "g"), Literal(f"g{i % 3}")),
+        ]
+    pre = "PREFIX ex: <http://example.org/> "
+    queries = [pre + q for q in (
+        "SELECT ?s ?m WHERE { ?s ex:n ?n BIND(?n * 2 + 1 AS ?m) }",
+        "SELECT ?s WHERE { ?s ex:n ?n FILTER(?n * 2 > 10) }",
+        "SELECT ?g (SUM(?n * 2) AS ?t) WHERE { ?s ex:g ?g ; ex:n ?n } "
+        "GROUP BY ?g ORDER BY ?g",
+        "SELECT ?s ?n WHERE { ?s ex:n ?n } ORDER BY DESC(?n * 3 + 1) LIMIT 7",
+    )]
+    server = SparqlHttpServer(GraphStore.from_python_quads(spark, quads)
+                              .cached(), "127.0.0.1", 0)
+    server.start_background()
+
+    def fetch(q):
+        try:
+            return _get(server, "/query?query=" + urllib.parse.quote(q))[2]
+        except urllib.error.HTTPError as e:
+            return f"{e.code} {e.read().decode()[:200]}"
+
+    try:
+        alone = [fetch(q) for q in queries]
+        assert all(b.startswith("{") for b in alone), alone
+        got = [[] for _ in range(4)]
+        start = threading.Barrier(4)
+
+        def client(k):
+            start.wait()
+            for j in range(4):  # client k starts at query k: all overlap
+                i = (k + j) % 4
+                got[k].append((i, fetch(queries[i])))
+
+        threads = [threading.Thread(target=client, args=(k,))
+                   for k in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+        wrong = [(i, body) for per in got for i, body in per
+                 if body != alone[i]]
+        assert sum(map(len, got)) == 16
+        assert not wrong, f"{len(wrong)} of 16 differ, first: {wrong[0]}"
+    finally:
+        server.stop()
+
+
 def test_data_upload_and_dataset_params(endpoint):
     # upload into a named graph, then query it via named-graph-uri
     status, _, body = _post(

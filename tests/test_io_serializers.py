@@ -489,6 +489,55 @@ def test_document_serializers_render_lazy_virtual_literals(spark):
         assert new(res) == oracle(res), fmt  # byte parity, lazy lexicals
 
 
+def test_graph_serializers_render_lazy_virtual_literals(spark):
+    """CONSTRUCT over raw virtual-store decimal/double/dateTime columns:
+    the objects reach the graph with a lazy lexical (v=NULL), and every
+    RDF line format must still render each object as STR() does."""
+    from pyspark.sql import functions as F
+
+    from rdf_fusion_spark.entry_queries import PROLOGUE
+    from rdf_fusion_spark.sources.formats import (
+        NQUADS, NTRIPLES, RDFXML, TRIG, TURTLE, serialize_rdf_lines)
+    from rdf_fusion_spark.sources.rdfxml import parse_rdfxml
+    from rdf_fusion_spark.sources.trig import parse_trig
+    from rdf_fusion_spark.sources.turtle import parse_turtle
+    from rdf_fusion_spark.sources.virtual import VirtualRelationalStore
+    from rdf_fusion_spark.terms import TERM_TYPE
+
+    st = VirtualRelationalStore(spark, "/root/testdata/sf0.001")
+    where = """WHERE { { SELECT * WHERE {
+        ?li l:l_quantity ?q ; l:l_extendedprice ?p ; l:l_shipdate ?d
+    } ORDER BY ?li LIMIT 40 } }"""
+    want = {}
+    for r in st.query(PROLOGUE + """
+            SELECT ?li (STR(?q) AS ?qs) (STR(?p) AS ?ps) (STR(?d) AS ?ds)
+                   (DATATYPE(?q) AS ?qt) (DATATYPE(?p) AS ?pt)
+                   (DATATYPE(?d) AS ?dt) """ + where).df.collect():
+        for v in "qpd":
+            want[(r["li"]["v"], "urn:" + v)] = (r[v + "s"]["v"],
+                                                r[v + "t"]["v"])
+    assert len(want) == 120
+    graph = st.query(PROLOGUE + "CONSTRUCT { ?li <urn:q> ?q ; <urn:p> ?p ;"
+                     " <urn:d> ?d } " + where).df
+    graph = graph.withColumn("graph", F.lit(None).cast(TERM_TYPE))
+    assert any(r["object"]["v"] is None
+               for r in graph.collect())  # really lazy
+
+    parsers = {
+        NTRIPLES: parse_turtle,  # N-Triples is a subset of Turtle
+        NQUADS: parse_turtle,  # default-graph N-Quads lines are N-Triples
+        TURTLE: parse_turtle,
+        TRIG: lambda text: [q[1:] for q in parse_trig(text)],
+        RDFXML: parse_rdfxml,
+    }
+    for fmt, parse in parsers.items():
+        lines = S.collect_lines(serialize_rdf_lines(graph, fmt))
+        assert None not in lines, fmt.name
+        got = {(s.iri, p.iri): (o.lexical, o.datatype)
+               for s, p, o in parse("\n".join(lines))}
+        assert got == want, fmt.name
+
+
 # ---------------------------------------------------------------------------
 # Arrow-collected document serializers: byte parity with the Row renderers
 # ---------------------------------------------------------------------------

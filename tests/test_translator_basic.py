@@ -120,3 +120,42 @@ def test_group_count(spiderman):
     got = {r["s"].iri: r["n"] for r in by_name}
     assert got[EX + "spiderman"] == Literal("2", "http://www.w3.org/2001/XMLSchema#integer")
     assert got[EX + "green-goblin"] == Literal("1", "http://www.w3.org/2001/XMLSchema#integer")
+
+
+def test_compile_scope_is_per_thread(spark, spiderman):
+    """A compile scope held open on one thread does not reach what
+    another thread compiles: there, terms built outside any scope stay
+    eager and un-interned, and a query's rows are right."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from rdf_fusion_spark.functions import typed_ops as tv
+    from rdf_fusion_spark.functions.typed_ops import Interner
+
+    held = Interner(spiderman.quads, ctx=None)  # no names to hand out
+    entered, release = threading.Event(), threading.Event()
+
+    def hold():
+        with held:
+            entered.set()
+            release.wait(120)
+
+    t = threading.Thread(target=hold)
+    t.start()
+    try:
+        assert entered.wait(60)
+        five = tv.int_term(F.lit(5))
+        assert tv.intern(five) is five
+        assert spark.range(1).select(five.col["v"]).first()[0] == "5"
+        res = spiderman.query(
+            "SELECT ?name ?len WHERE { ?s <%sname> ?name "
+            "BIND(STRLEN(?name) + 1 AS ?len) }" % FOAF)
+        got = sorted((n.lexical, ln.lexical) for n, ln in rows(res))
+    finally:
+        release.set()
+        t.join(60)
+    assert not t.is_alive()
+    assert got == [("Green Goblin", "13"), ("Spiderman", "10"),
+                   ("Человек-паук", "13")]
+    assert held.names == []
