@@ -16,6 +16,7 @@ Exactness conventions (doubles are the enemy):
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -93,7 +94,15 @@ class QuerySpec:
         store = get_graph(spark, sf_dir)
         res = store.query(PROLOGUE + self.sparql)
         cols = [_u(res.df[name], typ).alias(name) for name, typ in self.out]
-        return res.df.select(*cols)
+        return _owning(res.df.select(*cols), res)
+
+
+def _owning(frame: DataFrame, res) -> DataFrame:
+    """`frame`, derived from `res.df`, keeps the query result `res` (and
+    so its shared-subquery caches) alive until the frame itself is
+    dropped, e.g. evicted from _PLAN_CACHE."""
+    weakref.finalize(frame, res.close).atexit = False
+    return frame
 
 
 # exact decimal via round-trip string, for order-independent double sums
@@ -547,11 +556,11 @@ def _run_construct(spark: SparkSession, sf_dir: str) -> DataFrame:
       CONSTRUCT { ?cust <x:hasOrder> ?ord }
       WHERE { ?ord o:o_custkey ?cust }
     """)
-    return res.df.select(
+    return _owning(res.df.select(
         F.col("subject")["v"].alias("s"),
         F.col("predicate")["v"].alias("p"),
         F.col("object")["v"].alias("o"),
-    )
+    ), res)
 
 
 CONSTRUCT_ORACLE = """
@@ -588,8 +597,10 @@ def _run_service_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
         """)
         # the SERVICE fetch materializes during translation, so the
         # returned DataFrame no longer needs the endpoint
-        return res.df.select(_u(F.col("cust_name"), "str").alias("cust_name"),
-                             _u(F.col("nation_name"), "str").alias("nation_name"))
+        return _owning(
+            res.df.select(_u(F.col("cust_name"), "str").alias("cust_name"),
+                          _u(F.col("nation_name"), "str").alias("nation_name")),
+            res)
     finally:
         server.stop()
 
@@ -2023,10 +2034,11 @@ _q(
 
 def _run_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = get_graph(spark, sf_dir)
-    res = store.query(PROLOGUE + """
+    with store.query(PROLOGUE + """
       ASK { ?cust c:c_acctbal ?ab . FILTER(?ab > 9000.0) }
-    """)
-    return spark.createDataFrame([(bool(res.value),)], "answer boolean")
+    """) as res:
+        answer = res.value
+    return spark.createDataFrame([(answer,)], "answer boolean")
 
 
 ASK_ORACLE = """
@@ -2037,11 +2049,11 @@ SELECT EXISTS(SELECT 1 FROM customer WHERE c_acctbal > 9000.0) AS answer
 def _run_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = get_graph(spark, sf_dir)
     res = store.query(PROLOGUE + "DESCRIBE <x:n:7>")
-    return res.df.select(
+    return _owning(res.df.select(
         F.col("subject")["v"].alias("s"),
         F.col("predicate")["v"].alias("p"),
         F.col("object")["v"].alias("o"),
-    )
+    ), res)
 
 
 DESCRIBE_ORACLE = """
@@ -3698,11 +3710,11 @@ def _run_bsbm_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
       DESCRIBE ?x WHERE { SELECT ?x WHERE { <x:o:7> o:o_custkey ?x } }
     """)
     from .functions.typed_ops import lexical_of
-    return res.df.select(
+    return _owning(res.df.select(
         F.col("subject")["v"].alias("s"),
         F.col("predicate")["v"].alias("p"),
         lexical_of(F.col("object")).alias("o"),
-    )
+    ), res)
 
 
 BSBM_DESCRIBE_ORACLE = """
@@ -3757,11 +3769,11 @@ def _run_bsbm_construct(spark: SparkSession, sf_dir: str) -> DataFrame:
       }
     """)
     from .functions.typed_ops import lexical_of
-    return res.df.select(
+    return _owning(res.df.select(
         F.col("subject")["v"].alias("s"),
         F.col("predicate")["v"].alias("p"),
         lexical_of(F.col("object")).alias("o"),
-    )
+    ), res)
 
 
 BSBM_CONSTRUCT_ORACLE = """
@@ -4556,7 +4568,8 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # excluded: caching them would reuse a materialization, not a plan
 # (their second run would measure an index lookup, not the operator).
 # Bounded LRU: a translated plan pins its localCheckpoint blocks (Kleene
-# deltas, stream drains) for as long as it is referenced — an unbounded
+# deltas, stream drains) and its SPARQL result's shared-subquery caches
+# (see _owning) for as long as it is referenced — an unbounded
 # cache walking the full 86-query registry pinned every query's blocks at
 # once and OOMed a default 1g driver heap around query 60. 16 slots keep
 # the bench's min-of-2 repeats translation-free while letting older
@@ -4598,28 +4611,17 @@ _gc_tick = [0]
 
 def _prepared(name: str, fn: Callable[[SparkSession, str], DataFrame]
               ) -> Callable[[SparkSession, str], DataFrame]:
-    # Shared-subquery persists are QUERY-scoped (the next evaluate_query
-    # on the session releases them), so a cached plan re-executed after
-    # other queries ran would recompute each shared subtree once per
-    # consumer (round-6 ADVICE #3). A cache hit therefore RE-REGISTERS
-    # the plan's own persist snapshot — the registry still holds at most
-    # one query's persists, so this is NOT the round-5 process-global
-    # FIFO memory pressure that regressed q3/q5 (BASELINE.md).
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .plans import translator as _T
-
         # applicationId, not id(spark): object ids can be reused after a
         # stopped session is GC'd, which would serve a dead plan
         key = (spark.sparkContext.applicationId, name, sf_dir.rstrip("/"))
-        hit = _PLAN_CACHE.get(key)
-        if hit is None:
+        df = _PLAN_CACHE.get(key)
+        if df is None:
             df = fn(spark, sf_dir)
-            _PLAN_CACHE[key] = (df, _T.query_shared_persists(spark))
+            _PLAN_CACHE[key] = df
             if len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
                 _PLAN_CACHE.popitem(last=False)
         else:
-            df, persists = hit
-            _T.reregister_persists(spark, persists)
             _PLAN_CACHE.move_to_end(key)
         # ContextCleaner frees dropped localCheckpoint/broadcast blocks
         # only after a JVM GC notices the dead weak refs; a long single

@@ -10,9 +10,9 @@ Catalyst then applies predicate pushdown / column pruning / join selection.
 from __future__ import annotations
 
 import datetime as _dt
-import threading
+import weakref
 from dataclasses import dataclass, field, replace
-from typing import Callable, Optional
+from typing import Callable, Iterable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -88,10 +88,9 @@ class Ctx:
     # repeat into the SAME DataFrame subtree makes the physical planner
     # reuse the aggregation exchange instead of recomputing the chain.
     subquery_cache: dict = field(default_factory=dict)
-    # α-keys of shared subqueries already persist()-ed (see
-    # _persist_shared_subquery); None disables the persist (tests that
-    # assert raw plan shapes)
-    shared_persisted: Optional[set] = field(default_factory=set)
+    # α-key → shared subquery DataFrame persist()-ed for this query (see
+    # _persist_shared_subquery); the query's result releases them
+    persisted: dict = field(default_factory=dict)
     # constant endpoint terms of the path PATTERN currently being
     # lowered (paths.translate_path_pattern): a zero-length path must
     # self-relate a bound endpoint even when that term appears nowhere
@@ -1831,125 +1830,22 @@ def _contains_group(p) -> bool:
 
 # Shared-subquery persists are registered in the session CacheManager,
 # which holds them STRONGLY (Dataset.persist is not ContextCleaner-
-# collected like raw RDD blocks) — a long-lived session translating many
-# subsumption-shaped queries would pin every shared aggregate forever.
-#
-# Lifetime policy (round-6; replaces the round-5 process-global FIFO,
-# which pinned up to 12 grouped relations into EVERY later query's
-# memory budget across a long bench session — the q3/q5 like-for-like
-# regression): persists are scoped to the QUERY that created them, keyed
-# per SparkSession. The next evaluate_query() on the same session
-# releases the previous query's persists — by then its result has
-# normally been consumed; if a caller still holds an uncollected result
-# DataFrame, unpersist merely forces a recompute (cache is a pure
-# optimization, never a correctness dependency). A per-query cap bounds
-# pathological single queries. All mutation is lock-guarded (sessions
-# may run queries from multiple threads; eviction must not race).
-_PERSIST_REGISTRY: dict = {}   # id(session) -> (session, [DataFrame])
-_PERSIST_LOCK = threading.Lock()
-_SHARED_PERSIST_CAP = 12              # per query, backstop only
+# collected like raw RDD blocks), so each one must be unpersisted
+# explicitly. They belong to the query that created them: Ctx.persisted
+# collects them and the query's result releases them (QueryResult.close,
+# or its finalizer when the result is dropped). A per-query cap bounds
+# pathological single queries.
+_SHARED_PERSIST_CAP = 12
 
 
-def _session_key(session) -> int:
-    # id() is safe as the key ONLY because each entry also holds a
-    # strong reference to its session (the tuple below): the object
-    # cannot be garbage-collected — and its id cannot be reused by a
-    # brand-new session — while its entry exists. Entries of STOPPED
-    # sessions are swept by _prune_stopped_sessions on every registry
-    # touch, so a stopped-and-abandoned session's last query no longer
-    # pins its DataFrames forever (round-6 ADVICE).
-    return id(session)
-
-
-def _session_stopped(session) -> bool:
-    try:
-        return session.sparkContext._jsc is None
-    except Exception:
-        return True
-
-
-def _prune_stopped_sessions() -> list:
-    """Pop every entry whose session has been stopped; caller unpersists
-    outside the lock. Must be called with _PERSIST_LOCK held."""
-    dead = [k for k, (sess, _) in _PERSIST_REGISTRY.items()
-            if _session_stopped(sess)]
-    out: list = []
-    for k in dead:
-        out.extend(_PERSIST_REGISTRY.pop(k)[1])
-    return out
-
-
-def _release_prior_persists(session) -> None:
-    """Unpersist every shared-subquery cache the PREVIOUS query on this
-    session created. Called at the top of evaluate_query."""
-    with _PERSIST_LOCK:
-        _, old = _PERSIST_REGISTRY.pop(_session_key(session), (None, []))
-        old = list(old) + _prune_stopped_sessions()
-    for df in old:
+def _unpersist_all(frames: Iterable[DataFrame]) -> None:
+    """Drop the cached blocks of each frame (best effort: the cache is an
+    optimization, never a correctness dependency)."""
+    for df in frames:
         try:
             df.unpersist(blocking=False)
         except Exception:
             pass
-
-
-def query_shared_persists(session) -> list:
-    """Snapshot of the shared-subquery DataFrames registered by the most
-    recently evaluated query on this session (for prepared-plan caches —
-    see reregister_persists)."""
-    with _PERSIST_LOCK:
-        _, lst = _PERSIST_REGISTRY.get(_session_key(session), (None, []))
-        return list(lst)
-
-
-def reregister_persists(session, dfs: list) -> None:
-    """Restore a cached prepared plan's shared-subquery persists before
-    it is re-executed (entry_queries._prepared cache hits).
-
-    Without this, the next query's _release_prior_persists drops the
-    plan's caches and every later re-execution recomputes each shared
-    subtree once per consumer — the within-plan CSE cost the persist was
-    added to avoid (round-6 ADVICE #3). The lifetime POLICY is unchanged
-    and deliberately NOT the round-5 process-global FIFO: the registry
-    still holds at most one query's persists per session — re-registering
-    releases whatever other query held the slot (minus any DataFrames
-    shared with the new set), and the next evaluate_query releases these
-    again. persist() after unpersist() re-marks the same Dataset for
-    caching; on a still-cached one it is a no-op."""
-    if not dfs:
-        return
-    from pyspark import StorageLevel
-    installed = list(dfs)
-    with _PERSIST_LOCK:
-        _, old = _PERSIST_REGISTRY.pop(_session_key(session), (None, []))
-        stale = [d for d in old if all(d is not n for n in dfs)]
-        stale += _prune_stopped_sessions()
-        _PERSIST_REGISTRY[_session_key(session)] = (session, installed)
-    for d in stale:
-        try:
-            d.unpersist(blocking=False)
-        except Exception:
-            pass
-    for d in dfs:
-        try:
-            d.persist(StorageLevel.MEMORY_AND_DISK)
-        except Exception:
-            pass
-    # Re-check under the lock that OUR entry still holds the slot: a
-    # concurrent _release_prior_persists on the same session can pop and
-    # unpersist the set between the install above and the persist() loop,
-    # after which the loop re-marks the DataFrames for caching with no
-    # registry entry tracking them — cached blocks would leak until
-    # session stop (multi-threaded sessions only). If the slot moved,
-    # undo the untracked persists (round-8 ADVICE).
-    with _PERSIST_LOCK:
-        cur = _PERSIST_REGISTRY.get(_session_key(session))
-        still_ours = cur is not None and cur[1] is installed
-    if not still_ours:
-        for d in dfs:
-            try:
-                d.unpersist(blocking=False)
-            except Exception:
-                pass
 
 
 def _persist_shared_subquery(key, p: A.Project, sol: Solution,
@@ -1967,11 +1863,9 @@ def _persist_shared_subquery(key, p: A.Project, sol: Solution,
     into EVERY consumer plan at action time (lookup is by canonicalized
     subtree, so the first consumer built before this call benefits too).
     The cached relation is the GROUPED output — at warehouse scale it is
-    orders of magnitude smaller than the join input. Lifetime is bounded
-    by _PERSIST_REGISTRY above: query-scoped, released by the next
-    evaluate_query on the session (CacheManager holds persisted Datasets
-    strongly, so explicit unpersist is required)."""
-    if ctx.shared_persisted is None or key in ctx.shared_persisted:
+    orders of magnitude smaller than the join input. The frame joins
+    ctx.persisted, which the query's result releases."""
+    if key in ctx.persisted or len(ctx.persisted) >= _SHARED_PERSIST_CAP:
         return
     if not _contains_group(p):
         return  # cheap subtree: recomputation beats a cache round-trip
@@ -1979,21 +1873,7 @@ def _persist_shared_subquery(key, p: A.Project, sol: Solution,
         if sol.df.isStreaming:
             return
         from pyspark import StorageLevel
-        sol.df.persist(StorageLevel.MEMORY_AND_DISK)
-        ctx.shared_persisted.add(key)
-        sess = sol.df.sparkSession
-        evict = None
-        with _PERSIST_LOCK:
-            _, lst = _PERSIST_REGISTRY.setdefault(_session_key(sess),
-                                                  (sess, []))
-            lst.append(sol.df)
-            if len(lst) > _SHARED_PERSIST_CAP:
-                evict = lst.pop(0)
-        if evict is not None:
-            try:
-                evict.unpersist(blocking=False)
-            except Exception:
-                pass
+        ctx.persisted[key] = sol.df.persist(StorageLevel.MEMORY_AND_DISK)
     except Exception:  # pragma: no cover - persist is best-effort
         pass
 
@@ -2909,39 +2789,61 @@ def _explain(df: DataFrame, breaches: Optional[list] = None
 
 
 @dataclass
-class SelectResult:
+class QueryResult:
+    """A translated query: its lazy DataFrame, the split-union guard
+    breaches recorded while translating it, and the shared-subquery
+    frames it persisted (see _persist_shared_subquery).
+
+    The result owns those caches: they stay until close(), the end of a
+    `with` block, or until the result is garbage-collected. A closed
+    result still executes; it only recomputes the shared subtrees."""
     df: DataFrame
-    variables: list
     guard_breaches: list = field(default_factory=list)
+    persists: list = field(default_factory=list)
+
+    def __post_init__(self):
+        # the finalizer holds the frames, not the result, so a dropped
+        # result is still collected; at interpreter exit the JVM (and its
+        # cache) goes away by itself, so nothing runs then
+        self._release = weakref.finalize(self, _unpersist_all,
+                                         self.persists)
+        self._release.atexit = False
 
     def explanation(self) -> QueryExplanation:
         return _explain(self.df, self.guard_breaches)
 
+    def close(self) -> None:
+        """Release the persisted frames (idempotent)."""
+        self._release()
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
 
 @dataclass
-class AskResult:
+class SelectResult(QueryResult):
+    variables: list = field(default_factory=list, kw_only=True)
+
+
+@dataclass
+class AskResult(QueryResult):
     """ASK result. `value` evaluates LAZILY per access (head(1) on the
     underlying solution), so a prepared ASK re-executes against current
     data like the other result kinds; `df` exposes the solution relation
     for explanation/reuse."""
-    df: DataFrame
-    guard_breaches: list = field(default_factory=list)
 
     @property
     def value(self) -> bool:
         return bool(self.df.head(1))
 
-    def explanation(self) -> QueryExplanation:
-        return _explain(self.df, self.guard_breaches)
-
 
 @dataclass
-class GraphResult:
-    df: DataFrame  # columns subject, predicate, object (term structs)
-    guard_breaches: list = field(default_factory=list)
-
-    def explanation(self) -> QueryExplanation:
-        return _explain(self.df, self.guard_breaches)
+class GraphResult(QueryResult):
+    """CONSTRUCT/DESCRIBE result: `df` has the columns subject,
+    predicate and object (term structs)."""
 
 
 def _now_literal() -> Literal:
@@ -3013,20 +2915,32 @@ def _check_service_endpoints(p) -> None:
 
 
 def evaluate_query(store: GraphStore, q, optimize: bool = True):
-    # release the PREVIOUS query's shared-subquery persists on this
-    # session (see _PERSIST_REGISTRY): caches are query-scoped so a long
-    # bench run never accumulates pinned grouped relations
-    _release_prior_persists(store.spark)
+    """Translate a parsed query into its result. The shared-subquery
+    frames persisted while translating belong to the result (see
+    QueryResult); a failed translation releases them at once."""
     ctx = _dataset_ctx(store, getattr(q, "dataset", None), optimize=optimize)
+    try:
+        return _evaluate(store, q, ctx)
+    except BaseException:
+        _unpersist_all(ctx.persisted.values())
+        raise
+
+
+def _evaluate(store: GraphStore, q, ctx: Ctx) -> QueryResult:
     _join.reset_guard_breaches()
+
+    def result(kind, df, **kw) -> QueryResult:
+        return kind(df=df, guard_breaches=_join.guard_breaches(),
+                    persists=list(ctx.persisted.values()), **kw)
+
     if getattr(q, "pattern", None) is not None:
         _check_service_endpoints(q.pattern)
         # aggregate subsumption (plans/subsumption.py): repeated GROUP BY
         # cores collapse to one shared aggregation the subquery cache then
         # evaluates once. Returns a NEW tree; q itself is never mutated
         # (parsed queries may be cached upstream).
-        if optimize and isinstance(q, (A.SelectQuery, A.AskQuery,
-                                       A.ConstructQuery)):
+        if ctx.optimize and isinstance(q, (A.SelectQuery, A.AskQuery,
+                                           A.ConstructQuery)):
             from .subsumption import subsume_group_aggregates
             q = replace(q,
                         pattern=subsume_group_aggregates(q.pattern, store))
@@ -3037,12 +2951,11 @@ def evaluate_query(store: GraphStore, q, optimize: bool = True):
         vars_ = sorted(sol.maybe)
         if isinstance(q.pattern, (A.Project, A.Distinct, A.Reduced, A.Slice, A.OrderBy)):
             vars_ = _projected_vars(q.pattern) or vars_
-        return SelectResult(df=sol.df, variables=vars_,
-                            guard_breaches=_join.guard_breaches())
+        return result(SelectResult, sol.df, variables=vars_)
 
     if isinstance(q, A.AskQuery):
         sol = translate(q.pattern, ctx)
-        return AskResult(df=sol.df, guard_breaches=_join.guard_breaches())
+        return result(AskResult, sol.df)
 
     if isinstance(q, A.ConstructQuery):
         sol = translate(q.pattern, ctx)
@@ -3103,8 +3016,7 @@ def evaluate_query(store: GraphStore, q, optimize: bool = True):
                 T.StructField("subject", _TT), T.StructField("predicate", _TT),
                 T.StructField("object", _TT)])
             out = store.spark.createDataFrame([], schema)
-        return GraphResult(df=out.dropDuplicates(),
-                           guard_breaches=_join.guard_breaches())
+        return result(GraphResult, out.dropDuplicates())
 
     if isinstance(q, A.DescribeQuery):
         # reference approximation: return all triples whose subject is a
@@ -3174,8 +3086,7 @@ def evaluate_query(store: GraphStore, q, optimize: bool = True):
                 break
             out = out.unionByName(new).dropDuplicates()
             described = out.select("subject").distinct()
-        return GraphResult(df=out,
-                           guard_breaches=_join.guard_breaches())
+        return result(GraphResult, out)
 
     raise NotImplementedError(f"query form {type(q).__name__}")
 

@@ -16,6 +16,7 @@ explicitly the OLTP-ish edge of this engine; the 100 TB path is bulk load.
 from __future__ import annotations
 
 import uuid as _uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -193,9 +194,13 @@ def _quads_to_pattern(quads: list):
     return pattern if pattern is not None else A.BGP([])
 
 
-def _eval_pattern(store, pattern, dataset, with_graph):
+@contextmanager
+def _solutions(store, pattern, dataset, with_graph):
+    """The WHERE's solutions; the shared-subquery caches its translation
+    persisted are released once the operation is applied."""
     from ..store import ActiveGraph
-    from .translator import Ctx, _dataset_ctx, _now_literal, translate
+    from .translator import (Ctx, _dataset_ctx, _now_literal,
+                             _unpersist_all, translate)
     if dataset is not None:
         ctx = _dataset_ctx(store, dataset)
     elif with_graph is not None:
@@ -203,7 +208,10 @@ def _eval_pattern(store, pattern, dataset, with_graph):
                   now=_now_literal())
     else:
         ctx = _dataset_ctx(store, None)
-    return translate(pattern, ctx)
+    try:
+        yield translate(pattern, ctx)
+    finally:
+        _unpersist_all(ctx.persisted.values())
 
 
 # ---------------------------------------------------------------------------
@@ -229,23 +237,26 @@ def _apply(store, op) -> None:
         remove_quads_df(store, _ground_quads_df(store, op.quads))
         return
     if isinstance(op, A.DeleteWhereOp):
-        sol = _eval_pattern(store, _quads_to_pattern(op.quads), None, None)
-        remove_quads_df(
-            store, _instantiate(sol, op.quads, None, mint_bnodes=False))
+        with _solutions(store, _quads_to_pattern(op.quads), None,
+                        None) as sol:
+            remove_quads_df(
+                store, _instantiate(sol, op.quads, None, mint_bnodes=False))
         return
     if isinstance(op, A.ModifyOp):
-        sol = _eval_pattern(store, op.pattern, op.dataset, op.with_graph)
-        # both sets derive from the PRE-state; materialize the solution so
-        # the insert half does not observe the applied deletes
-        sol = sol.with_df(sol.df.localCheckpoint(eager=True))
-        dels = _instantiate(sol, op.delete_quads, op.with_graph,
-                            mint_bnodes=False) if op.delete_quads else None
-        ins = _instantiate(sol, op.insert_quads, op.with_graph,
-                           mint_bnodes=True) if op.insert_quads else None
-        if dels is not None:
-            remove_quads_df(store, dels)
-        if ins is not None:
-            insert_quads_df(store, ins)
+        with _solutions(store, op.pattern, op.dataset,
+                        op.with_graph) as sol:
+            # both sets derive from the PRE-state; materialize the
+            # solution so the insert half does not observe the applied
+            # deletes
+            sol = sol.with_df(sol.df.localCheckpoint(eager=True))
+            dels = _instantiate(sol, op.delete_quads, op.with_graph,
+                                mint_bnodes=False) if op.delete_quads else None
+            ins = _instantiate(sol, op.insert_quads, op.with_graph,
+                               mint_bnodes=True) if op.insert_quads else None
+            if dels is not None:
+                remove_quads_df(store, dels)
+            if ins is not None:
+                insert_quads_df(store, ins)
         return
     if isinstance(op, A.LoadOp):
         try:

@@ -798,14 +798,7 @@ class Parser:
             if not isinstance(pattern, A.BGP):
                 raise SparqlSyntaxError("CONSTRUCT WHERE requires a plain BGP")
             template = list(pattern.triples)
-        # solution modifiers (LIMIT etc.) on construct
-        while self.at_kw("LIMIT", "OFFSET", "ORDER"):
-            if self.eat_kw("LIMIT"):
-                pattern = A.Slice(pattern, 0, self._nonneg_int("LIMIT"))
-            elif self.eat_kw("OFFSET"):
-                pattern = A.Slice(pattern, self._nonneg_int("OFFSET"), None)
-            else:
-                break
+        pattern, _ = self._solution_modifiers(pattern, [], star=True)
         return A.ConstructQuery(template=template, pattern=pattern, dataset=dataset)
 
     def _construct_template(self) -> list[A.TriplePattern]:
@@ -833,6 +826,7 @@ class Parser:
         pattern = None
         if self.eat_kw("WHERE") or self.at_op("{"):
             pattern = self.parse_group_graph_pattern()
+            pattern, _ = self._solution_modifiers(pattern, [], star=True)
         return A.DescribeQuery(terms=terms, pattern=pattern, dataset=dataset)
 
     # ------------------------------------------------------------------

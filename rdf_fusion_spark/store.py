@@ -713,6 +713,11 @@ class GraphStore:
         (lib/execution/src/sparql/optimizer.rs:18). Results are
         identical either way; only plan shape and speed differ.
 
+        The result owns the shared-subquery caches its translation
+        persisted: they live until `close()`, the end of a `with` block,
+        or until the result is dropped. A closed result still executes;
+        it only recomputes.
+
         reference lifecycle: lib/execution/src/sparql/eval.rs:24-133.
         """
         import dataclasses
@@ -732,7 +737,10 @@ class GraphStore:
         sources — repeated executions pay only execution. NOW() is fixed
         at prepare time (it is a query constant; re-prepare for a fresh
         timestamp). All result kinds re-execute lazily, including ASK
-        (its `value` property runs the probe per access).
+        (its `value` property runs the probe per access). Like `query`,
+        the result keeps its shared-subquery caches until `close()`, the
+        end of a `with` block, or until it is dropped, however many other
+        queries run meanwhile.
         """
         return self.query(sparql, dataset=dataset)
 

@@ -150,23 +150,27 @@ class SparqlHttpServer:
                     return self._evaluation_error(query, e)
                 accept = self.headers.get("Accept", "")
                 try:
-                    if isinstance(res, (SelectResult, AskResult)):
-                        key = _accepted(accept, _RESULT_TYPES) or "json"
-                        if isinstance(res, AskResult) and key in ("csv", "tsv"):
-                            key = "json"
-                        body, ctype = {
-                            "json": (lambda: (S.to_json(res),
-                                     "application/sparql-results+json")),
-                            "xml": (lambda: (S.to_xml(res),
-                                    "application/sparql-results+xml")),
-                            "csv": (lambda: (S.to_csv(res), "text/csv")),
-                            "tsv": (lambda: (S.to_tsv(res),
-                                    "text/tab-separated-values")),
-                        }[key]()
-                        return self._send(200, body.encode(),
-                                          ctype + "; charset=utf-8")
-                    assert isinstance(res, GraphResult)
-                    body, ctype = server.serialize_graph(res.df, accept)
+                    # the result's shared-subquery caches live only while
+                    # this request renders it
+                    with res:
+                        if isinstance(res, (SelectResult, AskResult)):
+                            key = _accepted(accept, _RESULT_TYPES) or "json"
+                            if isinstance(res, AskResult) and \
+                                    key in ("csv", "tsv"):
+                                key = "json"
+                            body, ctype = {
+                                "json": (lambda: (S.to_json(res),
+                                         "application/sparql-results+json")),
+                                "xml": (lambda: (S.to_xml(res),
+                                        "application/sparql-results+xml")),
+                                "csv": (lambda: (S.to_csv(res), "text/csv")),
+                                "tsv": (lambda: (S.to_tsv(res),
+                                        "text/tab-separated-values")),
+                            }[key]()
+                        else:
+                            assert isinstance(res, GraphResult)
+                            body, ctype = server.serialize_graph(res.df,
+                                                                 accept)
                     return self._send(200, body.encode(),
                                       ctype + "; charset=utf-8")
                 except BrokenPipeError:

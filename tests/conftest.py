@@ -110,11 +110,6 @@ def _heavy_module_cleanup(request):
     except Exception:
         pass
     try:
-        from rdf_fusion_spark.plans import translator as T
-        T._release_prior_persists(s)
-    except Exception:
-        pass
-    try:
         s.catalog.clearCache()
         s.sparkContext._jvm.System.gc()
     except Exception:

@@ -92,29 +92,3 @@ def test_subsumption_rewrite_fires(spark):  # noqa: F811
     assert [c.name for _, c in a.aggregates] == \
         [c.name for _, c in b.aggregates]
 
-
-def test_shared_persists_released_on_next_query(spark):
-    """Round-6: shared-subquery persists are QUERY-scoped — the next
-    evaluate_query on the same session must release the previous
-    query's caches (the round-5 process-global FIFO pinned up to 12
-    grouped relations across a whole bench session)."""
-    from rdf_fusion_spark.plans import translator as TR
-
-    store = get_graph(spark, SF_DIR)
-    res1 = store.query(QUERY)
-    res1.df.count()  # materialize → persist registered (if subsumption fired)
-    key = TR._session_key(store.spark)
-    # registry entries are (session, [DataFrame]) — the strong session
-    # ref is what makes id() a stable key (see _session_key)
-    first = list(TR._PERSIST_REGISTRY.get(key, (None, []))[1])
-    # a second query on the same session releases the first query's set
-    res2 = store.query(PROLOGUE +
-                       "SELECT ?n WHERE { ?nat n:n_name ?n }")
-    res2.df.count()
-    now = TR._PERSIST_REGISTRY.get(key, (None, []))[1]
-    for df in first:
-        assert df not in now
-    # and none of the first query's frames remain persisted
-    for df in first:
-        assert df.storageLevel.useMemory is False \
-            and df.storageLevel.useDisk is False

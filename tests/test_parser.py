@@ -99,6 +99,25 @@ def test_construct_ask_describe():
     assert isinstance(q, A.DescribeQuery)
 
 
+def test_construct_describe_solution_modifiers():
+    """CONSTRUCT and DESCRIBE take the same solution modifiers as SELECT
+    (SPARQL grammar [10]/[11]): ORDER BY, LIMIT and OFFSET fold into one
+    Slice over the ordered pattern."""
+    where = "WHERE { ?s <x:p> ?o }"
+    q = parse_query(f"CONSTRUCT {{ ?s <x:q> ?o }} {where} ORDER BY ?s LIMIT 3")
+    assert isinstance(q.pattern, A.Slice)
+    assert (q.pattern.start, q.pattern.length) == (0, 3)
+    assert isinstance(q.pattern.inner.inner, A.OrderBy)
+    q = parse_query(f"CONSTRUCT {{ ?s <x:q> ?o }} {where} LIMIT 3 OFFSET 2")
+    assert (q.pattern.start, q.pattern.length) == (2, 3)
+    assert not isinstance(q.pattern.inner, A.Slice)
+    select = parse_query(f"SELECT * {where} LIMIT 3 OFFSET 2")
+    assert q.pattern == select.pattern
+    q = parse_query(f"DESCRIBE ?s {where} LIMIT 3")
+    assert isinstance(q, A.DescribeQuery)
+    assert (q.pattern.start, q.pattern.length) == (0, 3)
+
+
 def test_subselect():
     q = parse_query("""
         SELECT ?s ?mx WHERE {

@@ -167,6 +167,39 @@ def test_construct_template_bnodes_fresh_per_row(spark):
         assert valued[bid] == expect
 
 
+def _chain_store(spark, n=6):
+    from rdf_fusion_spark import GraphStore, NamedNode, Literal
+    return GraphStore.from_python_quads(spark, [
+        (None, NamedNode(f"http://e.org/s{i}"), NamedNode("http://e.org/p"),
+         Literal(str(i))) for i in range(n)])
+
+
+def test_construct_order_by_limit(spark):
+    """ORDER BY + LIMIT pick the first 3 solutions in order, so the graph
+    holds exactly their triples."""
+    res = _chain_store(spark).query(
+        "CONSTRUCT { ?s <http://e.org/q> ?o } "
+        "WHERE { ?s <http://e.org/p> ?o } ORDER BY DESC(?s) LIMIT 3")
+    subjects = sorted(r["subject"]["v"] for r in res.df.collect())
+    assert subjects == [f"http://e.org/s{i}" for i in (3, 4, 5)]
+
+
+def test_construct_limit_offset(spark):
+    """LIMIT 3 OFFSET 2 keeps 3 solutions, not the at most 1 of a LIMIT
+    applied before the OFFSET."""
+    res = _chain_store(spark).query(
+        "CONSTRUCT { ?s <http://e.org/q> ?o } "
+        "WHERE { ?s <http://e.org/p> ?o } LIMIT 3 OFFSET 2")
+    assert len({r["subject"]["v"] for r in res.df.collect()}) == 3
+
+
+def test_describe_limit(spark):
+    res = _chain_store(spark).query(
+        "DESCRIBE ?s WHERE { ?s <http://e.org/p> ?o } ORDER BY ?s LIMIT 2")
+    subjects = sorted(r["subject"]["v"] for r in res.df.collect())
+    assert subjects == ["http://e.org/s0", "http://e.org/s1"]
+
+
 def test_from_named_only_empties_default_graph(spark):
     """SPARQL 1.1 sec 13.2: a dataset with only FROM NAMED has an EMPTY
     default graph — default-graph BGPs must return nothing (ADVICE r2)."""
